@@ -5,13 +5,20 @@ identical runs 2-3x (BASELINE.md), so single-arm before/after walls are
 not trustworthy. This harness alternates FULL pipeline runs between two
 checkouts of the repo — each run in a FRESH JVM (subprocess) so no
 session state leaks across arms — and prints one line per run. Pair the
-arms per cycle when reading: noise windows then hit both arms roughly
-equally, and the triple count printed per run doubles as an end-to-end
+arms per cycle when reading (the arm that runs first alternates from
+pair to pair): noise windows then hit both arms roughly equally, and the
+triple count printed per run doubles as an end-to-end
 output-identity check between the two code versions.
+
+Each arm's checkout root goes first on its subprocess ``PYTHONPATH``, so
+the Python workers import that arm's package (UDF-side changes are A/B'd
+too, and the script runs from any directory). Each run uses every core
+the process may run on. A run that exits non-zero prints a ``FAILED``
+line with the tail of its stderr.
 
 Usage:
   git archive <baseline-commit> | tar -x -C /tmp/baseline
-  python scripts/ab_pipeline.py /tmp/baseline /root/repo [n_pairs] [n_pages]
+  python scripts/ab_pipeline.py /tmp/baseline /path/to/repo [n_pairs] [n_pages]
 
 Round-6 second-session result (baseline b0fe45d vs final, 6 pairs, 2M
 pages): old best 34.0 / median 44.0 -> new best 21.0 / median 35.0,
@@ -20,6 +27,7 @@ triples == 7,472,901 in all 12 runs.
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 import tempfile
@@ -27,25 +35,44 @@ import textwrap
 
 RUN_ONE = textwrap.dedent(
     """
-    import sys, tempfile, time
+    import os, shutil, sys, tempfile, time
     root = sys.argv[1]
     sys.path.insert(0, root)
     from split_ner_spark.session import get_spark
     from split_ner_spark.pipeline import run_pipeline
-    spark = get_spark(cpus=32)
+    spark = get_spark(cpus=len(os.sched_getaffinity(0)))
     warm = tempfile.mkdtemp(prefix="ab_warm_")
     run_pipeline(spark, warm, n_pages=max(200, int(sys.argv[2]) // 10),
                  resume=False, evaluate=False, granularity="fast",
                  triple_partitions=64)
+    shutil.rmtree(warm)
     wd = tempfile.mkdtemp(prefix="ab_run_")
     t0 = time.time()
     s = run_pipeline(spark, wd, n_pages=int(sys.argv[2]), resume=False,
                      evaluate=False, granularity="fast", triple_partitions=64)
     print(f"RESULT {root} wall={time.time()-t0:.2f} triples={s['triples']}",
           flush=True)
+    shutil.rmtree(wd)
     spark.stop()
     """
 )
+
+
+def run_arm(script: str, root: str, n_pages: int) -> None:
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (os.path.abspath(root), env.get("PYTHONPATH")) if p
+    )
+    out = subprocess.run(
+        [sys.executable, script, root, str(n_pages)],
+        capture_output=True, text=True, env=env,
+    )
+    results = [ln for ln in out.stdout.splitlines() if ln.startswith("RESULT")]
+    for line in results:
+        print(line, flush=True)
+    if out.returncode != 0 or not results:
+        tail = "\n    ".join(out.stderr.strip().splitlines()[-15:])
+        print(f"FAILED {root} returncode={out.returncode}\n    {tail}", flush=True)
 
 
 def main() -> None:
@@ -55,15 +82,12 @@ def main() -> None:
     with tempfile.NamedTemporaryFile("w", suffix=".py", delete=False) as fh:
         fh.write(RUN_ONE)
         script = fh.name
-    for _ in range(n_pairs):
-        for root in (a, b):
-            out = subprocess.run(
-                [sys.executable, script, root, str(n_pages)],
-                capture_output=True, text=True,
-            )
-            for line in out.stdout.splitlines():
-                if line.startswith("RESULT"):
-                    print(line, flush=True)
+    try:
+        for i in range(n_pairs):
+            for root in ((a, b) if i % 2 == 0 else (b, a)):
+                run_arm(script, root, n_pages)
+    finally:
+        os.unlink(script)
 
 
 if __name__ == "__main__":

@@ -28,6 +28,8 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def _driver_union_find(rows: list, spark, schema) -> DataFrame:
     parent: dict = {}
@@ -47,7 +49,7 @@ def _driver_union_find(rows: list, spark, schema) -> DataFrame:
                 ru, rv = rv, ru
             parent[rv] = ru
     out = [(n, find(n)) for n in parent]
-    return spark.createDataFrame(out, schema)
+    return local_frame(spark, out, schema)
 
 
 def _edge_checksum(e: DataFrame) -> tuple[int, int]:
@@ -238,63 +240,45 @@ def self_surface_canon_map(
     num_hashes: int = 16,
     bands: int = 8,
 ) -> DataFrame | None:
-    """DISTINCT self-linked surfaces → (surface_norm, _canon2) component
-    map, localCheckpointed, or ``None`` when no near-duplicate pair exists
+    """DISTINCT self-linked surfaces → (surface_norm, _canon2) rows for the
+    MERGED surfaces only, or ``None`` when no near-duplicate pair exists
     (callers then skip the merge entirely). ``_canon2`` is
-    ``surface:<component representative>`` for EVERY input surface
-    (isolated surfaces map to themselves). Extracted from
-    :func:`canonicalize_self_linked` (round 6) so the pipeline can run it
-    over the already-materialized surface DIMENSION instead of re-deriving
-    distinct surfaces from the mention fact table."""
+    ``surface:<component representative>``; a surface with no row keeps
+    its own ``surface:<norm>`` id (callers coalesce on a null
+    ``_canon2``). :func:`link_mentions` runs this over the materialized
+    surface DIMENSION instead of re-deriving distinct surfaces from the
+    mention fact table.
+
+    The similarity pairs come from one broadcast-shaped LSH self-join; up
+    to ``driver_threshold`` pairs are merged by a driver union-find whose
+    result is returned as a local relation (one Spark action in all).
+    Larger graphs go through star contraction."""
     from .lsh import char_shingles_col, lsh_self_join  # local import: no cycle
 
-    # eager-materialize the tiny unknown-surface dimension ONCE: the CC
-    # work below runs several small jobs, and without a materialization
-    # point each would re-run the (possibly fact-table-sized) input plan.
-    self_surf = self_surf.cache()
     sh = self_surf.withColumn("shingles", char_shingles_col(F.col("surface_norm")))
     pairs = lsh_self_join(
         sh, "surface_norm", num_hashes=num_hashes, bands=bands,
         threshold=jaccard_threshold,
     )
-    # ONE driver round answers three questions (emptiness, driver-path
-    # eligibility, and — when small — the edge list itself); the old
-    # shape spent a count + an isEmpty + connected_components' own
-    # head-collect, three separate job rounds of pure fixed cost.
+    # ONE driver round answers emptiness, driver-path eligibility and —
+    # when small — returns the edge list itself
     driver_threshold = 100_000
     head = pairs.limit(driver_threshold + 1).collect()
     if not head:
-        # no near-duplicate unknown surfaces — nothing to merge
-        self_surf.unpersist()
-        return None
+        return None  # no near-duplicate unknown surfaces — nothing to merge
     if len(head) <= driver_threshold:
-        schema = self_surf.select(
-            F.col("surface_norm").alias("node"),
-            F.col("surface_norm").alias("component"),
-        ).schema
         cc = _driver_union_find(
-            [(r["a"], r["b"]) for r in head], self_surf.sparkSession, schema
+            [(r["a"], r["b"]) for r in head], self_surf.sparkSession,
+            "node string, component string",
         )
     else:
         cc = star_contraction_components(
             pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
         )
-    comp = (
-        self_surf.select(F.col("surface_norm").alias("node"))
-        .join(cc, "node", "left")
-        .select(
-            F.col("node").alias("surface_norm"),
-            F.concat(
-                F.lit("surface:"), F.coalesce("component", "node")
-            ).alias("_canon2"),
-        )
+    return cc.select(
+        F.col("node").alias("surface_norm"),
+        F.concat(F.lit("surface:"), F.col("component")).alias("_canon2"),
     )
-    # materialize the (small) surface→component map, then release the
-    # upstream cache — otherwise every pipeline/stream invocation leaks
-    # cached frames into executor storage
-    comp = comp.localCheckpoint()
-    self_surf.unpersist()
-    return comp
 
 
 def canonicalize_self_linked(

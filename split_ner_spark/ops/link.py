@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..reference_impl import PUNCT_CHARS
-from .lsh import _band_rows, char_shingles_col, jaccard_col
+from .lsh import char_shingles_col, lsh_similarity_join
 
 
 def norm_surface_col(col: F.Column) -> F.Column:
@@ -105,41 +105,31 @@ def link_mentions(
 
     if fuzzy:
         # Fuzzy path, shuffle-free except one groupBy: exact misses →
-        # band rows carrying their shingle arrays → broadcast band join
-        # against the dictionary's band rows → exact Jaccard verify
-        # inline (both shingle arrays are on the row) → one
-        # groupBy(surface) keeping the best match (max jaccard, then min
-        # alias_norm — min of struct(-jaccard, alias_norm)).
+        # lsh_similarity_join against the dictionary (broadcast band join,
+        # Jaccard verified inline) → one groupBy(surface) keeping the best
+        # match (max jaccard, then min alias_norm — min of
+        # struct(-jaccard, alias_norm)). The dictionary's canonical_id and
+        # type ride along the band rows (alias_norm is unique in ``dim``),
+        # so no join back to the dictionary is needed.
         missed = s1.filter(F.col("canonical_id").isNull()).select("surface_norm")
-        m_sh = missed.withColumn("shingles", char_shingles_col(F.col("surface_norm")))
-        d_sh = dim.select(
-            "alias_norm", char_shingles_col(F.col("alias_norm")).alias("_dsh")
+        scored = lsh_similarity_join(
+            missed.withColumn("shingles", char_shingles_col(F.col("surface_norm"))),
+            dim.withColumn("shingles", char_shingles_col(F.col("alias_norm"))),
+            "surface_norm", "alias_norm", num_hashes=num_hashes, bands=bands,
+            threshold=jaccard_threshold, keep_right=("canonical_id", "dict_type"),
         )
-        mb = _band_rows(m_sh, "surface_norm", "shingles", num_hashes, bands,
-                        keep=("shingles",))
-        db = _band_rows(d_sh, "alias_norm", "_dsh", num_hashes, bands,
-                        keep=("_dsh",))
-        scored = (
-            mb.join(F.broadcast(db), ["band_idx", "band_hash"])
-            .withColumn("jaccard", jaccard_col(F.col("shingles"), F.col("_dsh")))
-            .filter(F.col("jaccard") >= jaccard_threshold)
+        best = scored.groupBy("surface_norm").agg(
+            F.min(
+                F.struct(
+                    (-F.col("jaccard")).alias("_nj"),
+                    "alias_norm", "canonical_id", "dict_type",
+                )
+            ).alias("_b")
         )
-        best = (
-            scored.groupBy("surface_norm")
-            .agg(
-                F.min(
-                    F.struct(
-                        (-F.col("jaccard")).alias("_nj"),
-                        F.col("alias_norm").alias("alias_norm"),
-                    )
-                ).alias("_b")
-            )
-            .select("surface_norm", F.col("_b.alias_norm").alias("alias_norm"))
-        )
-        fuzzy_dim = best.join(F.broadcast(dim), "alias_norm").select(
+        fuzzy_dim = best.select(
             "surface_norm",
-            F.col("canonical_id").alias("_f_cid"),
-            F.col("dict_type").alias("_f_type"),
+            F.col("_b.canonical_id").alias("_f_cid"),
+            F.col("_b.dict_type").alias("_f_type"),
         )
         resolved = s1.join(F.broadcast(fuzzy_dim), "surface_norm", "left")
     else:
@@ -181,9 +171,10 @@ def link_mentions(
         from .canon import self_surface_canon_map  # local import: no cycle
 
         # dimension-level canonicalization: full_dim is unique per
-        # surface_norm and already cached, so the LSH + CC jobs and the
-        # comp-map application all run on |distinct surfaces| rows; the
-        # fact table is only touched by the single broadcast join below.
+        # surface_norm and already cached, so the LSH self-join (one
+        # action) runs on |distinct self surfaces| rows, and ``comp`` maps
+        # only the merged ones; the fact table is only touched by the
+        # single broadcast join below.
         comp = self_surface_canon_map(
             full_dim.filter(F.col("linked_via") == "self").select("surface_norm")
         )

@@ -9,7 +9,7 @@ From linked typed mentions, emit the (subj, pred, obj) relation:
 Skew: the corpus plants Zipf-skewed entities (the hottest subject is in
 ~10% of pages — corpus.py), so a naive ``repartition(subj)`` would put a
 tenth of the output through one task. The writer therefore detects heavy
-hitters from a small deterministic sample and spreads ONLY those across
+hitters with one exact per-key count and spreads ONLY those across
 ``n_salts`` salt buckets (salt = deterministic hash of the full triple):
 cold keys keep locality, hot keys parallelize. AQE handles join-side skew;
 this handles write/partition-side skew, which AQE does not (SURVEY §4).
@@ -142,32 +142,29 @@ def salted_by_subject(
     n_partitions: int = 64,
     n_salts: int = 16,
     hot_fraction: float = 0.01,
-    sample_fraction: float = 0.05,
     hot_subjects: list | None = None,
-    seed: int = 42,
     detect_on: DataFrame | None = None,
     detect_col: str = "subj",
 ) -> DataFrame:
     """Repartition triples by (subj, salt) where salt spreads heavy
     subjects across ``n_salts`` buckets; cold subjects keep one bucket.
 
-    Hot-set detection runs over a ``sample_fraction`` sample, not an
-    exact full-data count agg: a subject holding > ``hot_fraction`` of
-    all triples is (by definition) massively represented in any sample,
-    so a 5% sample finds it with near-certainty while costing 1/20th of
-    the shuffled bytes — this is the detection cost that used to be the
-    largest single item of the pipeline's fixed (non-data-proportional)
-    wall. The sampled per-subject counts are collected driver-side
-    (bounded: at most ~1/hot_fraction subjects can exceed the threshold,
-    capped harder below) and the salt decision becomes a broadcast-free
-    ``isin`` literal — no join, no cached frame survives the call.
+    Hot-set detection is ONE action: an exact ``groupBy(key).count()``
+    whose total rides an :class:`Observation`, with the top-``cap`` keys
+    by count collected in the same action. A key is hot when it holds
+    more than ``hot_fraction`` of the total, so at most 1/hot_fraction
+    keys qualify and ``cap`` bounds the collect. Map-side partial
+    aggregation already limits the shuffle to partitions × distinct keys,
+    so a sample would save little and cost extra jobs — and could miss a
+    hot key on a micro-batch. The hot set becomes a broadcast-free
+    ``isin`` literal: no join, no cached frame survives the call.
 
     ``hot_subjects``: pass an explicit list to skip detection entirely —
     a streaming caller reuses the prior epoch's hot set (hot subjects
     are stable across crawl epochs).
 
-    ``detect_on``/``detect_col`` (round 6): run hot-key detection against
-    a DIFFERENT (typically already-materialized) frame — the pipeline
+    ``detect_on``/``detect_col``: run hot-key detection against a
+    DIFFERENT (typically already-materialized) frame — the pipeline
     passes its cached ``linked`` mentions (col ``canonical_id``), whose
     per-key counts are a faithful proxy for per-subject triple counts
     (mentioned_in ∝ mentions, co-occurrence subjects are canonical ids).
@@ -182,48 +179,18 @@ def salted_by_subject(
     if hot_subjects is None:
         det_frame = triples if detect_on is None else detect_on
         det_col = "subj" if detect_on is None else detect_col
-        # ≤ 1/hot_fraction subjects can each hold > hot_fraction of the
-        # data; 4x headroom absorbs sample noise near the threshold
-        cap = 4 * int(1.0 / hot_fraction) + 1
-
-        def _detect(frac: float) -> tuple[int, list]:
-            src = (
-                det_frame.sample(fraction=frac, seed=seed)
-                if frac < 1.0
-                else det_frame
-            )
-            counts = (
-                src.groupBy(det_col)
-                .agg(F.count("*").alias("c"))
-                .cache()  # eagerly released below — never escapes this call
-            )
-            try:
-                total = counts.agg(F.sum("c")).collect()[0][0] or 0
-                hot_rows = (
-                    counts.filter(F.col("c") > hot_fraction * total)
-                    .orderBy(F.desc("c"))
-                    .limit(cap)
-                    .collect()
-                )
-            finally:
-                counts.unpersist()
-            return total, [r[det_col] for r in hot_rows]
-
-        total, hot_subjects = _detect(sample_fraction)
-        # Small-input guard (ADVICE r4): a hot subject at hot_fraction of
-        # the data is expected ~ total_rows*sample_fraction*hot_fraction
-        # times in the sample; below ~1/(hot_fraction*sample_fraction)
-        # rows that expectation drops under 1 and the sample can miss a
-        # genuinely hot key (or be empty), silently disabling the salting
-        # this function exists for on micro-batches / low-SF runs. The
-        # threshold compares the SAMPLED total against the full-data
-        # bound 1/(hot_fraction*sample_fraction) — deliberately ~20x more
-        # conservative than the sampled-domain equivalent (ADVICE r5):
-        # near the boundary the exact re-count costs one extra groupBy
-        # over a few tens of thousands of rows, which is cheap insurance
-        # against a missed hot key.
-        if sample_fraction < 1.0 and total < 1.0 / (hot_fraction * sample_fraction):
-            total, hot_subjects = _detect(1.0)
+        cap = int(1.0 / hot_fraction) + 1
+        obs = Observation()
+        top = (
+            det_frame.groupBy(det_col)
+            .agg(F.count("*").alias("_c"))
+            .observe(obs, F.sum("_c").alias("total"))
+            .orderBy(F.desc("_c"))
+            .limit(cap)
+            .collect()
+        )
+        total = obs.get["total"] or 0
+        hot_subjects = [r[det_col] for r in top if r["_c"] > hot_fraction * total]
     if hot_subjects:
         salted = triples.withColumn(
             "salt",

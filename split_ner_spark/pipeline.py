@@ -38,6 +38,7 @@ from .ops.link import link_mentions
 from .ops.metrics import triple_pr
 from .ops.segment import segment_pages
 from .ops.triples import make_triples, salted_by_subject
+from .session import local_frame
 
 
 class StageCommitter:
@@ -133,9 +134,12 @@ class StageCommitter:
 
 
 def alias_dim(spark: SparkSession, seed: int = corpus.SEED) -> DataFrame:
+    """The alias dictionary as a local relation: ``link_mentions`` reads
+    it in several branches, and a local relation costs no Python-worker
+    job per read."""
     rows = corpus.alias_rows(corpus.build_registry(seed))
-    return spark.createDataFrame(
-        rows, "alias string, canonical_id string, entity_type string"
+    return local_frame(
+        spark, rows, "alias string, canonical_id string, entity_type string"
     )
 
 
@@ -178,7 +182,7 @@ def run_pipeline(
             resume,
         )
         # cache the linked mentions: make_triples reads them four times
-        # (typed/mentioned/co-mention a+b) and the salting pass twice more —
+        # (typed/mentioned/co-mention a+b) and the salting pass once more —
         # without a materialization point each pass re-executes the link
         # join. In full mode the committed "linked" table plays this role.
         _link_cleanup: list = []
@@ -195,12 +199,12 @@ def run_pipeline(
             .select("url", "sent_id", "canonical_id", "entity_type")
             .cache()
         )
-        # round 6: hot-subject detection samples the already-cached
-        # ``linked`` frame (canonical_id counts ≈ per-subject triple
-        # counts — a partitioning heuristic, so output values are
-        # unchanged) instead of a cached triple set; make_triples then
-        # executes exactly ONCE, inside the write job, and the 7.5M-row
-        # triple cache materialization disappears from the wall.
+        # hot-subject detection counts the ``linked`` frame per
+        # canonical_id in one action, which also fills its cache
+        # (canonical_id counts ≈ per-subject triple counts — a
+        # partitioning heuristic, so output values are unchanged);
+        # make_triples then executes exactly ONCE, inside the write job,
+        # with no triple cache on the wall.
         tri_built = not (resume and sc.is_committed("triples"))
         cooccur_obs = Observation("cooccur_cap") if tri_built else None
         tri = make_triples(linked, observation=cooccur_obs)
@@ -244,9 +248,9 @@ def run_pipeline(
         cooccur_obs = Observation("cooccur_cap") if tri_built else None
         triples = sc.stage(
             "triples",
-            # detection on the committed linked table (round 6): sampling
-            # the triples frame itself would re-run make_triples for the
-            # sample pass
+            # detection on the committed linked table: counting the
+            # triples frame itself would re-run make_triples for the
+            # detection pass
             lambda: salted_by_subject(
                 make_triples(linked, observation=cooccur_obs),
                 triple_partitions,

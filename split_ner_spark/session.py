@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -82,3 +82,24 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list, schema) -> DataFrame:
+    """Driver-side ``rows`` (tuples in ``schema`` order; ``schema`` a DDL
+    string or StructType) as a ``LocalRelation``-backed DataFrame.
+
+    ``spark.createDataFrame(list, schema)`` plans a ``LogicalRDD`` over a
+    pickled Python RDD, so every consumer of the frame re-runs Python-worker
+    tasks; an Arrow table below ``spark.sql.execution.arrow.
+    localRelationThreshold`` becomes a ``LocalRelation`` that the optimizer
+    folds projections into and that scans without a Spark job."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    st = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(st.fields)
+    table = pa.Table.from_arrays(
+        [list(c) for c in cols], schema=to_arrow_schema(st)
+    )
+    return spark.createDataFrame(table, st)

@@ -4,7 +4,9 @@ round-5 composition canonicalize_self_linked(link_mentions(...)).
 The corpus slice is sized so the fuzzy/self paths are exercised: fuzzy
 surfaces (concatenated corp variants) miss the dictionary, and FN-noise
 lowercased mentions plus fake capitalized bigrams produce self-linked
-surfaces, several of which are near-duplicates of each other.
+surfaces. None of those pairs reaches the 0.7 canonicalization
+threshold, so two near-duplicate unknown surfaces are planted to make
+the merge fire.
 """
 
 from __future__ import annotations
@@ -24,6 +26,12 @@ def test_canonicalize_fold_matches_composition(spark):
     mentions = classify_mentions(
         assemble_untyped(detect_spans(segment_pages(pages)))
     ).drop("tokens")
+    planted = spark.createDataFrame(
+        [("planted://0", 0, 0, 3, s, 1.0, "ORG")
+         for s in ("Zorblax Quantum Industries", "Zorblax Quantum Industriez")],
+        mentions.schema,
+    )
+    mentions = mentions.unionByName(planted)
     alias = alias_dim(spark)
 
     old = canonicalize_self_linked(link_mentions(mentions, alias))
@@ -38,3 +46,9 @@ def test_canonicalize_fold_matches_composition(spark):
     via_idx = old.columns.index("linked_via")
     vias = {row[via_idx] for row in a}
     assert "self" in vias and "exact" in vias
+    cid, norm = old.columns.index("canonical_id"), old.columns.index("surface_norm")
+    merged = {
+        row[norm] for row in a
+        if row[via_idx] == "self" and row[cid] != "surface:" + row[norm]
+    }
+    assert merged, "no self surface was merged into another's component"

@@ -51,6 +51,32 @@ def test_lsh_join_matches_exact_jaccard(spark):
     assert len(rows) == 1 and rows[0]["jaccard"] == 1.0
 
 
+def test_band_hashes_pinned(spark):
+    """The one-SQL-string MinHash banding (k=16, b=8) reproduces the
+    stored band hashes of the Column-built form it replaced."""
+    from split_ner_spark.ops.lsh import _band_hashes_sql
+
+    df = spark.createDataFrame([("acme corporation",), ("ab",)], "s string")
+    got = {
+        r["s"]: r["b"]
+        for r in df.select(
+            "s", char_shingles_col(F.col("s")).alias("sh")
+        ).select("s", F.expr(_band_hashes_sql("sh", 16, 8)).alias("b")).collect()
+    }
+    assert got == {
+        "acme corporation": [
+            -2190412328545476046, 8862688615103858089, 7379875032200641033,
+            8859455907312546256, -9142037784732140103, -143434028550340231,
+            5542099428835883251, -8808693807823624904,
+        ],
+        "ab": [
+            -4894188127712670344, 7523765442041807591, 8496948679586738092,
+            -2479011599402845791, 3365064503724624980, 6420205446875316776,
+            -4243958048046599638, -2851975939422156872,
+        ],
+    }
+
+
 def test_connected_components(spark):
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("d", "e"), ("f", "f")],

@@ -46,7 +46,7 @@ def test_every_query_leaves_cache_empty(spark):
 
 def test_salted_by_subject_no_residual_cache(spark):
     """The round-3 leak site in isolation: heavy-hitter detection must not
-    leave its sampled-count frame cached after the call returns."""
+    leave its per-key count frame cached after the call returns."""
     from split_ner_spark.ops.triples import salted_by_subject
 
     spark.catalog.clearCache()
@@ -54,7 +54,7 @@ def test_salted_by_subject_no_residual_cache(spark):
         [(f"s{i % 3}", "p", f"o{i}") for i in range(300)],
         "subj string, pred string, obj string",
     )
-    out = salted_by_subject(tri, n_partitions=4, sample_fraction=0.5)
+    out = salted_by_subject(tri, n_partitions=4)
     assert out.count() == 300
     assert _cache_empty(spark)
 
@@ -71,7 +71,7 @@ def test_salted_by_subject_values_unchanged_and_hot_spread(spark):
         + [(f"cold{i}", "p", "o") for i in range(50)],
         "subj string, pred string, obj string",
     )
-    out = salted_by_subject(tri, n_partitions=8, n_salts=8, sample_fraction=1.0)
+    out = salted_by_subject(tri, n_partitions=8, n_salts=8)
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, tri.collect()))
     # the planted hot subject (89% of rows) must be detected and spread
     hot_parts = (

@@ -98,6 +98,68 @@ def test_salted_write_no_join(spark):
     assert "Join" not in p
 
 
+def test_alias_dim_is_local_relation(spark):
+    """The alias dictionary is a local relation: a LogicalRDD over a
+    pickled Python RDD would re-run Python-worker tasks in every branch
+    of link_mentions that reads it."""
+    from split_ner_spark.pipeline import alias_dim
+
+    p = alias_dim(spark)._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in p and "LogicalRDD" not in p, p
+
+
+def test_hot_subject_detection_one_action(spark):
+    """salted_by_subject's hot-subject detection issues exactly the jobs
+    of ONE aggregate action (the observed per-key count with its top rows
+    collected) — no sample pass, no separate total, no re-count."""
+    from pyspark.sql import functions as F
+
+    from split_ner_spark.ops.triples import salted_by_subject
+
+    sc = spark.sparkContext
+    tri = spark.range(3000).select(
+        F.concat(F.lit("s"), (F.col("id") % 7).cast("string")).alias("subj"),
+        F.lit("p").alias("pred"),
+        F.col("id").cast("string").alias("obj"),
+    )
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    detect = jobs_of("detect", lambda: salted_by_subject(tri, 4))
+    one = jobs_of(
+        "one_action",
+        lambda: tri.groupBy("subj").count().orderBy(F.desc("count"))
+        .limit(101).collect(),
+    )
+    assert detect == one >= 1, (detect, one)
+
+
+def test_lsh_similarity_join_shuffle_free(spark):
+    """The LSH join broadcasts the right side's band rows and dedupes
+    pairs at their first colliding band: no Exchange, no sort-merge. No
+    size(bands) > 0 filter is inferred from the band explode, so the band
+    hashes are computed only on rows that pass the caller's filter."""
+    from split_ner_spark.ops.lsh import char_shingles_col, lsh_similarity_join
+
+    left = spark.range(2).select(F.lit("acme corp").alias("l"), "id")
+    right = spark.createDataFrame([("acme corp",)], "r string")
+    p = plan_of(lsh_similarity_join(
+        left.filter(F.col("id") == 1)
+        .withColumn("shingles", char_shingles_col(F.col("l"))),
+        right.withColumn("shingles", char_shingles_col(F.col("r"))),
+        "l", "r",
+    ))
+    assert "BroadcastHashJoin" in p
+    assert "Exchange hashpartitioning" not in p and "SortMergeJoin" not in p
+    assert "size(transform" not in p, p
+
+
 def test_no_cartesian_in_lsh_candidates(spark):
     """MinHash-LSH candidate generation is an equi-join on band keys —
     never a cartesian or nested-loop join."""
