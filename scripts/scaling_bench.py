@@ -122,7 +122,6 @@ def run_one(cpus: int, n_pages: int, light: bool = False) -> None:
     for _ in range(1 if light else 2):
         wd = tempfile.mkdtemp(prefix=f"scaling_stages_{cpus}_", dir=tmp_root)
         try:
-            from split_ner_spark.ops.canon import canonicalize_self_linked
             from split_ner_spark.ops.link import link_mentions
             from split_ner_spark.ops.triples import make_triples, salted_by_subject
             from split_ner_spark.pipeline import StageCommitter, alias_dim
@@ -134,7 +133,7 @@ def run_one(cpus: int, n_pages: int, light: bool = False) -> None:
             )
             t_m = time.time()
             linked = (
-                canonicalize_self_linked(link_mentions(mentions, alias_dim(spark)))
+                link_mentions(mentions, alias_dim(spark), canonicalize_self=True)
                 .select("url", "sent_id", "canonical_id", "entity_type")
                 .cache()
             )

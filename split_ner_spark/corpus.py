@@ -392,6 +392,3 @@ def golden_triples(gold: DataFrame) -> DataFrame:
     )
     return typed.unionByName(mentioned).unionByName(co)
 
-
-def n_pages_for_sf(sf: float) -> int:
-    return max(50, int(200_000 * sf))

@@ -6,8 +6,8 @@ pairwise-compares every mention on the driver. The rebuild replaces it
 with the scalable formulation (SURVEY §2 C1 upgrade): LSH-blocked
 similarity edges → connected components → one canonical id per component.
 
-Three tiers, chosen by graph size:
-- ≤ ``driver_threshold`` edges: driver union-find (a tiny graph should
+Two tiers, chosen by graph size (:func:`_components`):
+- ≤ ``DRIVER_THRESHOLD`` edges: driver union-find (a tiny graph should
   not pay multiple distributed jobs per round);
 - above it: **large-star/small-star** (Kiveris et al., "Connected
   Components in MapReduce and Beyond", SoCC'14) — O(log² n) rounds
@@ -15,23 +15,22 @@ Three tiers, chosen by graph size:
   groupBy-aggregates, with ``localCheckpoint`` per round to cut lineage
   and an exact convergence check (edge multiset stable). This is the
   only shape that survives adversarial diameters at 10^12 nodes.
-- :func:`label_propagation_components` (min-label "hash-to-min") is kept
-  for star-like graphs (alias/near-dup graphs have diameter ≤ 3-4, where
-  it wins by a constant factor) — but it now RAISES on non-convergence
-  instead of silently returning wrong components.
 """
 
 from __future__ import annotations
-
-import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import local_frame
 
+# edges up to which components are found by a driver union-find
+DRIVER_THRESHOLD = 100_000
 
-def _driver_union_find(rows: list, spark, schema) -> DataFrame:
+
+def _driver_union_find(rows: list, e: DataFrame) -> DataFrame:
+    """Union-find over ``rows`` of (u, v) → (node, component) as a local
+    relation, typed like ``e``'s ``u`` column."""
     parent: dict = {}
 
     def find(x):
@@ -49,7 +48,8 @@ def _driver_union_find(rows: list, spark, schema) -> DataFrame:
                 ru, rv = rv, ru
             parent[rv] = ru
     out = [(n, find(n)) for n in parent]
-    return local_frame(spark, out, schema)
+    schema = e.select(F.col("u").alias("node"), F.col("u").alias("component")).schema
+    return local_frame(e.sparkSession, out, schema)
 
 
 def _edge_checksum(e: DataFrame) -> tuple[int, int]:
@@ -141,53 +141,19 @@ def star_contraction_components(
     )
 
 
-def label_propagation_components(
-    sym: DataFrame, max_iter: int = 25, strict: bool = True
-) -> DataFrame:
-    """Min-label propagation over a symmetric edge frame (u, v) →
-    (node, component). O(diameter) rounds — the constant-factor winner on
-    star-like alias/near-dup graphs (diameter ≤ 3-4), but NOT safe on
-    arbitrary graphs: with ``strict`` (default) it raises if labels have
-    not converged after ``max_iter`` rounds rather than returning wrong
-    components."""
-    labels = (
-        sym.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-        .localCheckpoint()
-    )
-    changed = 0
-    for _ in range(max_iter):
-        neigh_min = (
-            sym.join(labels, sym.v == labels.node)
-            .groupBy("u")
-            .agg(F.min("component").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neigh_min, labels.node == neigh_min.u, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nmin"), F.col("component"))
-                ).alias("component"),
-                (F.col("nmin") < F.col("component")).alias("_changed"),
-            )
-        )
-        new_labels = new_labels.localCheckpoint()
-        changed = new_labels.filter(F.col("_changed")).count()
-        labels = new_labels.drop("_changed")
-        if changed == 0:
-            break
-    if changed != 0:
-        msg = (
-            f"min-label propagation still changing after {max_iter} rounds "
-            "(graph diameter exceeds the iteration budget); use "
-            "star_contraction_components for high-diameter graphs"
-        )
-        if strict:
-            raise RuntimeError(msg)
-        warnings.warn(msg, stacklevel=2)
-    return labels
+def _components(
+    e: DataFrame, max_iter: int = 50, driver_threshold: int = DRIVER_THRESHOLD
+) -> DataFrame | None:
+    """Deduplicated, loop-free (u, v) edges → (node, component), or
+    ``None`` when there is no edge. ONE driver round answers emptiness,
+    driver-path eligibility and — when small — returns the edge list
+    itself; past ``driver_threshold`` edges star contraction takes over."""
+    head = e.limit(driver_threshold + 1).collect()
+    if not head:
+        return None
+    if len(head) <= driver_threshold:
+        return _driver_union_find([(r["u"], r["v"]) for r in head], e)
+    return star_contraction_components(e, max_iter=max_iter)
 
 
 def connected_components(
@@ -195,7 +161,7 @@ def connected_components(
     max_iter: int = 50,
     src: str = "src",
     dst: str = "dst",
-    driver_threshold: int = 100_000,
+    driver_threshold: int = DRIVER_THRESHOLD,
 ) -> DataFrame:
     """edges(src, dst) undirected → (node, component) where component is
     the min node id (by the column's ordering) in the component.
@@ -211,13 +177,8 @@ def connected_components(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    head = e.limit(driver_threshold + 1).collect()
-    if len(head) <= driver_threshold:
-        schema = e.select(
-            F.col("u").alias("node"), F.col("u").alias("component")
-        ).schema
-        return _driver_union_find([(r["u"], r["v"]) for r in head], e.sparkSession, schema)
-    return star_contraction_components(e, max_iter=max_iter)
+    cc = _components(e, max_iter, driver_threshold)
+    return _driver_union_find([], e) if cc is None else cc
 
 
 def canonical_components(
@@ -249,10 +210,10 @@ def self_surface_canon_map(
     surface DIMENSION instead of re-deriving distinct surfaces from the
     mention fact table.
 
-    The similarity pairs come from one broadcast-shaped LSH self-join; up
-    to ``driver_threshold`` pairs are merged by a driver union-find whose
-    result is returned as a local relation (one Spark action in all).
-    Larger graphs go through star contraction."""
+    The similarity pairs come from one broadcast-shaped LSH self-join
+    (already one row per pair, so no dedupe shuffle) and are merged by
+    :func:`_components`: up to ``DRIVER_THRESHOLD`` pairs by a driver
+    union-find returned as a local relation (one Spark action in all)."""
     from .lsh import char_shingles_col, lsh_self_join  # local import: no cycle
 
     sh = self_surf.withColumn("shingles", char_shingles_col(F.col("surface_norm")))
@@ -260,68 +221,10 @@ def self_surface_canon_map(
         sh, "surface_norm", num_hashes=num_hashes, bands=bands,
         threshold=jaccard_threshold,
     )
-    # ONE driver round answers emptiness, driver-path eligibility and —
-    # when small — returns the edge list itself
-    driver_threshold = 100_000
-    head = pairs.limit(driver_threshold + 1).collect()
-    if not head:
+    cc = _components(pairs.select(F.col("a").alias("u"), F.col("b").alias("v")))
+    if cc is None:
         return None  # no near-duplicate unknown surfaces — nothing to merge
-    if len(head) <= driver_threshold:
-        cc = _driver_union_find(
-            [(r["a"], r["b"]) for r in head], self_surf.sparkSession,
-            "node string, component string",
-        )
-    else:
-        cc = star_contraction_components(
-            pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        )
     return cc.select(
         F.col("node").alias("surface_norm"),
         F.concat(F.lit("surface:"), F.col("component")).alias("_canon2"),
     )
-
-
-def canonicalize_self_linked(
-    linked: DataFrame,
-    jaccard_threshold: float = 0.7,
-    num_hashes: int = 16,
-    bands: int = 8,
-) -> DataFrame:
-    """Merge variant UNKNOWN surfaces: mentions the dictionary could not
-    link (linked_via='self') whose normalized surfaces are near-duplicates
-    (char-3-gram Jaccard ≥ threshold under LSH blocking) collapse into one
-    component; canonical_id becomes ``surface:<component representative>``.
-
-    This is the C1-upgrade canonicalization of SURVEY §2 applied inside
-    the pipeline: dictionary-linked mentions are untouched; candidate new
-    entities are deduplicated before triple emission. Cost scales with
-    |distinct unknown surfaces|, not |mentions|.
-
-    NOTE (round 6): re-derives the distinct self surfaces by scanning the
-    mention-level input. When the linker's surface dimension is already
-    materialized, prefer ``link_mentions(..., canonicalize_self=True)``,
-    which runs :func:`self_surface_canon_map` at dimension level and is
-    pinned row-identical to this composition by
-    tests/test_link_canon_fold.py."""
-    comp = self_surface_canon_map(
-        linked.filter(F.col("linked_via") == "self")
-        .select("surface_norm")
-        .distinct(),
-        jaccard_threshold=jaccard_threshold,
-        num_hashes=num_hashes,
-        bands=bands,
-    )
-    if comp is None:
-        return linked
-    out = (
-        linked.join(comp, "surface_norm", "left")
-        .withColumn(
-            "canonical_id",
-            F.when(
-                (F.col("linked_via") == "self") & F.col("_canon2").isNotNull(),
-                F.col("_canon2"),
-            ).otherwise(F.col("canonical_id")),
-        )
-        .drop("_canon2")
-    )
-    return out

@@ -181,11 +181,6 @@ def minhash_signatures_from_arrays(
     )
 
 
-def minhash_signatures(documents: DataFrame, k: int = 3, n_hashes: int = N_MINHASH) -> DataFrame:
-    """MinHash signature: min over shingles of affine-mixed 32-bit hashes."""
-    return minhash_signatures_from_arrays(shingle_arrays(documents, k), n_hashes)
-
-
 def _minhash_sig_sql(doc_table: str, k: int, n_hashes: int) -> str:
     toks = f"regexp_extract_all(text, '{TOKEN_WS_RE}')"
     n = f"len({toks})"

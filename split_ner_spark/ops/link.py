@@ -58,13 +58,14 @@ def link_mentions(
     ``canonicalize_self=True`` (round 6) folds
     :func:`..canon.self_surface_canon_map` into the surface dimension
     BEFORE the fact join: near-duplicate self-linked surfaces collapse to
-    one ``surface:<representative>`` id. Row-identical to
-    ``canonicalize_self_linked(link_mentions(...))`` (pinned by
-    tests/test_link_canon_fold.py) but runs the LSH + connected-components
-    work on the already-materialized |distinct surfaces| dimension instead
-    of re-scanning the mention fact table twice (once for the distinct, a
-    second time for the comp-map application join) — at 2M pages this
-    removed two full fact-table passes from the pipeline's link phase.
+    one ``surface:<representative>`` id. Row-identical to applying the
+    same map to the linked mentions afterwards (the reference composition
+    in tests/test_link_canon_fold.py) but runs the LSH +
+    connected-components work on the already-materialized |distinct
+    surfaces| dimension instead of re-scanning the mention fact table
+    twice (once for the distinct, a second time for the comp-map
+    application join) — at 2M pages this removed two full fact-table
+    passes from the pipeline's link phase.
 
     Intermediate caches (distinct surfaces, dictionary-linked dim) are
     unpersisted as soon as the final surface→entity dimension is

@@ -24,17 +24,6 @@ EPS_ANALYSIS = 1e-7  # analysis.py:54-56
 EPS_EVALUATOR = 1e-9  # evaluator.py:171,181
 
 
-def match_counts(pred: DataFrame, gold: DataFrame, keys: list[str]) -> tuple[int, int, int]:
-    """(tp, fp, fn) by exact span-key match. One job per count; use
-    :func:`per_tag_counts` for the full report in a single pass."""
-    p = pred.select(*keys).distinct()
-    g = gold.select(*keys).distinct()
-    tp = p.join(g, keys, "left_semi").count()
-    fp = p.join(g, keys, "left_anti").count()
-    fn = g.join(p, keys, "left_anti").count()
-    return tp, fp, fn
-
-
 def per_tag_counts(
     pred: DataFrame, gold: DataFrame, keys: list[str], tag_col: str = "entity_type"
 ) -> DataFrame:
@@ -125,75 +114,3 @@ def triple_pr(emitted: DataFrame, golden: DataFrame) -> dict:
         "recall": r,
         "f1": 2 * p * r / (p + r) if (p + r) else 0.0,
     }
-
-
-def confusion_matrix(
-    pred: DataFrame, gold: DataFrame, keys: list[str], tag_col: str = "entity_type"
-) -> DataFrame:
-    """X1 — gold×pred counts on matched span keys (analysis.py:102-111);
-    pivot aggregate."""
-    p = pred.select(*keys, F.col(tag_col).alias("pred_tag"))
-    g = gold.select(*keys, F.col(tag_col).alias("gold_tag"))
-    return (
-        g.join(p, keys)
-        .groupBy("gold_tag")
-        .pivot("pred_tag")
-        .count()
-        .na.fill(0)
-    )
-
-
-def overlap_analysis(
-    pred: DataFrame, gold: DataFrame, keys: list[str] | None = None
-) -> DataFrame:
-    """X2 — interval join of gold/pred spans in the same sentence with the
-    reference's overlap predicate ``not (p.start > g.end or p.end <
-    g.start)`` (analysis.py:155-254), classified into boundary-error
-    categories."""
-    keys = keys or ["url", "sent_id"]
-    p = pred.select(
-        *keys,
-        F.col("start").alias("p_start"),
-        F.col("end").alias("p_end"),
-        F.col("entity_type").alias("p_tag"),
-    )
-    g = gold.select(
-        *keys,
-        F.col("start").alias("g_start"),
-        F.col("end").alias("g_end"),
-        F.col("entity_type").alias("g_tag"),
-    )
-    j = p.join(g, keys).filter(
-        ~((F.col("p_start") > F.col("g_end")) | (F.col("p_end") < F.col("g_start")))
-    )
-    kind = (
-        F.when((F.col("p_start") == F.col("g_start")) & (F.col("p_end") == F.col("g_end")) & (F.col("p_tag") == F.col("g_tag")), "exact")
-        .when((F.col("p_start") == F.col("g_start")) & (F.col("p_end") == F.col("g_end")), "type_mismatch")
-        .when((F.col("p_start") > F.col("g_start")) & (F.col("p_end") == F.col("g_end")), "missed_prefix")
-        .when((F.col("p_start") < F.col("g_start")) & (F.col("p_end") == F.col("g_end")), "extra_prefix")
-        .when((F.col("p_start") == F.col("g_start")) & (F.col("p_end") < F.col("g_end")), "missed_suffix")
-        .when((F.col("p_start") == F.col("g_start")) & (F.col("p_end") > F.col("g_end")), "extra_suffix")
-        .when((F.col("p_start") > F.col("g_start")) & (F.col("p_end") < F.col("g_end")), "inner")
-        .when((F.col("p_start") < F.col("g_start")) & (F.col("p_end") > F.col("g_end")), "outer")
-        .otherwise("partial_shift")
-    )
-    return j.withColumn("overlap_kind", kind)
-
-
-def oov_error_terms(errors: DataFrame, train_vocab: DataFrame, term_col: str = "surface") -> DataFrame:
-    """X3 — error surfaces absent from the train vocabulary: anti join
-    (analysis.py:308-349)."""
-    v = train_vocab.select(F.col(train_vocab.columns[0]).alias(term_col)).distinct()
-    return errors.join(v, term_col, "left_anti")
-
-
-def prediction_diff(run_a: DataFrame, run_b: DataFrame, key: str = "sent_text") -> DataFrame:
-    """X7 — align two prediction sets by sentence text, keep divergences
-    (general.py:608-647): full outer join + inequality filter."""
-    a = run_a.select(F.col(key), F.col("labels").alias("labels_a"))
-    b = run_b.select(F.col(key), F.col("labels").alias("labels_b"))
-    return a.join(b, key, "full_outer").filter(
-        F.col("labels_a").isNull()
-        | F.col("labels_b").isNull()
-        | (F.col("labels_a") != F.col("labels_b"))
-    )

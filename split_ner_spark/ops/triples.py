@@ -142,7 +142,6 @@ def salted_by_subject(
     n_partitions: int = 64,
     n_salts: int = 16,
     hot_fraction: float = 0.01,
-    hot_subjects: list | None = None,
     detect_on: DataFrame | None = None,
     detect_col: str = "subj",
 ) -> DataFrame:
@@ -159,10 +158,6 @@ def salted_by_subject(
     hot key on a micro-batch. The hot set becomes a broadcast-free
     ``isin`` literal: no join, no cached frame survives the call.
 
-    ``hot_subjects``: pass an explicit list to skip detection entirely —
-    a streaming caller reuses the prior epoch's hot set (hot subjects
-    are stable across crawl epochs).
-
     ``detect_on``/``detect_col``: run hot-key detection against a
     DIFFERENT (typically already-materialized) frame — the pipeline
     passes its cached ``linked`` mentions (col ``canonical_id``), whose
@@ -176,21 +171,20 @@ def salted_by_subject(
     Output VALUES are unchanged by any of this (salt is dropped);
     only the physical partitioning differs. Salt is a deterministic hash
     of the full triple, not a random()."""
-    if hot_subjects is None:
-        det_frame = triples if detect_on is None else detect_on
-        det_col = "subj" if detect_on is None else detect_col
-        cap = int(1.0 / hot_fraction) + 1
-        obs = Observation()
-        top = (
-            det_frame.groupBy(det_col)
-            .agg(F.count("*").alias("_c"))
-            .observe(obs, F.sum("_c").alias("total"))
-            .orderBy(F.desc("_c"))
-            .limit(cap)
-            .collect()
-        )
-        total = obs.get["total"] or 0
-        hot_subjects = [r[det_col] for r in top if r["_c"] > hot_fraction * total]
+    det_frame = triples if detect_on is None else detect_on
+    det_col = "subj" if detect_on is None else detect_col
+    cap = int(1.0 / hot_fraction) + 1
+    obs = Observation()
+    top = (
+        det_frame.groupBy(det_col)
+        .agg(F.count("*").alias("_c"))
+        .observe(obs, F.sum("_c").alias("total"))
+        .orderBy(F.desc("_c"))
+        .limit(cap)
+        .collect()
+    )
+    total = obs.get["total"] or 0
+    hot_subjects = [r[det_col] for r in top if r["_c"] > hot_fraction * total]
     if hot_subjects:
         salted = triples.withColumn(
             "salt",

@@ -28,7 +28,6 @@ import os
 import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
-from pyspark.sql import functions as F
 
 from . import corpus
 from .ops.assemble import assemble_untyped
@@ -48,6 +47,7 @@ class StageCommitter:
         self.base = base_dir
         os.makedirs(base_dir, exist_ok=True)
         self.lineage_path = os.path.join(base_dir, "_lineage.jsonl")
+        self.stages: list[str] = []  # stages run through stage(), in order
 
     def path(self, stage: str) -> str:
         return os.path.join(self.base, stage)
@@ -57,6 +57,10 @@ class StageCommitter:
 
     def is_committed(self, stage: str) -> bool:
         return os.path.exists(self._marker(stage))
+
+    def rows(self, stage: str) -> int:
+        with open(self._marker(stage)) as fh:
+            return json.load(fh)["rows"]
 
     @staticmethod
     def _footer_counts(table_dir: str) -> list[tuple[str, int]]:
@@ -128,6 +132,7 @@ class StageCommitter:
     def stage(self, stage: str, build, resume: bool = True) -> DataFrame:
         """Memoized stage: reuse the committed table or build+commit it."""
         spark = SparkSession.getActiveSession()
+        self.stages.append(stage)
         if resume and self.is_committed(stage):
             return self.read(spark, stage)
         return self.write(build(), stage)
@@ -164,6 +169,11 @@ def run_pipeline(
       pipeline lacks (/root/reference/README.md:130-148); resume still
       works at the two commits.
 
+    After the mentions prefix both share one link→triples path. ``full``
+    commits the linked mentions as the ``linked`` stage; ``fast`` caches
+    them only while the triples stage builds, so a committed ``fast``
+    rerun skips the link phase.
+
     Returns a summary dict (rows per stage, triple P/R when evaluate=True,
     wall seconds, triples/sec)."""
     sc = StageCommitter(workdir)
@@ -172,6 +182,19 @@ def run_pipeline(
     def build_pages_gold():
         return corpus.gen_pages_with_gold(spark, n_pages, seed)
 
+    # the link dimension's caches, plus fast mode's linked cache
+    cleanup: list = []
+
+    def link() -> DataFrame:
+        # ``mentions`` is the committed table of the prefix below;
+        # canonicalize_self=True runs the self-surface LSH/CC work on the
+        # surface dimension instead of two extra fact-table scans
+        return link_mentions(
+            mentions, alias_dim(spark, seed), cleanup=cleanup,
+            canonicalize_self=True,
+        )
+
+    # Only the mentions prefix and what ``linked`` is depend on granularity.
     pg = None
     if granularity == "fast":
         from .ops.fused import fused_mentions
@@ -181,45 +204,22 @@ def run_pipeline(
             lambda: fused_mentions(spark, n_pages, seed),
             resume,
         )
-        # cache the linked mentions: make_triples reads them four times
-        # (typed/mentioned/co-mention a+b) and the salting pass once more —
-        # without a materialization point each pass re-executes the link
-        # join. In full mode the committed "linked" table plays this role.
-        _link_cleanup: list = []
-        # canonicalize_self=True == canonicalize_self_linked(link_mentions)
-        # (pinned by tests/test_link_canon_fold.py) with the LSH/CC work on
-        # the surface dimension instead of two extra fact-table scans
-        linked = (
-            link_mentions(
-                mentions, alias_dim(spark, seed), cleanup=_link_cleanup,
-                canonicalize_self=True,
+
+        def linked() -> DataFrame:
+            # make_triples reads the linked mentions four times
+            # (typed/mentioned/co-mention a+b) and hot-subject detection
+            # once more, so they are cached — in full mode the committed
+            # "linked" table plays this role. Only the four columns
+            # make_triples needs: ~4x smaller than the full mention rows.
+            # Called only when the triples stage builds, so a committed
+            # rerun skips the link phase.
+            df = (
+                link()
+                .select("url", "sent_id", "canonical_id", "entity_type")
+                .cache()
             )
-            # make_triples only needs these four columns — a slim cache is
-            # ~4x smaller than the full mention rows
-            .select("url", "sent_id", "canonical_id", "entity_type")
-            .cache()
-        )
-        # hot-subject detection counts the ``linked`` frame per
-        # canonical_id in one action, which also fills its cache
-        # (canonical_id counts ≈ per-subject triple counts — a
-        # partitioning heuristic, so output values are unchanged);
-        # make_triples then executes exactly ONCE, inside the write job,
-        # with no triple cache on the wall.
-        tri_built = not (resume and sc.is_committed("triples"))
-        cooccur_obs = Observation("cooccur_cap") if tri_built else None
-        tri = make_triples(linked, observation=cooccur_obs)
-        triples = sc.stage(
-            "triples",
-            lambda: salted_by_subject(
-                tri, triple_partitions,
-                detect_on=linked, detect_col="canonical_id",
-            ),
-            resume,
-        )
-        linked.unpersist()
-        for _df in _link_cleanup:
-            _df.unpersist()
-        stage_names = ["mentions", "triples"]
+            cleanup.append(df)
+            return df
     else:
         pg = sc.stage("pages_gold", build_pages_gold, resume)
         pages = corpus.pages(pg)
@@ -231,36 +231,30 @@ def run_pipeline(
             lambda: classify_mentions(assemble_untyped(detected)).drop("tokens"),
             resume,
         )
-        _link_cleanup: list = []
-        linked = sc.stage(
-            "linked",
-            lambda: link_mentions(
-                mentions, alias_dim(spark, seed), cleanup=_link_cleanup,
-                canonicalize_self=True,
-            ),
-            resume,
+        linked_table = sc.stage("linked", link, resume)
+
+        def linked() -> DataFrame:
+            return linked_table
+
+    cooccur_obs = None  # set only when the triples stage builds
+
+    def build_triples() -> DataFrame:
+        nonlocal cooccur_obs
+        lk = linked()
+        cooccur_obs = Observation("cooccur_cap")
+        # hot-subject detection counts ``lk`` per canonical_id in one
+        # action (in fast mode that also fills its cache); canonical_id
+        # counts ≈ per-subject triple counts — a partitioning heuristic,
+        # so output values are unchanged. make_triples then executes
+        # exactly once, inside the write job.
+        return salted_by_subject(
+            make_triples(lk, observation=cooccur_obs), triple_partitions,
+            detect_on=lk, detect_col="canonical_id",
         )
-        # the "linked" stage is committed to parquet at this point, so the
-        # link dim cache is no longer needed by anything downstream
-        for _df in _link_cleanup:
-            _df.unpersist()
-        tri_built = not (resume and sc.is_committed("triples"))
-        cooccur_obs = Observation("cooccur_cap") if tri_built else None
-        triples = sc.stage(
-            "triples",
-            # detection on the committed linked table: counting the
-            # triples frame itself would re-run make_triples for the
-            # detection pass
-            lambda: salted_by_subject(
-                make_triples(linked, observation=cooccur_obs),
-                triple_partitions,
-                detect_on=linked, detect_col="canonical_id",
-            ),
-            resume,
-        )
-        stage_names = [
-            "pages_gold", "sentences", "detected", "mentions", "linked", "triples"
-        ]
+
+    triples = sc.stage("triples", build_triples, resume)
+    for df in cleanup:
+        df.unpersist()
 
     wall_s = time.time() - t_start
     # Co-occurrence cap observability (VERDICT r4 #3): how many sentences
@@ -279,16 +273,13 @@ def run_pipeline(
                 json.dumps({"stage": "triples", "metric": "cooccur_cap",
                             **cooccur_metrics}) + "\n"
             )
-    n_triples = json.load(open(os.path.join(workdir, "_COMMIT.triples.json")))["rows"]
+    rows = {s: sc.rows(s) for s in sc.stages}
     summary = {
         "n_pages": n_pages,
-        "rows": {
-            s: json.load(open(os.path.join(workdir, f"_COMMIT.{s}.json")))["rows"]
-            for s in stage_names
-        },
+        "rows": rows,
         "wall_s": round(wall_s, 3),
-        "triples": n_triples,
-        "triples_per_sec": round(n_triples / wall_s, 2) if wall_s > 0 else None,
+        "triples": rows["triples"],
+        "triples_per_sec": round(rows["triples"] / wall_s, 2) if wall_s > 0 else None,
         "cooccur_cap": cooccur_metrics,
     }
     if evaluate:

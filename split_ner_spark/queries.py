@@ -816,9 +816,10 @@ def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components over the MinHash-LSH near-dup graph: iterative
-    min-label propagation (the canonicalization operator, SURVEY C1), with
-    a recursive-CTE oracle in DuckDB."""
+    """Connected components over the MinHash-LSH near-dup graph: a driver
+    union-find, or large-star/small-star contraction past the driver
+    threshold (the canonicalization operator, SURVEY C1), with a
+    recursive-CTE oracle in DuckDB."""
     from .ops.canon import connected_components
 
     pairs = dedup.minhash_lsh_pairs(

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from split_ner_spark import corpus
 from split_ner_spark.ops.assemble import assemble_untyped
 from split_ner_spark.ops.classify import classify_mentions
@@ -44,3 +46,34 @@ def test_fast_pipeline_matches_full(spark, tmp_path):
     assert fast["triple_match"]["precision"] == full["triple_match"]["precision"]
     assert fast["triple_match"]["recall"] == full["triple_match"]["recall"]
     assert fast["triple_match"]["recall"] >= 0.95
+
+
+def test_fast_resume_skips_link_phase(spark, tmp_path, monkeypatch):
+    """A fully committed fast workdir resumes without running the link
+    phase; with the triples marker gone, the rerun rebuilds the same
+    triples."""
+    from split_ner_spark import pipeline
+
+    wd = str(tmp_path / "fast")
+    first = pipeline.run_pipeline(
+        spark, wd, n_pages=300, resume=False, evaluate=False, granularity="fast"
+    )
+
+    def boom(*_args, **_kwargs):
+        raise AssertionError("link phase ran on a committed fast workdir")
+
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "link_mentions", boom)
+        m.setattr(pipeline, "salted_by_subject", boom)
+        again = pipeline.run_pipeline(
+            spark, wd, n_pages=300, evaluate=False, granularity="fast"
+        )
+    assert again["rows"] == first["rows"]
+    assert again["triples"] == first["triples"]
+
+    os.remove(os.path.join(wd, "_COMMIT.triples.json"))
+    rebuilt = pipeline.run_pipeline(
+        spark, wd, n_pages=300, evaluate=False, granularity="fast"
+    )
+    assert rebuilt["rows"] == first["rows"]
+    assert rebuilt["triples"] == first["triples"]

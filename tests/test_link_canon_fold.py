@@ -11,14 +11,63 @@ the merge fire.
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
 from split_ner_spark import corpus
-from split_ner_spark.ops.canon import canonicalize_self_linked
+from split_ner_spark.ops.canon import self_surface_canon_map
 from split_ner_spark.ops.classify import classify_mentions
 from split_ner_spark.ops.detect import detect_spans
 from split_ner_spark.ops.link import link_mentions
 from split_ner_spark.ops.segment import segment_pages
 from split_ner_spark.ops.assemble import assemble_untyped
 from split_ner_spark.pipeline import alias_dim
+
+
+def canonicalize_self_linked(
+    linked: DataFrame,
+    jaccard_threshold: float = 0.7,
+    num_hashes: int = 16,
+    bands: int = 8,
+) -> DataFrame:
+    """Merge variant UNKNOWN surfaces: mentions the dictionary could not
+    link (linked_via='self') whose normalized surfaces are near-duplicates
+    (char-3-gram Jaccard ≥ threshold under LSH blocking) collapse into one
+    component; canonical_id becomes ``surface:<component representative>``.
+
+    This is the C1-upgrade canonicalization of SURVEY §2 applied inside
+    the pipeline: dictionary-linked mentions are untouched; candidate new
+    entities are deduplicated before triple emission. Cost scales with
+    |distinct unknown surfaces|, not |mentions|.
+
+    NOTE (round 6): re-derives the distinct self surfaces by scanning the
+    mention-level input. When the linker's surface dimension is already
+    materialized, prefer ``link_mentions(..., canonicalize_self=True)``,
+    which runs :func:`self_surface_canon_map` at dimension level and is
+    pinned row-identical to this composition by
+    tests/test_link_canon_fold.py."""
+    comp = self_surface_canon_map(
+        linked.filter(F.col("linked_via") == "self")
+        .select("surface_norm")
+        .distinct(),
+        jaccard_threshold=jaccard_threshold,
+        num_hashes=num_hashes,
+        bands=bands,
+    )
+    if comp is None:
+        return linked
+    out = (
+        linked.join(comp, "surface_norm", "left")
+        .withColumn(
+            "canonical_id",
+            F.when(
+                (F.col("linked_via") == "self") & F.col("_canon2").isNotNull(),
+                F.col("_canon2"),
+            ).otherwise(F.col("canonical_id")),
+        )
+        .drop("_canon2")
+    )
+    return out
 
 
 def test_canonicalize_fold_matches_composition(spark):

@@ -140,21 +140,3 @@ def test_star_contraction_long_path(spark):
     }
     assert len(cc) == n + 1
     assert set(cc.values()) == {"p000"}
-
-
-def test_label_propagation_raises_past_budget(spark):
-    import pytest
-
-    from split_ner_spark.ops.canon import label_propagation_components
-
-    n = 20
-    e = spark.createDataFrame(
-        [(i, i + 1) for i in range(n)], "u long, v long"
-    )
-    sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    # budget far below the path diameter → must raise, never return wrong labels
-    with pytest.raises(RuntimeError, match="propagation"):
-        label_propagation_components(sym, max_iter=3)
-    ok = label_propagation_components(sym, max_iter=n + 2)
-    got = {r["node"]: r["component"] for r in ok.collect()}
-    assert set(got.values()) == {0}

@@ -61,7 +61,7 @@ def test_salted_by_subject_no_residual_cache(spark):
 
 def test_salted_by_subject_values_unchanged_and_hot_spread(spark):
     """Salting changes partitioning only: the triple multiset is identical,
-    and an explicitly-passed hot subject spreads across >1 partition."""
+    and a detected hot subject spreads across >1 partition."""
     from pyspark.sql import functions as F
 
     from split_ner_spark.ops.triples import salted_by_subject
@@ -81,14 +81,3 @@ def test_salted_by_subject_values_unchanged_and_hot_spread(spark):
         .count()
     )
     assert hot_parts > 1, "hot subject not spread across salt buckets"
-    # explicit hot_subjects list skips detection and still spreads
-    out2 = salted_by_subject(
-        tri, n_partitions=8, n_salts=8, hot_subjects=["hot"]
-    )
-    hot_parts2 = (
-        out2.filter(F.col("subj") == "hot")
-        .select(F.spark_partition_id().alias("p"))
-        .distinct()
-        .count()
-    )
-    assert hot_parts2 > 1

@@ -93,7 +93,8 @@ def test_salted_write_no_join(spark):
     tri = spark.createDataFrame(
         [("s", "p", "o")] * 5, "subj string, pred string, obj string"
     )
-    p = plan_of(salted_by_subject(tri, 4, hot_subjects=["s"]))
+    # detection picks "s" (every row), so the isin literal is in the plan
+    p = plan_of(salted_by_subject(tri, 4))
     assert p.count("Exchange") == 1
     assert "Join" not in p
 
