@@ -1,7 +1,8 @@
 """Dev smoke: corpus → segment → detect → assemble → classify vs gold."""
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

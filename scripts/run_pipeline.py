@@ -2,7 +2,7 @@
 
 Launch (BASELINE.json requirement — ``spark-submit --py-files``):
 
-    cd /root/repo
+    cd <repo root>
     python scripts/make_pyfiles.py                      # builds dist/split_ner_spark.zip
     spark-submit --master 'local[32]' \\
         --py-files dist/split_ner_spark.zip \\

@@ -123,20 +123,3 @@ def assemble_untyped(detected: DataFrame) -> DataFrame:
         )
         .select("url", "sent_id", "tokens", "start", "end", _surface_col(), "detect_score")
     )
-
-
-def assemble_typed_bio(df: DataFrame, tags_col: str = "tags") -> DataFrame:
-    """(url, sent_id, tokens, <tags_col>) → typed mentions
-    (url, sent_id, start, end, entity_type, surface). FIXTURES.md F3 shape."""
-    return (
-        df.withColumn("span", F.explode(spans_bio_col(tags_col)))
-        .select(
-            "url",
-            "sent_id",
-            "tokens",
-            F.col("span.start").alias("start"),
-            F.col("span.end").alias("end"),
-            F.col("span.tag").alias("entity_type"),
-        )
-        .select("url", "sent_id", "start", "end", "entity_type", _surface_col())
-    )

@@ -181,20 +181,6 @@ def connected_components(
     return _driver_union_find([], e) if cc is None else cc
 
 
-def canonical_components(
-    nodes: DataFrame, edges: DataFrame, node_col: str = "node"
-) -> DataFrame:
-    """All nodes (including isolated ones) → (node, component); isolated
-    nodes are their own component."""
-    cc = connected_components(edges)
-    return (
-        nodes.select(F.col(node_col).alias("node"))
-        .distinct()
-        .join(cc, "node", "left")
-        .select("node", F.coalesce("component", "node").alias("component"))
-    )
-
-
 def self_surface_canon_map(
     self_surf: DataFrame,
     jaccard_threshold: float = 0.7,

@@ -10,7 +10,7 @@ Reference semantics:
   of each ratio, and macro divides by (n_tags + eps).
 
 All Catalyst: hash semi/anti joins + partial/final hash aggregation; no
-Python in the hot path. The same operators score both pipeline stages
+Python in the hot path. The same operator scores both pipeline stages
 (detect-only via untyped keys, classify via typed keys) — the reference
 does this with its --span_based relabel (analysis.py:387-397).
 """
@@ -21,77 +21,67 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 EPS_ANALYSIS = 1e-7  # analysis.py:54-56
-EPS_EVALUATOR = 1e-9  # evaluator.py:171,181
 
 
-def per_tag_counts(
+def f1_report(
     pred: DataFrame, gold: DataFrame, keys: list[str], tag_col: str = "entity_type"
 ) -> DataFrame:
-    """(tag, tp, fp, fn) in one shuffle: full-outer join on the span key
-    (tag included in the key — a type mismatch is FP+FN, as in the
-    reference's exact Span equality, evaluator.py:119-133)."""
+    """Exact span matching → per-tag + '__micro__' + '__macro__' rows of
+    (tag, tp, fp, fn, p, r, f1), reference epsilon math.
+
+    TP/FP/FN in one shuffle: full-outer join on the span key (tag included
+    in the key — a type mismatch is FP+FN, as in the reference's exact
+    Span equality, evaluator.py:119-133). Micro sums counts first
+    (analysis.py:50-56); macro averages per-tag F1 over (n_tags + eps)
+    (analysis.py:73)."""
     k = keys + [tag_col]
     p = pred.select(*k).distinct().withColumn("_p", F.lit(1))
     g = gold.select(*k).distinct().withColumn("_g", F.lit(1))
     j = p.join(g, k, "full_outer")
-    return (
-        j.groupBy(F.col(tag_col).alias("tag"))
-        .agg(
-            F.sum(F.when(F.col("_p").isNotNull() & F.col("_g").isNotNull(), 1).otherwise(0)).alias("tp"),
-            F.sum(F.when(F.col("_p").isNotNull() & F.col("_g").isNull(), 1).otherwise(0)).alias("fp"),
-            F.sum(F.when(F.col("_p").isNull() & F.col("_g").isNotNull(), 1).otherwise(0)).alias("fn"),
-        )
+    counts = j.groupBy(F.col(tag_col).alias("tag")).agg(
+        F.sum(F.when(F.col("_p").isNotNull() & F.col("_g").isNotNull(), 1).otherwise(0)).alias("tp"),
+        F.sum(F.when(F.col("_p").isNotNull() & F.col("_g").isNull(), 1).otherwise(0)).alias("fp"),
+        F.sum(F.when(F.col("_p").isNull() & F.col("_g").isNotNull(), 1).otherwise(0)).alias("fn"),
     )
-
-
-def _prf1_cols(eps: float):
+    eps = EPS_ANALYSIS
     tp, fp, fn = F.col("tp"), F.col("fp"), F.col("fn")
-    p = tp * 1.0 / (tp + fp + F.lit(eps))
-    r = tp * 1.0 / (tp + fn + F.lit(eps))
-    f1 = F.lit(2.0) * p * r / (p + r + F.lit(eps))
-    return p.alias("p"), r.alias("r"), f1.alias("f1")
-
-
-def f1_report(counts: DataFrame, eps: float = EPS_ANALYSIS) -> DataFrame:
-    """per-tag rows + 'micro' + 'macro' summary rows, reference math.
-
-    Output: (tag, cnt, tp, fp, fn, p, r, f1); micro sums counts first
-    (analysis.py:50-56), macro averages per-tag F1 over (n_tags + eps)
-    (analysis.py:73)."""
+    pr = tp * 1.0 / (tp + fp + F.lit(eps))
+    rc = tp * 1.0 / (tp + fn + F.lit(eps))
+    f1 = F.lit(2.0) * pr * rc / (pr + rc + F.lit(eps))
     per_tag = counts.select(
-        "tag",
-        (F.col("tp") + F.col("fn")).alias("cnt"),
-        "tp",
-        "fp",
-        "fn",
-        *_prf1_cols(eps),
+        "tag", "tp", "fp", "fn", pr.alias("p"), rc.alias("r"), f1.alias("f1")
     )
-    micro = (
-        counts.agg(
-            F.sum("tp").alias("tp"), F.sum("fp").alias("fp"), F.sum("fn").alias("fn")
-        )
-        .select(
-            F.lit("__micro__").alias("tag"),
-            (F.col("tp") + F.col("fn")).alias("cnt"),
-            "tp",
-            "fp",
-            "fn",
-            *_prf1_cols(eps),
-        )
+    micro = counts.agg(
+        F.sum("tp").alias("tp"), F.sum("fp").alias("fp"), F.sum("fn").alias("fn")
+    ).select(
+        F.lit("__micro__").alias("tag"), "tp", "fp", "fn",
+        pr.alias("p"), rc.alias("r"), f1.alias("f1"),
     )
     # reference macro ranges over tags present in GOLD (tp∪fn keys,
     # analysis.py:60-62); FP-only tags count in micro but not macro.
-    macro = per_tag.filter((F.col("tp") + F.col("fn")) > 0).agg(
-        (F.sum("f1") / (F.count("*") + F.lit(eps))).alias("f1")
-    ).select(
-        F.lit("__macro__").alias("tag"),
-        F.lit(None).cast("long").alias("cnt"),
-        F.lit(None).cast("long").alias("tp"),
-        F.lit(None).cast("long").alias("fp"),
-        F.lit(None).cast("long").alias("fn"),
-        F.lit(None).cast("double").alias("p"),
-        F.lit(None).cast("double").alias("r"),
-        "f1",
+    # Order-independent: fold the SORTED per-tag f1 list so the sum order
+    # is deterministic (a plain sum() folds in partition order).
+    macro = (
+        per_tag.filter((F.col("tp") + F.col("fn")) > 0)
+        .agg(
+            (
+                F.aggregate(
+                    F.array_sort(F.collect_list("f1")),
+                    F.lit(0.0),
+                    lambda acc, x: acc + x,
+                )
+                / (F.count("*") + F.lit(eps))
+            ).alias("f1")
+        )
+        .select(
+            F.lit("__macro__").alias("tag"),
+            F.lit(None).cast("long").alias("tp"),
+            F.lit(None).cast("long").alias("fp"),
+            F.lit(None).cast("long").alias("fn"),
+            F.lit(None).cast("double").alias("p"),
+            F.lit(None).cast("double").alias("r"),
+            "f1",
+        )
     )
     return per_tag.unionByName(micro).unionByName(macro)
 

@@ -1,23 +1,14 @@
 """Multimodal columns: image/audio/video as opaque ``binary`` + metadata.
 
-The Spark-side plumbing is real and tested — schema, partition-preserving
-``mapInPandas`` decode, Arrow batch shape, typed metadata struct, frame
-sampling that changes cardinality — while the *actual* codec work is
-stubbed: the container has no image/audio libraries, so ``decode_real``
-raises ``NotImplementedError`` unless PIL/soundfile are importable, and
-the default path is a deterministic fake decoder (payload bytes → stable
-pseudo-features) so tests and benches are hermetic.
-
-This mirrors the surrogate-scorer pattern used for the NER models
-(SURVEY §7.4): swapping the fake for a real codec changes only the UDF
-payload, never the plan.
+The Spark-side plumbing is real: schema, a typed metadata struct, and a
+partition-preserving Arrow-batched ``mapInPandas`` pass over the binary
+column. The payloads are synthetic (a pure md5 stream of the asset id) so
+the ``multimodal_features`` query and its DuckDB oracle are hermetic.
 
 Scale design: assets are stored as (asset_id, kind, payload, meta) with
 payload kept out of every projection that doesn't need it (column pruning
-is the whole ballgame when the binary column is 100× the metadata);
-decode/feature passes are ``mapInPandas`` so a real codec loads once per
-python worker; frame sampling emits one row per sampled frame (cardinality
-up), feature extraction one row per asset (cardinality flat).
+is the whole ballgame when the binary column is 100× the metadata); the
+digest pass is ``mapInPandas``, one row per asset (cardinality flat).
 """
 
 from __future__ import annotations
@@ -27,7 +18,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 ASSET_SCHEMA = T.StructType(
@@ -47,24 +37,6 @@ ASSET_SCHEMA = T.StructType(
                 ]
             ),
         ),
-    ]
-)
-
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("payload_sha256", T.StringType()),
-        T.StructField("n_bytes", T.IntegerType()),
-        T.StructField("feature", T.ArrayType(T.FloatType())),
-    ]
-)
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame_sha256", T.StringType()),
     ]
 )
 
@@ -106,54 +78,6 @@ def synth_assets(spark: SparkSession, n: int, partitions: int = 8) -> DataFrame:
     return spark.range(0, n, 1, partitions).mapInPandas(gen, schema=ASSET_SCHEMA)
 
 
-def decode_real(payload: bytes, kind: str):  # pragma: no cover - env-gated
-    """Real codec hook. Container ships no PIL/soundfile/av → stubbed."""
-    try:
-        if kind == "image":
-            import io
-
-            from PIL import Image  # noqa: F401
-
-            return Image.open(io.BytesIO(payload))
-    except ImportError:
-        pass
-    raise NotImplementedError(
-        f"real {kind} decode needs codec libs not present in this container; "
-        "use the deterministic fake path (extract_features/sample_frames)"
-    )
-
-
-def _fake_feature(payload: bytes, dim: int = 8) -> list[float]:
-    """Deterministic pseudo-embedding: md5-chunk floats in [0,1)."""
-    h = hashlib.md5(payload).digest()
-    return [
-        int.from_bytes(h[2 * j : 2 * j + 2], "big") / 65536.0 for j in range(dim)
-    ]
-
-
-def extract_features(assets: DataFrame, dim: int = 8) -> DataFrame:
-    """Per-asset feature vector via Arrow-batched mapInPandas (1 row/asset)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = list(pdf["payload"])
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "kind": pdf["kind"],
-                    "payload_sha256": [
-                        hashlib.sha256(bytes(p)).hexdigest() for p in payloads
-                    ],
-                    "n_bytes": [len(p) for p in payloads],
-                    "feature": [_fake_feature(bytes(p), dim) for p in payloads],
-                }
-            )
-
-    return assets.select("asset_id", "kind", "payload").mapInPandas(
-        run, schema=FEATURE_SCHEMA
-    )
-
-
 DIGEST_SCHEMA = T.StructType(
     [
         T.StructField("asset_id", T.LongType()),
@@ -165,10 +89,10 @@ DIGEST_SCHEMA = T.StructType(
 
 
 def payload_digests(assets: DataFrame) -> DataFrame:
-    """Per-asset content digest via the SAME Arrow-batched mapInPandas
-    boundary as :func:`extract_features` — but over the payload's lowercase
-    hex encoding, so the digest is reproducible by the DuckDB oracle
-    (DuckDB 1.0's sha256() takes VARCHAR only; hashing the hex string
+    """Per-asset content digest via an Arrow-batched mapInPandas
+    boundary, over the payload's lowercase hex encoding, so the digest is
+    reproducible by the DuckDB oracle (DuckDB 1.0's sha256() takes VARCHAR
+    only; hashing the hex string
     verifies byte-exact payload content and the binary Arrow round-trip
     just as strongly as hashing the raw bytes)."""
 
@@ -191,48 +115,4 @@ def payload_digests(assets: DataFrame) -> DataFrame:
 
     return assets.select("asset_id", "kind", "payload").mapInPandas(
         run, schema=DIGEST_SCHEMA
-    )
-
-
-def sample_frames(assets: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Frame sampling for video assets: 1 row per sampled frame.
-
-    The fake 'frame' is a deterministic slice-hash of the payload; a real
-    implementation would seek/decode at frame_idx * every_ms. Cardinality
-    expansion happens inside the UDF batch (no explode shuffle needed)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"asset_id": [], "frame_idx": [], "frame_sha256": []}
-            for aid, payload, dur in zip(
-                pdf["asset_id"], pdf["payload"], pdf["duration_ms"]
-            ):
-                p = bytes(payload)
-                n_frames = max(1, int(dur or 0) // every_ms)
-                for f_idx in range(n_frames):
-                    lo = (f_idx * 16) % max(1, len(p))
-                    out["asset_id"].append(aid)
-                    out["frame_idx"].append(f_idx)
-                    out["frame_sha256"].append(
-                        hashlib.sha256(p[lo : lo + 16] + bytes([f_idx % 256])).hexdigest()
-                    )
-            yield pd.DataFrame(out)
-
-    vids = assets.filter(F.col("kind") == "video").select(
-        "asset_id", "payload", F.col("meta.duration_ms").alias("duration_ms")
-    )
-    return vids.mapInPandas(run, schema=FRAME_SCHEMA)
-
-
-def asset_stats(assets: DataFrame) -> DataFrame:
-    """Metadata-only aggregate — must never read ``payload`` (column
-    pruning asserted in tests via the physical plan's ReadSchema)."""
-    return (
-        assets.groupBy("kind")
-        .agg(
-            F.count("*").alias("n_assets"),
-            F.avg("meta.width").alias("avg_width"),
-            F.avg("meta.duration_ms").alias("avg_duration_ms"),
-        )
-        .orderBy("kind")
     )

@@ -3,7 +3,7 @@
 Reference semantics (/root/reference/splitner/dataset.py:394-470; scheme
 knob splitner/additional_args.py:15-16), expressed over a WORD-level BIO
 tag array (the reference applies the same rules at subword level after
-expansion — ops/subword.expand_labels_to_pieces composes with this):
+label expansion):
 
 - ``bo``: every mention tag collapses to ``B-<type>`` (dataset.py:412-414);
 - ``bioe``: the LAST ``I-`` of each mention run becomes ``E-``

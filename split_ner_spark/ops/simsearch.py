@@ -82,96 +82,65 @@ RP_PROBES = 1
 # embeddings must raise ``dim``.
 
 
-def _dot_fold(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm_sq_fold(a: Column) -> Column:
-    return F.aggregate(
-        a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-    )
-
-
-def _dot(a: str | Column, b: str | Column, dim: int = EMB_DIM) -> Column:
-    # String column names (every production call site) build the WHOLE
-    # expression as one SQL string → ONE py4j round-trip instead of
-    # ~320 (round 6, second session: the per-Column py4j chatter was
-    # 0.9-2.1s of pure DRIVER time per query build at ANY scale —
-    # measured with cProfile, 20k socket round-trips for ann_lsh_topk).
-    # The parsed tree is structurally identical to the Column form
-    # (pinned by tests/test_simsearch_expr.py via Catalyst sameResult +
-    # value equality), so plans, codegen, and results are unchanged.
-    if isinstance(a, str) and isinstance(b, str):
-        chain = "0.0D" + "".join(
-            f" + CAST(get({a}, {i}) AS DOUBLE) * CAST(get({b}, {i}) AS DOUBLE)"
-            for i in range(dim)
-        )
-        fold = (
-            f"aggregate(zip_with({a}, {b}, (x, y) -> "
-            "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, (acc, x) -> acc + x)"
-        )
-        return F.expr(
-            f"CASE WHEN greatest(size({a}), size({b})) >= {dim} "
-            f"THEN {chain} ELSE {fold} END"
-        )
-    n = F.greatest(F.size(a), F.size(b))
-    # fast path: full-width vectors take an UNGUARDED unrolled chain
-    # (``get`` returns NULL out-of-range, so a shorter second side still
-    # null-propagates exactly like zip_with padding); vectors narrower
-    # than ``dim`` (tests use 4-dim fixtures) fall back to the fold, which
-    # is the bitwise-identical original. The two-branch form halves the
+def _dot(a: str, b: str, dim: int = EMB_DIM) -> Column:
+    # The WHOLE expression is built as one SQL string → ONE py4j
+    # round-trip instead of ~320 (round 6, second session: the per-Column
+    # py4j chatter was 0.9-2.1s of pure DRIVER time per query build at
+    # ANY scale — measured with cProfile, 20k socket round-trips for
+    # ann_lsh_topk). The parsed tree is structurally identical to the
+    # Column-combinator form it replaced (kept in
+    # tests/test_simsearch_expr.py as the reference, pinned via Catalyst
+    # sameResult + bitwise value equality), so plans, codegen, and results
+    # are unchanged.
+    #
+    # Full-width vectors take an UNGUARDED unrolled chain (``get`` returns
+    # NULL out-of-range, so a shorter second side still null-propagates
+    # exactly like zip_with padding); vectors narrower than ``dim`` (tests
+    # use 4-dim fixtures) fall back to the fold, which is the
+    # bitwise-identical original. The two-branch form halves the
     # expression-tree size vs per-term guards — measured ~1s less
-    # planning+codegen constant per query. NULL arrays: ``n`` is NULL →
-    # the WHEN is false → fold branch → NULL, as before.
-    acc: Column = F.lit(0.0)
-    for i in range(dim):
-        acc = acc + F.get(a, i).cast("double") * F.get(b, i).cast("double")
-    return F.when(n >= dim, acc).otherwise(_dot_fold(a, b))
+    # planning+codegen constant per query. NULL arrays: the size is NULL
+    # → the WHEN is false → fold branch → NULL.
+    chain = "0.0D" + "".join(
+        f" + CAST(get({a}, {i}) AS DOUBLE) * CAST(get({b}, {i}) AS DOUBLE)"
+        for i in range(dim)
+    )
+    fold = (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> "
+        "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, (acc, x) -> acc + x)"
+    )
+    return F.expr(
+        f"CASE WHEN greatest(size({a}), size({b})) >= {dim} "
+        f"THEN {chain} ELSE {fold} END"
+    )
 
 
-def _norm_sq(a: str | Column, dim: int = EMB_DIM) -> Column:
-    if isinstance(a, str):
-        # one-round-trip SQL build — see _dot
-        chain = "0.0D" + "".join(
-            f" + CAST(get({a}, {i}) AS DOUBLE) * CAST(get({a}, {i}) AS DOUBLE)"
-            for i in range(dim)
-        )
-        fold = (
-            f"aggregate({a}, 0.0D, (acc, x) -> "
-            "acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
-        )
-        return F.expr(
-            f"CASE WHEN size({a}) >= {dim} THEN {chain} ELSE {fold} END"
-        )
-    acc: Column = F.lit(0.0)
-    for i in range(dim):
-        x = F.get(a, i).cast("double")
-        acc = acc + x * x
-    return F.when(F.size(a) >= dim, acc).otherwise(_norm_sq_fold(a))
+def _norm_sq(a: str, dim: int = EMB_DIM) -> Column:
+    # one-round-trip SQL build — see _dot
+    chain = "0.0D" + "".join(
+        f" + CAST(get({a}, {i}) AS DOUBLE) * CAST(get({a}, {i}) AS DOUBLE)"
+        for i in range(dim)
+    )
+    fold = (
+        f"aggregate({a}, 0.0D, (acc, x) -> "
+        "acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
+    )
+    return F.expr(f"CASE WHEN size({a}) >= {dim} THEN {chain} ELSE {fold} END")
 
 
-def _norm(a: str | Column, dim: int = EMB_DIM) -> Column:
+def _norm(a: str, dim: int = EMB_DIM) -> Column:
     return F.sqrt(_norm_sq(a, dim))
 
 
-def cosine(a: str | Column, b: str | Column, dim: int = EMB_DIM) -> Column:
-    # zero-norm guard: a zero vector (failed encode, padding row) has no
-    # direction — define its similarity as 0.0 instead of letting ANSI
-    # mode throw on 0/0 and kill the whole scan (fuzz_oracle class; the
-    # SQL twin mirrors the same CASE, keeping rank order engine-equal)
-    denom = _norm(a, dim) * _norm(b, dim)
-    return F.when(denom > 0, _dot(a, b, dim) / denom).otherwise(F.lit(0.0))
-
-
 def _cosine_from_norms(
-    a: str | Column, b: str | Column, na: Column, nb: Column, dim: int = EMB_DIM
+    a: str, b: str, na: Column, nb: Column, dim: int = EMB_DIM
 ) -> Column:
-    """``cosine`` with the per-side norms precomputed per ROW (before a
-    pair join) instead of per pair — same expression, same values."""
+    """Cosine with the per-side norms precomputed per ROW (before a pair
+    join) instead of per pair. Zero-norm guard: a zero vector (failed
+    encode, padding row) has no direction — its similarity is defined as
+    0.0 instead of letting ANSI mode throw on 0/0 and kill the whole scan
+    (fuzz_oracle class; the SQL twin mirrors the same CASE, keeping rank
+    order engine-equal)."""
     denom = na * nb
     return F.when(denom > 0, _dot(a, b, dim) / denom).otherwise(F.lit(0.0))
 
@@ -353,42 +322,23 @@ def _rp_dot_expr(emb: str, j: int, dim: int = EMB_DIM) -> str:
     )
 
 
-def _rp_dot(emb: str | Column, j: int, dim: int = EMB_DIM) -> Column:
-    # Deliberately kept as the interpreted zip_with fold: this is per-ROW
-    # work (bands*bits = 32 folds per vector), and unrolling all of them
-    # exceeds janino's 64 KB method limit, which forces the WHOLE stage to
-    # the interpreted fallback (measured 5x slower than the fold). The
-    # per-row cost is paid once per vector and parallelizes with the
-    # round-6 scan fan-out; the per-PAIR scoring path uses the unrolled
-    # ``_dot`` instead (one expression per operator — compiles fine).
-    if isinstance(emb, str):
-        return F.expr(_rp_dot_expr(emb, j, dim))
-    w = F.array(*[F.lit(_rp_weight(j, i)) for i in range(dim)])
-    return F.aggregate(
-        F.zip_with(emb, w, lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _rp_band_bucket(
-    emb: str | Column, band: int, bits: int = RP_BITS, dim: int = EMB_DIM
+    emb: str, band: int, bits: int = RP_BITS, dim: int = EMB_DIM
 ) -> Column:
-    if isinstance(emb, str):
-        cases = ", ".join(
-            f"CASE WHEN {_rp_dot_expr(emb, band * bits + j, dim)} >= 0 "
-            "THEN '1' ELSE '0' END"
-            for j in range(bits)
-        )
-        return F.expr(f"concat({cases})")
-    return F.concat(
-        *[
-            F.when(_rp_dot(emb, band * bits + j, dim) >= 0, F.lit("1")).otherwise(
-                F.lit("0")
-            )
-            for j in range(bits)
-        ]
+    # Each projection is deliberately kept as the interpreted zip_with
+    # fold: this is per-ROW work (bands*bits = 32 folds per vector), and
+    # unrolling all of them exceeds janino's 64 KB method limit, which
+    # forces the WHOLE stage to the interpreted fallback (measured 5x
+    # slower than the fold). The per-row cost is paid once per vector and
+    # parallelizes with the round-6 scan fan-out; the per-PAIR scoring
+    # path uses the unrolled ``_dot`` instead (one expression per
+    # operator — compiles fine).
+    cases = ", ".join(
+        f"CASE WHEN {_rp_dot_expr(emb, band * bits + j, dim)} >= 0 "
+        "THEN '1' ELSE '0' END"
+        for j in range(bits)
     )
+    return F.expr(f"concat({cases})")
 
 
 def _rp_dot_sql(emb: str, j: int, dim: int = EMB_DIM) -> str:

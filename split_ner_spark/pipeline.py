@@ -5,11 +5,13 @@ renames by hand (/root/reference/README.md:130-148: copy test.tsv →
 infer_inp.tsv); checkpoints are kept per epoch (trainer.py:9-38). The
 rebuild replaces both with committed stage tables: every stage writes an
 atomic parquet directory (write to ``_tmp.<stage>`` then a single
-``os.rename``) plus a ``_COMMIT.json`` manifest; re-running the pipeline
-skips every stage whose commit marker exists — kill-and-rerun resumes from
-the last committed stage (BASELINE.md "Resumability"). Per-partition
-lineage (stage, partition file, rows, wall_ms) lands in
-``<workdir>/_lineage.jsonl`` — the target-only requirement of SURVEY §4.
+``os.rename``) plus a ``_COMMIT.<stage>.json`` manifest (rows, files and
+the table schema, so reopening a committed table runs no schema-inference
+job); re-running the pipeline skips every stage whose commit marker exists
+— kill-and-rerun resumes from the last committed stage (BASELINE.md
+"Resumability"). Per-partition lineage (stage, partition file, rows,
+wall_ms) lands in ``<workdir>/_lineage.jsonl`` — the target-only
+requirement of SURVEY §4.
 
 On a real deployment the committer is one `writeTo(...).append()` against
 Iceberg with snapshot ids in place of commit markers; the stage graph and
@@ -28,6 +30,7 @@ import os
 import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import types as T
 
 from . import corpus
 from .ops.assemble import assemble_untyped
@@ -58,49 +61,47 @@ class StageCommitter:
     def is_committed(self, stage: str) -> bool:
         return os.path.exists(self._marker(stage))
 
-    def rows(self, stage: str) -> int:
+    def _load_marker(self, stage: str) -> dict:
         with open(self._marker(stage)) as fh:
-            return json.load(fh)["rows"]
+            return json.load(fh)
+
+    def rows(self, stage: str) -> int:
+        return self._load_marker(stage)["rows"]
 
     @staticmethod
     def _footer_counts(table_dir: str) -> list[tuple[str, int]]:
         import pyarrow.parquet as pq
 
-        out = []
-        for root, _dirs, files in os.walk(table_dir):
-            for f in sorted(files):
-                if f.endswith(".parquet"):
-                    path = os.path.join(root, f)
-                    # record the table-relative path, not the basename:
-                    # partitioned writes put identically-named part files
-                    # in every partition directory — basenames collide
-                    out.append(
-                        (os.path.relpath(path, table_dir),
-                         pq.ParquetFile(path).metadata.num_rows)
-                    )
-        return out
+        return [
+            (f, pq.ParquetFile(os.path.join(table_dir, f)).metadata.num_rows)
+            for f in sorted(os.listdir(table_dir))
+            if f.endswith(".parquet")
+        ]
 
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
-        return spark.read.parquet(self.path(stage))
+        """The committed table, opened with the schema its marker records:
+        parquet schema inference costs one Spark job per open."""
+        schema = T.StructType.fromJson(self._load_marker(stage)["schema"])
+        return spark.read.schema(schema).parquet(self.path(stage))
 
-    def write(self, df: DataFrame, stage: str, partition_cols: list[str] | None = None) -> DataFrame:
+    def write(self, df: DataFrame, stage: str) -> DataFrame:
         """Write df as the stage table; atomic rename; record lineage.
         Returns the re-read (committed) DataFrame."""
         spark = df.sparkSession
         tmp = os.path.join(self.base, f"_tmp.{stage}")
         final = self.path(stage)
         t0 = time.time()
-        w = df.write.mode("overwrite")
-        if partition_cols:
-            w = w.partitionBy(*partition_cols)
-        w.parquet(tmp)
+        df.write.mode("overwrite").parquet(tmp)
         wall_ms = int((time.time() - t0) * 1000)
         if os.path.exists(final):
             import shutil
 
             shutil.rmtree(final)
         os.rename(tmp, final)
-        committed = spark.read.parquet(final)
+        # the written schema, so neither this re-read nor a resumed run's
+        # read infers it; the reader opens every column nullable, as
+        # inference does, and the marker records that schema
+        committed = spark.read.schema(df.schema).parquet(final)
         # per-partition lineage from parquet footers (driver-side metadata
         # read, zero Spark jobs — an extra count job per stage measurably
         # hurt small-stage wall time and contributes nothing at scale; a
@@ -124,7 +125,8 @@ class StageCommitter:
         with open(self._marker(stage), "w") as fh:
             json.dump(
                 {"stage": stage, "rows": rows, "wall_ms": wall_ms,
-                 "n_files": len(per_file), "committed_at": time.time()},
+                 "n_files": len(per_file), "committed_at": time.time(),
+                 "schema": committed.schema.jsonValue()},
                 fh,
             )
         return committed

@@ -34,7 +34,7 @@ from pyspark.sql.window import Window
 from .ops import dedup, simsearch, textstats
 from .ops.assemble import spans_bio_col
 from .ops.contexts import DETECT_QUERY_TOKENS
-from .ops.metrics import EPS_ANALYSIS
+from .ops.metrics import EPS_ANALYSIS, f1_report
 from .ops.textstats import STOPWORDS, TOKEN_WS_RE, ws_tokens
 from .ops.triples import MAX_COOCCUR_ENTITIES
 
@@ -416,54 +416,7 @@ def q_kg_eval_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1+E2: exact span matching → per-tag + micro + macro P/R/F1 with
     the reference's epsilon math (analysis.py:54-74)."""
     pred, gold = _kg_pred_gold(spark, sf_dir)
-    k = ["doc_id", "start", "end", "entity_type"]
-    p = pred.select(*k).distinct().withColumn("_p", F.lit(1))
-    g = gold.select(*k).distinct().withColumn("_g", F.lit(1))
-    j = p.join(g, k, "full_outer")
-    counts = j.groupBy(F.col("entity_type").alias("tag")).agg(
-        F.sum(F.when(F.col("_p").isNotNull() & F.col("_g").isNotNull(), 1).otherwise(0)).alias("tp"),
-        F.sum(F.when(F.col("_p").isNotNull() & F.col("_g").isNull(), 1).otherwise(0)).alias("fp"),
-        F.sum(F.when(F.col("_p").isNull() & F.col("_g").isNotNull(), 1).otherwise(0)).alias("fn"),
-    )
-    eps = EPS_ANALYSIS
-    tp, fp, fn = F.col("tp"), F.col("fp"), F.col("fn")
-    pr = tp * 1.0 / (tp + fp + F.lit(eps))
-    rc = tp * 1.0 / (tp + fn + F.lit(eps))
-    f1 = F.lit(2.0) * pr * rc / (pr + rc + F.lit(eps))
-    per_tag = counts.select(
-        "tag", "tp", "fp", "fn", pr.alias("p"), rc.alias("r"), f1.alias("f1")
-    )
-    micro = counts.agg(
-        F.sum("tp").alias("tp"), F.sum("fp").alias("fp"), F.sum("fn").alias("fn")
-    ).select(
-        F.lit("__micro__").alias("tag"), "tp", "fp", "fn",
-        pr.alias("p"), rc.alias("r"), f1.alias("f1"),
-    )
-    # order-independent macro: fold the SORTED per-tag f1 list so the sum
-    # order is deterministic (a plain sum() folds in partition order).
-    macro = (
-        per_tag.filter((F.col("tp") + F.col("fn")) > 0)
-        .agg(
-            (
-                F.aggregate(
-                    F.array_sort(F.collect_list("f1")),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                / (F.count("*") + F.lit(eps))
-            ).alias("f1")
-        )
-        .select(
-            F.lit("__macro__").alias("tag"),
-            F.lit(None).cast("long").alias("tp"),
-            F.lit(None).cast("long").alias("fp"),
-            F.lit(None).cast("long").alias("fn"),
-            F.lit(None).cast("double").alias("p"),
-            F.lit(None).cast("double").alias("r"),
-            "f1",
-        )
-    )
-    return per_tag.unionByName(micro).unionByName(macro)
+    return f1_report(pred, gold, ["doc_id", "start", "end"])
 
 
 def q_kg_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1337,8 +1290,8 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     checked: the synthetic payload is a pure md5 function of the asset id,
     so DuckDB reconstructs the identical bytes (as lowercase hex) and
     verifies the sha256 digest, byte length and Arrow binary round-trip
-    exactly. (Raw-blob sha256 stays in extract_features for the pipeline;
-    DuckDB 1.0's sha256 is VARCHAR-only, hence the hex-domain digest.)"""
+    exactly. (DuckDB 1.0's sha256 is VARCHAR-only, hence the hex-domain
+    digest.)"""
     from .ops import multimodal
 
     assets = multimodal.synth_assets(spark, 200)

@@ -10,8 +10,9 @@ or a keyed aggregation. This module provides the incremental-crawl shape:
   (late pages beyond the watermark are dropped, the standard late-data
   policy);
 - ``incremental_triples`` — foreachBatch driver: each micro-batch runs
-  the SAME batch pipeline stages and appends to the triples table, giving
-  exactly-once-per-batch semantics on top of the atomic stage committer.
+  the fused mention stage and the batch link+triples stages and writes
+  the triples table, giving exactly-once-per-batch semantics on top of
+  the atomic stage committer.
 
 For local smoke tests the memory sink + ``processAllAvailable()`` drives
 the whole stream synchronously (no timers).
@@ -25,10 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .ops.assemble import assemble_untyped
-from .ops.classify import classify_mentions
-from .ops.detect import detect_spans
-from .ops.segment import segment_pages
+from .ops.fused import mentions_from_pages
 
 PAGES_SCHEMA = T.StructType(
     [
@@ -51,16 +49,6 @@ def stream_pages(spark: SparkSession, path: str, max_files: int = 4) -> DataFram
     )
 
 
-def typed_mentions(pages: DataFrame) -> DataFrame:
-    """The batch operator chain, unchanged, applied to a streaming DF.
-
-    mapInPandas stages are stateless per row-batch → stream-safe."""
-    mentions = classify_mentions(
-        assemble_untyped(detect_spans(segment_pages(pages)))
-    ).drop("tokens")
-    return mentions
-
-
 def mention_count_stream(
     pages: DataFrame, watermark: str = "1 day", window: str = "7 days"
 ) -> DataFrame:
@@ -69,8 +57,6 @@ def mention_count_stream(
 
     Event time rides THROUGH the fused mention UDF (a stream-stream
     back-join to re-attach it is not allowed outside append mode)."""
-    from .ops.fused import mentions_from_pages
-
     mentions = mentions_from_pages(pages)
     return (
         mentions.withWatermark("warc_ts", watermark)
@@ -215,8 +201,9 @@ def incremental_triples(
     dedupe_watermark: str = "30 days",
     max_files: int = 4,
 ) -> "object":
-    """foreachBatch incremental pipeline: per micro-batch, run the batch
-    link+triples stages and write the batch's triples into an
+    """foreachBatch incremental pipeline: per micro-batch, run the fused
+    mention stage (``mentions_from_pages``) and the batch link+triples
+    stages and write the batch's triples into an
     EPOCH-KEYED partition directory with overwrite — foreachBatch is
     at-least-once, so a replayed epoch overwrites its own directory
     instead of appending a duplicate (exactly-once per epoch, the same
@@ -290,7 +277,7 @@ def incremental_triples(
         # store's numRowsTotal stays at the live-key count, which
         # multiplies under re-execution). The batch pipeline gets the
         # same property from its committed stage tables.
-        mentions = typed_mentions(batch_df).persist()
+        mentions = mentions_from_pages(batch_df).drop("warc_ts").persist()
         try:
             linked = link_mentions(mentions, alias_df, cleanup=cleanup)
             triples = make_triples(linked)

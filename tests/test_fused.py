@@ -50,8 +50,9 @@ def test_fast_pipeline_matches_full(spark, tmp_path):
 
 def test_fast_resume_skips_link_phase(spark, tmp_path, monkeypatch):
     """A fully committed fast workdir resumes without running the link
-    phase; with the triples marker gone, the rerun rebuilds the same
-    triples."""
+    phase, or any Spark job: the committed tables reopen with the schema
+    their markers record. With the triples marker gone, the rerun
+    rebuilds the same triples."""
     from split_ner_spark import pipeline
 
     wd = str(tmp_path / "fast")
@@ -65,9 +66,15 @@ def test_fast_resume_skips_link_phase(spark, tmp_path, monkeypatch):
     with monkeypatch.context() as m:
         m.setattr(pipeline, "link_mentions", boom)
         m.setattr(pipeline, "salted_by_subject", boom)
-        again = pipeline.run_pipeline(
-            spark, wd, n_pages=300, evaluate=False, granularity="fast"
-        )
+        sc = spark.sparkContext
+        sc.setJobGroup("fast_resume", "fast_resume")
+        try:
+            again = pipeline.run_pipeline(
+                spark, wd, n_pages=300, evaluate=False, granularity="fast"
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("fast_resume")) == 0
     assert again["rows"] == first["rows"]
     assert again["triples"] == first["triples"]
 

@@ -2,7 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from split_ner_spark.ops.canon import canonical_components, connected_components
+from split_ner_spark.ops.canon import connected_components
 from split_ner_spark.ops.lsh import (
     char_shingles_col,
     jaccard_col,
@@ -97,13 +97,6 @@ def test_connected_components_path_graph(spark):
     )
     cc = {r["node"]: r["component"] for r in connected_components(edges).collect()}
     assert set(cc.values()) == {"n00"}
-
-
-def test_canonical_components_isolated_nodes(spark):
-    nodes = spark.createDataFrame([("a",), ("z",)], "node string")
-    edges = spark.createDataFrame([("a", "b")], "src string, dst string")
-    got = {r["node"]: r["component"] for r in canonical_components(nodes, edges).collect()}
-    assert got == {"a": "a", "z": "z"}
 
 
 def test_jaccard_col(spark):

@@ -1,9 +1,7 @@
-"""Multimodal-column plumbing: schema, deterministic fake decode, frame
-sampling cardinality, and the env-gated real-decode stub."""
+"""Multimodal-column plumbing: the synthetic asset table is a pure
+function of the asset id, whatever the partitioning."""
 
 from __future__ import annotations
-
-import pytest
 
 from split_ner_spark.ops import multimodal
 
@@ -18,38 +16,3 @@ def test_synth_assets_deterministic_across_partitioning(spark):
     img = next(r for r in sorted(a, key=key) if r["kind"] == "image")
     assert img["meta"]["mime"] == "image/png"
     assert img["meta"]["width"] is not None and img["meta"]["duration_ms"] is None
-
-
-def test_extract_features_shape_and_determinism(spark):
-    assets = multimodal.synth_assets(spark, 40)
-    f1 = multimodal.extract_features(assets).collect()
-    f2 = multimodal.extract_features(multimodal.synth_assets(spark, 40)).collect()
-    assert sorted(map(str, f1)) == sorted(map(str, f2))
-    assert len(f1) == 40
-    r = f1[0]
-    assert len(r["feature"]) == 8
-    assert all(0.0 <= x < 1.0 for x in r["feature"])
-    assert len(r["payload_sha256"]) == 64
-
-
-def test_sample_frames_cardinality(spark):
-    assets = multimodal.synth_assets(spark, 30)
-    vids = assets.filter("kind = 'video'").select(
-        "asset_id", "meta.duration_ms"
-    ).collect()
-    expected = sum(max(1, (v["duration_ms"] or 0) // 1000) for v in vids)
-    frames = multimodal.sample_frames(assets)
-    assert frames.count() == expected
-    per_asset = frames.groupBy("asset_id").count().collect()
-    assert {r["asset_id"] for r in per_asset} == {v["asset_id"] for v in vids}
-
-
-def test_asset_stats_metadata_only(spark):
-    stats = multimodal.asset_stats(multimodal.synth_assets(spark, 30)).collect()
-    assert [r["kind"] for r in stats] == ["audio", "image", "video"]
-    assert all(r["n_assets"] == 10 for r in stats)
-
-
-def test_decode_real_is_stubbed():
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_real(b"xx", "video")

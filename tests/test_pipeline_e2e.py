@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from split_ner_spark import corpus
 from split_ner_spark import reference_impl as R
-from split_ner_spark.ops.metrics import per_tag_counts, f1_report
+from split_ner_spark.ops.metrics import f1_report
 from split_ner_spark.ops.segment import extracted_text
 from split_ner_spark.pipeline import run_pipeline
 
@@ -46,6 +46,16 @@ def test_resume_skips_committed_stages(spark, workdir, summary):
     s2 = run_pipeline(spark, workdir, n_pages=400)
     assert s2["rows"] == summary["rows"]
     assert s2["triple_match"] == summary["triple_match"]
+    # without evaluation a committed rerun runs no Spark job at all: the
+    # six committed tables reopen with the schemas their markers record
+    sc = spark.sparkContext
+    sc.setJobGroup("full_resume", "full_resume")
+    try:
+        s3 = run_pipeline(spark, workdir, n_pages=400, evaluate=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("full_resume")) == 0
+    assert s3["rows"] == summary["rows"]
 
 
 def test_kill_and_rerun_from_partial(spark, workdir, summary):
@@ -104,42 +114,32 @@ def test_generator_is_partitioning_invariant(spark):
 
 
 def test_stage_f1_report(spark, workdir, summary):
-    """Per-stage F1 (detect & classify) via the E1/E2 operators."""
+    """Per-stage F1 (detect & classify) via the E1/E2 operator."""
     pg = corpus.gen_pages_with_gold(spark, 400).cache()
     gold = corpus.gold_mentions(pg)
     mentions = spark.read.parquet(os.path.join(workdir, "mentions"))
     keys = ["url", "sent_id", "start", "end"]
     # detect-stage (untyped): tag column constant
-    det_counts = per_tag_counts(
+    det = f1_report(
         mentions.withColumn("entity_type", F.lit("ENTITY")),
         gold.withColumn("entity_type", F.lit("ENTITY")),
         keys,
     )
-    rep = {r["tag"]: r for r in f1_report(det_counts).collect()}
+    rep = {r["tag"]: r for r in det.collect()}
     assert rep["__micro__"]["f1"] > 0.95
     # classify-stage (typed key)
-    cls_counts = per_tag_counts(mentions, gold, keys)
-    rep2 = {r["tag"]: r for r in f1_report(cls_counts).collect()}
+    rep2 = {r["tag"]: r for r in f1_report(mentions, gold, keys).collect()}
     assert rep2["__micro__"]["f1"] > 0.93
     assert rep2["__macro__"]["f1"] > 0.9
     # epsilon math parity with the pure-Python spec (micro over ALL tags,
     # macro over gold tags only — analysis.py:60-62)
-    per_tag = {r["tag"]: (r["tp"], r["fp"], r["fn"]) for r in cls_counts.collect()}
+    per_tag = {
+        t: (r["tp"], r["fp"], r["fn"])
+        for t, r in rep2.items()
+        if t not in ("__micro__", "__macro__")
+    }
     (mp, mr, mf1), _ = R.micro_macro(per_tag)
     gold_tags = {t: v for t, v in per_tag.items() if v[0] + v[2] > 0}
     _, macro = R.micro_macro(gold_tags)
     assert abs(rep2["__micro__"]["f1"] - mf1) < 1e-12
     assert abs(rep2["__macro__"]["f1"] - macro) < 1e-12
-
-
-def test_sources_fallback_roundtrip(spark, tmp_path):
-    """Iceberg jar absent in this container → the source layer must fall
-    back to the atomic-parquet committer with identical semantics."""
-    from split_ner_spark import sources
-
-    assert sources.iceberg_available(spark) is False
-    df = spark.range(100).selectExpr("id", "id % 7 AS k")
-    committed = sources.write_table(df, "t1", str(tmp_path), ["k"])
-    assert committed.count() == 100
-    again = sources.read_table(spark, "t1", str(tmp_path))
-    assert sorted(r["id"] for r in again.collect()) == list(range(100))

@@ -1,12 +1,9 @@
-"""Round-2 operators: D1 sampling, Q1/Q2/Q3 contexts, A2 type2 mapping,
-multimodal digests, RP-LSH recall on planted clusters."""
+"""Round-2 operators: D1 sampling, Q1/Q2/Q3 contexts, multimodal digests,
+RP-LSH recall on planted clusters."""
 
 from __future__ import annotations
 
 import hashlib
-
-import pytest
-from pyspark.sql import functions as F
 
 
 # --- D1 sampling --------------------------------------------------------------
@@ -117,59 +114,6 @@ def test_per_type_binarized_labels(spark):
     by_type = {r["entity_type"]: r["binary_labels"] for r in out}
     assert by_type["corp"] == [1, 1, 0]
     assert by_type["person"] == [0, 0, 0]
-
-
-# --- A2 type2 consistency mapping ----------------------------------------------
-
-
-def _expanded_fixture(spark, piece_labels):
-    # tokens: ["Acme", "Corp"]; Acme -> 2 pieces, Corp -> 1 piece
-    return spark.createDataFrame(
-        [
-            (
-                "u",
-                0,
-                ["Acme", "Corp"],
-                piece_labels,
-                [True, False, True],
-                [0, 0, 1],
-            )
-        ],
-        "url string, sent_id int, tokens array<string>, "
-        "piece_labels array<string>, piece_heads array<boolean>, "
-        "piece_offsets array<int>",
-    )
-
-
-def test_type2_consistent_passes_through(spark):
-    from split_ner_spark.ops.subword import map_pieces_to_tokens
-
-    # head B + continuation I = consistent -> B-ENTITY; Corp head E -> I-ENTITY
-    df = _expanded_fixture(spark, ["B", "I", "E"])
-    t1 = map_pieces_to_tokens(df, "type1").collect()[0]["token_tags"]
-    t2 = map_pieces_to_tokens(df, "type2").collect()[0]["token_tags"]
-    assert t1 == ["B-ENTITY", "I-ENTITY"]
-    assert t2 == ["B-ENTITY", "I-ENTITY"]
-
-
-def test_type2_inconsistent_subword_becomes_O(spark):
-    from split_ner_spark.ops.subword import map_pieces_to_tokens
-
-    # Acme's continuation piece predicts O (not I/E): type1 keeps the head's
-    # B, type2 resets the token to O (main_qa.py:162 consistency rule)
-    df = _expanded_fixture(spark, ["B", "O", "E"])
-    t1 = map_pieces_to_tokens(df, "type1").collect()[0]["token_tags"]
-    t2 = map_pieces_to_tokens(df, "type2").collect()[0]["token_tags"]
-    assert t1 == ["B-ENTITY", "I-ENTITY"]
-    assert t2 == ["O", "I-ENTITY"]
-
-
-def test_type2_rejects_bad_mapping_name(spark):
-    from split_ner_spark.ops.subword import map_pieces_to_tokens
-
-    df = _expanded_fixture(spark, ["B", "I", "E"])
-    with pytest.raises(ValueError):
-        map_pieces_to_tokens(df, "type3")
 
 
 # --- multimodal digests ---------------------------------------------------------

@@ -1,6 +1,6 @@
 """The one-round-trip SQL-string builders (ops/simsearch vector math,
 ops/dedup simhash_values) must be CATALYST-IDENTICAL to the
-Column-combinator forms they replace.
+Column-combinator forms they replace (kept below as reference specs).
 
 `sameResult` on the analyzed plans is Catalyst's own semantic-equality
 check — if it holds, plans, codegen, and results cannot differ; value
@@ -10,6 +10,7 @@ asserted on top, bitwise via repr.
 
 from __future__ import annotations
 
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from split_ner_spark.ops import simsearch as S
@@ -44,12 +45,67 @@ def _same(df_a, df_b) -> bool:
     )
 
 
+# --- the Column-combinator forms of ops.simsearch, kept as the reference spec
+
+
+def _dot_fold(a: Column, b: Column) -> Column:
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _norm_sq_fold(a: Column) -> Column:
+    return F.aggregate(
+        a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
+    )
+
+
+def _dot_column_form(a: Column, b: Column, dim: int = S.EMB_DIM) -> Column:
+    n = F.greatest(F.size(a), F.size(b))
+    acc: Column = F.lit(0.0)
+    for i in range(dim):
+        acc = acc + F.get(a, i).cast("double") * F.get(b, i).cast("double")
+    return F.when(n >= dim, acc).otherwise(_dot_fold(a, b))
+
+
+def _norm_sq_column_form(a: Column, dim: int = S.EMB_DIM) -> Column:
+    acc: Column = F.lit(0.0)
+    for i in range(dim):
+        x = F.get(a, i).cast("double")
+        acc = acc + x * x
+    return F.when(F.size(a) >= dim, acc).otherwise(_norm_sq_fold(a))
+
+
+def _rp_dot(emb: Column, j: int, dim: int = S.EMB_DIM) -> Column:
+    w = F.array(*[F.lit(S._rp_weight(j, i)) for i in range(dim)])
+    return F.aggregate(
+        F.zip_with(emb, w, lambda x, y: x.cast("double") * y),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _rp_band_bucket_column_form(
+    emb: Column, band: int, bits: int = S.RP_BITS, dim: int = S.EMB_DIM
+) -> Column:
+    return F.concat(
+        *[
+            F.when(_rp_dot(emb, band * bits + j, dim) >= 0, F.lit("1")).otherwise(
+                F.lit("0")
+            )
+            for j in range(bits)
+        ]
+    )
+
+
 def test_dot_norm_expr_equals_column(spark):
     df = spark.createDataFrame(EDGE_ROWS, "a array<double>, b array<double>")
     d_expr = df.select(S._dot("a", "b").alias("v"), S._norm_sq("a").alias("n"))
     d_col = df.select(
-        S._dot(F.col("a"), F.col("b")).alias("v"),
-        S._norm_sq(F.col("a")).alias("n"),
+        _dot_column_form(F.col("a"), F.col("b")).alias("v"),
+        _norm_sq_column_form(F.col("a")).alias("n"),
     )
     assert _same(d_expr, d_col)
     assert [repr(r) for r in d_expr.collect()] == [
@@ -72,7 +128,7 @@ def test_rp_band_bucket_expr_equals_column(spark):
     )
     b_col = emb.select(
         *[
-            S._rp_band_bucket(F.col("embedding"), b).alias(f"b{b}")
+            _rp_band_bucket_column_form(F.col("embedding"), b).alias(f"b{b}")
             for b in range(8)
         ]
     )

@@ -8,6 +8,10 @@ from __future__ import annotations
 import pytest
 
 from split_ner_spark import corpus, streaming
+from split_ner_spark.ops.assemble import assemble_untyped
+from split_ner_spark.ops.classify import classify_mentions
+from split_ner_spark.ops.detect import detect_spans
+from split_ner_spark.ops.segment import segment_pages
 from split_ner_spark.pipeline import alias_dim
 
 
@@ -34,9 +38,12 @@ def test_mention_count_stream(spark, tmp_path):
     assert len(rows) > 0
     types = {r["entity_type"] for r in rows}
     assert "person" in types or "corporation" in types
-    # streaming result == batch result on the same data
+    # streaming result == batch result on the same data; the batch side
+    # is the staged operator chain, composed inline as the reference
     batch = (
-        streaming.typed_mentions(spark.read.parquet(src))
+        classify_mentions(
+            assemble_untyped(detect_spans(segment_pages(spark.read.parquet(src))))
+        )
         .groupBy("entity_type")
         .count()
         .collect()
