@@ -22,27 +22,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from bench import HEADLINE, sf_from_dir  # noqa: E402
 from split_ner_spark.queries import QUERIES, drain_cache  # noqa: E402
 from split_ner_spark.session import get_spark  # noqa: E402
 
-DEFAULT_QUERIES = [
-    "kg_span_assembly",
-    "kg_eval_f1",
-    "kg_cooccurrence",
-    "pricing_summary",
-    "top_suppliers_per_nation",
-    "events_sessionize",
-    "text_quality",
-    "text_lang_id",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash_pairs",
-    "dedup_lsh_jaccard",
-    "ann_cosine_topk",
-    "ann_lsh_topk",
-    "emb_near_dup",
-    "kg_linked_triples",
-]
 # queries that only need documents/embeddings (runnable on the big replica)
 DOC_EMB_QUERIES = [
     "kg_span_assembly",
@@ -74,7 +57,7 @@ def main() -> None:
     ap.add_argument("--queries", default=None,
                     help="comma list; 'docemb' = doc/emb-only set")
     ap.add_argument("--pipeline", action="store_true",
-                    help="also time one fast-mode pipeline run with stage split")
+                    help="also time two fast-mode pipeline runs (whole-run walls)")
     ap.add_argument("--pipeline-pages", type=int, default=None)
     args = ap.parse_args()
 
@@ -83,7 +66,7 @@ def main() -> None:
     elif args.queries:
         names = args.queries.split(",")
     else:
-        names = DEFAULT_QUERIES
+        names = HEADLINE
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark(app_name="bench-extra-r06", cpus=cpus,
@@ -127,7 +110,7 @@ def main() -> None:
         from split_ner_spark.pipeline import run_pipeline
 
         sf = args.pipeline_pages or max(
-            2_000, int(20_000_000 * _sf_of(args.sf_dir)))
+            2_000, int(20_000_000 * sf_from_dir(args.sf_dir)))
         tmp_root = "/dev/shm" if os.path.isdir("/dev/shm") else None
         warm = tempfile.mkdtemp(prefix="bx_warm_", dir=tmp_root)
         try:
@@ -154,14 +137,6 @@ def main() -> None:
 
     spark.stop()
     print(json.dumps(out))
-
-
-def _sf_of(sf_dir: str) -> float:
-    base = os.path.basename(sf_dir.rstrip("/"))
-    try:
-        return float(base.replace("sf", ""))
-    except ValueError:
-        return 0.1
 
 
 if __name__ == "__main__":

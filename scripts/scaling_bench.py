@@ -18,6 +18,9 @@ two measured runs). Reported:
   with N — this box cannot, which the judge should weigh when reading
   the job-level number.
 
+Per-phase attribution of one pipeline run is
+``perfbench/run.py --workload kg_batch --trace 1``, not this script.
+
 Usage:
   python scripts/scaling_bench.py [n_pages]          # orchestrate both runs
   python scripts/scaling_bench.py --run-one CPUS N   # single measured run
@@ -111,56 +114,6 @@ def run_one(cpus: int, n_pages: int, light: bool = False) -> None:
         )
         shuffle_walls.append(round(time.time() - t0, 2))
 
-    # per-stage breakdown (the non-UDF residual): mentions commit /
-    # link+canonicalize / make_triples distinct / salted write — measured
-    # stage-by-stage so the scaling loss can be itemized. Light legs run
-    # ONE rep too: stage walls previously came only from the full leg,
-    # i.e. a single noise window, which round 3 measured poisoning one
-    # width's stage numbers by 6x while the job wall (other windows) was
-    # fine.
-    stage_walls: dict[str, float] = {}
-    for _ in range(1 if light else 2):
-        wd = tempfile.mkdtemp(prefix=f"scaling_stages_{cpus}_", dir=tmp_root)
-        try:
-            from split_ner_spark.ops.link import link_mentions
-            from split_ner_spark.ops.triples import make_triples, salted_by_subject
-            from split_ner_spark.pipeline import StageCommitter, alias_dim
-
-            sc_ = StageCommitter(wd)
-            t0 = time.time()
-            mentions = sc_.stage(
-                "mentions", lambda: fused_mentions(spark, n_pages), True
-            )
-            t_m = time.time()
-            linked = (
-                link_mentions(mentions, alias_dim(spark), canonicalize_self=True)
-                .select("url", "sent_id", "canonical_id", "entity_type")
-                .cache()
-            )
-            linked.count()
-            t_l = time.time()
-            tri = make_triples(linked).cache()
-            tri.count()
-            t_t = time.time()
-            sc_.stage(
-                "triples",
-                lambda: salted_by_subject(tri, max(cpus * 2, 32)),
-                True,
-            )
-            t_w = time.time()
-            tri.unpersist()
-            linked.unpersist()
-            cur = {
-                "mentions_stage": round(t_m - t0, 2),
-                "link_canon": round(t_l - t_m, 2),
-                "make_triples": round(t_t - t_l, 2),
-                "salted_write": round(t_w - t_t, 2),
-            }
-            for k, v in cur.items():
-                stage_walls[k] = min(stage_walls.get(k, 1e9), v)
-        finally:
-            shutil.rmtree(wd, ignore_errors=True)
-
     job_walls = []
     summary = None
     for _ in range(n_reps):
@@ -186,7 +139,6 @@ def run_one(cpus: int, n_pages: int, light: bool = False) -> None:
                 "job_walls": job_walls,
                 "udf_wall_s": min(udf_walls) if udf_walls else None,
                 "udf_walls": udf_walls,
-                "stage_walls": stage_walls,
                 "jvm_shuffle_wall_s": min(shuffle_walls) if shuffle_walls else None,
                 "jvm_shuffle_walls": shuffle_walls,
                 "triples": summary["triples"],
@@ -211,9 +163,6 @@ def _merge_best(base: dict | None, new: dict) -> dict:
             x for x in (base.get("jvm_shuffle_wall_s"), new["jvm_shuffle_wall_s"])
             if x
         )
-    for k, v in new.get("stage_walls", {}).items():
-        out.setdefault("stage_walls", {})
-        out["stage_walls"][k] = min(out["stage_walls"].get(k, 1e9), v)
     out["triples_per_sec"] = round(out["triples"] / out["job_wall_s"], 2)
     out["pages_per_sec"] = round(out["n_pages"] / out["job_wall_s"], 2)
     return out
@@ -297,15 +246,6 @@ def main() -> None:
     ratio = N_BIG / N_SMALL
     job_eff = (results[N_SMALL]["job_wall_s"] / results[N_BIG]["job_wall_s"]) / ratio
     udf_eff = (results[N_SMALL]["udf_wall_s"] / results[N_BIG]["udf_wall_s"]) / ratio
-    stage_eff = {
-        k: round(
-            (results[N_SMALL]["stage_walls"][k] / results[N_BIG]["stage_walls"][k])
-            / ratio,
-            3,
-        )
-        for k in results[N_SMALL].get("stage_walls", {})
-        if results[N_BIG].get("stage_walls", {}).get(k)
-    }
     hw = hardware_ceiling()
     out = {
         "protocol": (
@@ -324,7 +264,6 @@ def main() -> None:
         ) if results[N_SMALL].get("job_wall_median_s")
         and results[N_BIG].get("job_wall_median_s") else None,
         "udf_stage_scaling_efficiency": round(udf_eff, 3),
-        "per_stage_scaling_efficiency": stage_eff,
         "jvm_shuffle_scaling_efficiency": round(
             (results[N_SMALL]["jvm_shuffle_wall_s"]
              / results[N_BIG]["jvm_shuffle_wall_s"]) / ratio,

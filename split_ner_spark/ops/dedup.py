@@ -117,17 +117,22 @@ def shingle_rows(sh_arrays: DataFrame) -> DataFrame:
     return sh_arrays.select("doc_id", F.explode("sh").alias("shingle_hash"))
 
 
-def _shingles_sql(doc_table: str, k: int) -> str:
+def _shingle_arrays_sql(doc_table: str, k: int) -> str:
+    """DuckDB twin of :func:`shingle_arrays`: (doc_id, sh list of distinct
+    md5'd k-token shingles), token-less docs dropped."""
     toks = f"regexp_extract_all(text, '{TOKEN_WS_RE}')"
     n = f"len({toks})"
-    hashes = (
+    sh = (
         f"list_distinct(list_transform(range(1, greatest({n} - {k - 1}, 1) + 1), "
         f"i -> md5(array_to_string({toks}[i:i+{k - 1}], ' '))))"
     )
-    # token-less docs contribute ZERO shingles (mirrors shingle_arrays)
+    return f"SELECT doc_id, {sh} AS sh FROM {doc_table} WHERE {n} > 0"
+
+
+def _shingles_sql(doc_table: str, k: int) -> str:
     return (
-        f"SELECT doc_id, unnest({hashes}) AS shingle_hash FROM {doc_table} "
-        f"WHERE {n} > 0"
+        f"SELECT doc_id, unnest(sh) AS shingle_hash "
+        f"FROM ({_shingle_arrays_sql(doc_table, k)})"
     )
 
 
@@ -182,27 +187,16 @@ def minhash_signatures_from_arrays(
 
 
 def _minhash_sig_sql(doc_table: str, k: int, n_hashes: int) -> str:
-    toks = f"regexp_extract_all(text, '{TOKEN_WS_RE}')"
-    n = f"len({toks})"
-    sh = (
-        f"list_distinct(list_transform(range(1, greatest({n} - {k - 1}, 1) + 1), "
-        f"i -> array_to_string({toks}[i:i+{k - 1}], ' ')))"
-    )
-    bases = (
-        f"list_transform({sh}, "
-        f"s -> CAST(concat('0x', substr(md5(s), 1, 8)) AS BIGINT))"
-    )
+    bases = "list_transform(sh, h -> CAST(concat('0x', substr(h, 1, 8)) AS BIGINT))"
     a = _MIX_A.format(i="i")
     b = _MIX_B.format(i="i")
     sig = (
         f"list_transform(range(0, {n_hashes}), "
         f"i -> list_min(list_transform(bases, b -> (b * {a} + {b}) % {MINHASH_P})))"
     )
-    # token-less docs get NO signature (mirrors shingle_arrays: they are
-    # outside the shingle universe, so they can never band-collide)
     return (
         f"SELECT doc_id, {sig} AS signature FROM "
-        f"(SELECT doc_id, {bases} AS bases FROM {doc_table} WHERE {n} > 0)"
+        f"(SELECT doc_id, {bases} AS bases FROM ({_shingle_arrays_sql(doc_table, k)}))"
     )
 
 
@@ -287,6 +281,42 @@ def minhash_lsh_pairs_sql(
     """
 
 
+def _jaccard_pairs(
+    inter: DataFrame, sizes: DataFrame, threshold: float
+) -> DataFrame:
+    """Verification tail of both Jaccard operators: intersection counts
+    (doc_a, doc_b, n_common) and set sizes (doc_id, n_sh) →
+    jaccard = |A∩B| / (|A|+|B|-|A∩B|), pairs at ≥ ``threshold``."""
+    return (
+        inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
+        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            (
+                F.col("n_common").cast("double")
+                / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double")
+            ).alias("jaccard"),
+        )
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
+def _jaccard_pairs_sql(ctes: str, threshold: float) -> str:
+    """DuckDB twin of :func:`_jaccard_pairs`: ``ctes`` defines ``sh``
+    (doc_id, shingle_hash) and ``inter`` (doc_a, doc_b, n_common)."""
+    jaccard = "CAST(n_common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE)"
+    return f"""
+    WITH {ctes},
+    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id)
+    SELECT doc_a, doc_b, {jaccard} AS jaccard
+    FROM inter
+    JOIN sizes sa ON sa.doc_id = doc_a
+    JOIN sizes sb ON sb.doc_id = doc_b
+    WHERE {jaccard} >= {threshold}
+    """
+
+
 def ngram_jaccard_pairs(
     documents: DataFrame, k: int = 3, threshold: float = 0.5
 ) -> DataFrame:
@@ -309,43 +339,21 @@ def ngram_jaccard_pairs(
         )
         .agg(F.count("*").alias("n_common"))
     )
-    return (
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("n_common").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double")
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _jaccard_pairs(inter, sizes, threshold)
 
 
 def ngram_jaccard_pairs_sql(
     doc_table: str = "documents", k: int = 3, threshold: float = 0.5
 ) -> str:
     sh = _shingles_sql(doc_table, k)
-    return f"""
-    WITH sh AS ({sh}),
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+    return _jaccard_pairs_sql(f"""
+    sh AS ({sh}),
     inter AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
       FROM sh a JOIN sh b USING (shingle_hash)
       WHERE a.doc_id < b.doc_id
       GROUP BY 1, 2
-    )
-    SELECT doc_a, doc_b,
-           CAST(n_common AS DOUBLE)
-                 / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) AS jaccard
-    FROM inter
-    JOIN sizes sa ON sa.doc_id = doc_a
-    JOIN sizes sb ON sb.doc_id = doc_b
-    WHERE CAST(n_common AS DOUBLE)
-                / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= {threshold}
-    """
+    )""", threshold)
 
 
 def lsh_verified_jaccard(
@@ -391,25 +399,7 @@ def lsh_verified_jaccard(
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("n_common"))
     )
-    return (
-        inter.join(
-            sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a"),
-            "doc_a",
-        )
-        .join(
-            sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b"),
-            "doc_b",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("n_common").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double")
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _jaccard_pairs(inter, sizes, threshold)
 
 
 def lsh_verified_jaccard_sql(
@@ -421,75 +411,26 @@ def lsh_verified_jaccard_sql(
 ) -> str:
     cand = minhash_lsh_pairs_sql(doc_table, k, n_hashes, bands)
     sh = _shingles_sql(doc_table, k)
-    return f"""
-    WITH cand AS ({cand}),
+    return _jaccard_pairs_sql(f"""
+    cand AS ({cand}),
     sh AS ({sh}),
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
     inter AS (
       SELECT cand.doc_a, cand.doc_b, count(*) AS n_common
       FROM cand
       JOIN sh a ON a.doc_id = cand.doc_a
       JOIN sh b ON b.doc_id = cand.doc_b AND b.shingle_hash = a.shingle_hash
       GROUP BY cand.doc_a, cand.doc_b
-    )
-    SELECT doc_a, doc_b,
-           CAST(n_common AS DOUBLE)
-             / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) AS jaccard
-    FROM inter
-    JOIN sizes sa ON sa.doc_id = doc_a
-    JOIN sizes sb ON sb.doc_id = doc_b
-    WHERE CAST(n_common AS DOUBLE)
-             / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= {threshold}
-    """
+    )""", threshold)
 
 
 def simhash(documents: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
-    """SimHash over whitespace tokens (term-frequency weighted).
-
-    Bit j of token t = high bit of hex digit j of md5(t); simhash bit j is
-    the sign of Σ_tokens (±1). Computed by explode → hash-aggregate: the
-    shuffle carries (doc_id, 16 small ints) and combines map-side.
-    """
-    tok = F.explode(ws_tokens()).alias("token")
-    exploded = documents.select("doc_id", tok).withColumn("h", F.md5("token"))
-    aggs = [
-        F.sum(
-            F.when(F.substring("h", j + 1, 1).isin(*_HI), 1).otherwise(-1)
-        ).alias(f"s{j}")
-        for j in range(bits)
-    ]
-    bit_exprs = [
-        F.when(F.col(f"s{j}") > 0, F.lit("1")).otherwise(F.lit("0"))
-        for j in range(bits)
-    ]
-    return (
-        exploded.groupBy("doc_id")
-        .agg(*aggs)
-        .select("doc_id", F.concat(*bit_exprs).alias("simhash_bits"))
+    """SimHash over whitespace tokens (term-frequency weighted), as a
+    ``bits``-character '0'/'1' string: :func:`simhash_values` formatted
+    bit 0 first (its most significant bit)."""
+    return simhash_values(documents, bits).select(
+        "doc_id",
+        F.expr(f"lpad(bin(simhash_v), {bits}, '0')").alias("simhash_bits"),
     )
-
-
-def _simhash_sql(doc_table: str, bits: int) -> str:
-    hi = ", ".join("'" + c + "'" for c in _HI)
-    sums = ", ".join(
-        f"sum(CASE WHEN substr(h, {j + 1}, 1) IN ({hi}) THEN 1 ELSE -1 END) AS s{j}"
-        for j in range(bits)
-    )
-    bitcat = " || ".join(
-        f"CASE WHEN s{j} > 0 THEN '1' ELSE '0' END" for j in range(bits)
-    )
-    return f"""
-    SELECT doc_id, {bitcat} AS simhash_bits FROM (
-      SELECT doc_id, {sums}
-      FROM (SELECT doc_id, md5(unnest(regexp_extract_all(text, '{TOKEN_WS_RE}'))) AS h
-            FROM {doc_table})
-      GROUP BY doc_id
-    )
-    """
-
-
-def simhash_sql(doc_table: str = "documents", bits: int = SIMHASH_BITS) -> str:
-    return _simhash_sql(doc_table, bits)
 
 
 SIMHASH_PAIR_BITS = 32

@@ -38,16 +38,6 @@ DETECTED_SCHEMA = T.StructType(
 )
 
 
-def _is_entity_token(tok: str) -> bool:
-    # ASCII A-Z on purpose, NOT str.isupper(): the reference's F/U
-    # word-shape classes are ASCII regexes ([A-Z][a-z]+ / [A-Z]+,
-    # dataset.py:316-335), so a token like "Ωmega" is NOT
-    # capitalized-initial under the contract this surrogate mirrors —
-    # and the DuckDB oracle twin's '^[A-Z]' agrees byte-for-byte.
-    # (Divergence found by scripts/fuzz_oracle.py on unicode tokens.)
-    return bool(tok) and "A" <= tok[0] <= "Z"
-
-
 class DeterministicScorer:
     """Surrogate span detector: BIOES over capitalized-token runs.
 
@@ -59,8 +49,14 @@ class DeterministicScorer:
     def detect_labels(self, sentences: Iterable[list[str]]) -> list[list[str]]:
         out = []
         for toks in sentences:
-            # inlined _is_entity_token (round 6): one function call per
-            # token was ~15% of the fused per-page python wall
+            # ASCII A-Z on purpose, NOT str.isupper(): the reference's
+            # F/U word-shape classes are ASCII regexes ([A-Z][a-z]+ /
+            # [A-Z]+, dataset.py:316-335), so a token like "Ωmega" is NOT
+            # capitalized-initial under the contract this surrogate
+            # mirrors — and the DuckDB twin's '^[A-Z]' agrees byte-for-
+            # byte (divergence found by scripts/fuzz_oracle.py on unicode
+            # tokens). Inline, not a helper: one function call per token
+            # was ~15% of the fused per-page python wall.
             flags = [bool(t) and "A" <= t[0] <= "Z" for t in toks]
             labels = ["O"] * len(toks)
             i = 0

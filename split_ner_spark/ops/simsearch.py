@@ -162,6 +162,39 @@ def _cosine_sql(a: str, b: str) -> str:
     )
 
 
+def _rank_topk(pairs: DataFrame, k: int, dim: int = EMB_DIM) -> DataFrame:
+    """Score → rank tail of the three top-k paths: ``pairs`` carries
+    (query_id, q_emb, _qn, neighbor_id, c_emb, _cn); rank = dense
+    position by (cosine desc, neighbor asc), kept at ``rank <= k``."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        pairs.select(
+            "query_id", "neighbor_id",
+            _cosine_from_norms(
+                "q_emb", "c_emb", F.col("_qn"), F.col("_cn"), dim
+            ).alias("cosine_sim"),
+        )
+        .withColumn("rank", F.row_number().over(w).cast("int"))
+        .filter(F.col("rank") <= k)
+    )
+
+
+def _rank_topk_sql(ctes: str, k: int) -> str:
+    """DuckDB twin of :func:`_rank_topk`: ``ctes`` ends with ``scored``
+    (query_id, neighbor_id, cosine_sim)."""
+    return f"""
+    WITH {ctes}
+    SELECT query_id, neighbor_id, cosine_sim, rank FROM (
+      SELECT *, CAST(row_number() OVER (
+        PARTITION BY query_id ORDER BY cosine_sim DESC, neighbor_id ASC
+      ) AS INT) AS rank
+      FROM scored
+    ) WHERE rank <= {k}
+    """
+
+
 def cosine_topk(
     embeddings: DataFrame, n_queries: int = 10, k: int = 5
 ) -> DataFrame:
@@ -179,19 +212,8 @@ def cosine_topk(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb"),
         _norm("embedding").alias("_cn"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id", "neighbor_id",
-            _cosine_from_norms(
-                "q_emb", "c_emb", F.col("_qn"), F.col("_cn")
-            ).alias("cosine_sim"),
-        )
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
+    return _rank_topk(
+        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")), k
     )
 
 
@@ -199,20 +221,13 @@ def cosine_topk_sql(
     emb_table: str = "embeddings", n_queries: int = 10, k: int = 5
 ) -> str:
     cos = _cosine_sql("q.embedding", "c.embedding")
-    return f"""
-    WITH scored AS (
+    return _rank_topk_sql(f"""
+    scored AS (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
              {cos} AS cosine_sim
       FROM {emb_table} q JOIN {emb_table} c ON q.vec_id <> c.vec_id
       WHERE q.vec_id < {n_queries}
-    )
-    SELECT query_id, neighbor_id, cosine_sim, rank FROM (
-      SELECT *, CAST(row_number() OVER (
-        PARTITION BY query_id ORDER BY cosine_sim DESC, neighbor_id ASC
-      ) AS INT) AS rank
-      FROM scored
-    ) WHERE rank <= {k}
-    """
+    )""", k)
 
 
 def _sign_bucket(emb: str | Column, bits: int) -> Column:
@@ -251,20 +266,11 @@ def lsh_cosine_topk(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb"),
         "bucket", _norm("embedding").alias("_cn"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id", "neighbor_id",
-            _cosine_from_norms(
-                "q_emb", "c_emb", F.col("_qn"), F.col("_cn")
-            ).alias("cosine_sim"),
-        )
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
+    return _rank_topk(
+        c.join(F.broadcast(q), "bucket").filter(
+            F.col("query_id") != F.col("neighbor_id")
+        ),
+        k,
     )
 
 
@@ -277,21 +283,14 @@ def lsh_cosine_topk_sql(
     cos = _cosine_sql("q.embedding", "c.embedding")
     bq = _sign_bucket_sql("q.embedding", bits)
     bc = _sign_bucket_sql("c.embedding", bits)
-    return f"""
-    WITH scored AS (
+    return _rank_topk_sql(f"""
+    scored AS (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
              {cos} AS cosine_sim
       FROM {emb_table} q JOIN {emb_table} c
         ON ({bq}) = ({bc}) AND q.vec_id <> c.vec_id
       WHERE q.vec_id < {n_queries}
-    )
-    SELECT query_id, neighbor_id, cosine_sim, rank FROM (
-      SELECT *, CAST(row_number() OVER (
-        PARTITION BY query_id ORDER BY cosine_sim DESC, neighbor_id ASC
-      ) AS INT) AS rank
-      FROM scored
-    ) WHERE rank <= {k}
-    """
+    )""", k)
 
 
 # --- seeded random-hyperplane LSH (the production ANN path) -----------------
@@ -478,19 +477,8 @@ def rp_lsh_topk(
     large corpus fraction; on clustered embeddings (the production case,
     pinned by the planted-cluster unit test) buckets are dense in true
     neighbors and the candidate fraction stays small."""
-    cand = rp_lsh_candidates(embeddings, n_queries, bits, bands, dim, probes)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.select(
-            "query_id", "neighbor_id",
-            _cosine_from_norms(
-                "q_emb", "c_emb", F.col("_qn"), F.col("_cn"), dim
-            ).alias("cosine_sim"),
-        )
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
+    return _rank_topk(
+        rp_lsh_candidates(embeddings, n_queries, bits, bands, dim, probes), k, dim
     )
 
 
@@ -515,8 +503,8 @@ def rp_lsh_topk_sql(
         for ps in _probe_flip_sets(bits, probes)
     )
     cos = _cosine_sql("c.q_emb", "c.embedding")
-    return f"""
-    WITH banded AS (
+    return _rank_topk_sql(f"""
+    banded AS (
 {band_selects}
     ),
     qb AS (
@@ -533,14 +521,7 @@ def rp_lsh_topk_sql(
     ),
     scored AS (
       SELECT query_id, neighbor_id, {cos} AS cosine_sim FROM cand c
-    )
-    SELECT query_id, neighbor_id, cosine_sim, rank FROM (
-      SELECT *, CAST(row_number() OVER (
-        PARTITION BY query_id ORDER BY cosine_sim DESC, neighbor_id ASC
-      ) AS INT) AS rank
-      FROM scored
-    ) WHERE rank <= {k}
-    """
+    )""", k)
 
 
 def rp_lsh_recall(

@@ -37,6 +37,7 @@ from .ops.contexts import DETECT_QUERY_TOKENS
 from .ops.metrics import EPS_ANALYSIS, f1_report
 from .ops.textstats import STOPWORDS, TOKEN_WS_RE, ws_tokens
 from .ops.triples import MAX_COOCCUR_ENTITIES
+from .session import local_frame
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -195,20 +196,11 @@ def _typ_col(tok: Column, gaz: dict[str, str]) -> Column:
     return expr.otherwise(F.lit(None).cast("string"))
 
 
-def gaz_spans(documents: DataFrame, gaz: dict[str, str]) -> DataFrame:
-    """Typed spans = maximal same-type runs of gazetteer tokens, via the
-    pipeline's BIO assembler (W3, with the reference can_continue guard).
-
-    BIO tags: B-<type> at a gazetteer run start, I-<own type> inside a run
-    — a type change inside a run therefore truncates the span exactly as
-    /root/reference/splitner/analysis.py:77-91 does."""
-    df = documents.select("doc_id", "lang", ws_tokens().alias("tokens"))
-    # One gazetteer-case-chain evaluation per token (round 6, second
-    # session): typs[i] = type of token i, materialized once; the old
-    # form re-ran the chain a second time per token to type the PREVIOUS
-    # token. tags[i] is unchanged: prev type == element_at(typs,
-    # greatest(i, 1)) by construction (transform's i is 0-based,
-    # element_at is 1-based — same indexing the old form used on tokens).
+def _gaz_tags(df: DataFrame, gaz: dict[str, str]) -> DataFrame:
+    """``df`` plus ``typs`` (gazetteer type per ``tokens`` entry, NULL
+    off-gazetteer; one case-chain evaluation per token) and ``tags`` (BIO:
+    B-<type> at a run start, I-<own type> inside a run, O elsewhere; the
+    previous type is element_at(typs, greatest(i, 1)), i 0-based)."""
     typed = df.withColumn(
         "typs", F.transform("tokens", lambda t: _typ_col(t, gaz))
     )
@@ -221,7 +213,19 @@ def gaz_spans(documents: DataFrame, gaz: dict[str, str]) -> DataFrame:
             .otherwise(F.concat(F.lit("I-"), typ))
         )
 
-    tagged = typed.withColumn("tags", F.transform("typs", tag))
+    return typed.withColumn("tags", F.transform("typs", tag))
+
+
+def gaz_spans(documents: DataFrame, gaz: dict[str, str]) -> DataFrame:
+    """Typed spans = maximal same-type runs of gazetteer tokens, via the
+    pipeline's BIO assembler (W3, with the reference can_continue guard).
+
+    A type change inside a run truncates the span (I-<own type>, see
+    :func:`_gaz_tags`) exactly as the reference's
+    splitner/analysis.py:77-91 does."""
+    tagged = _gaz_tags(
+        documents.select("doc_id", "lang", ws_tokens().alias("tokens")), gaz
+    )
     return (
         tagged.withColumn("span", F.explode(spans_bio_col("tags")))
         .select(
@@ -246,19 +250,27 @@ def _typ_case_sql(tok_expr: str, gaz: dict[str, str]) -> str:
     return f"CASE {tok_expr} {whens} ELSE NULL END"
 
 
-def _gaz_spans_sql(gaz: dict[str, str], doc_table: str = "documents") -> str:
+def _gaz_typed_sql(gaz: dict[str, str]) -> str:
+    """CTEs ``tok`` (doc_id, lang, pos, tok, typ: one row per whitespace
+    token, 1-based pos) and ``lagged`` (+ prev_typ), the DuckDB twin of
+    :func:`_gaz_tags`'s ``typs`` shared by the span, X6 and Q5 twins."""
     toks = f"regexp_extract_all(text, '{TOKEN_WS_RE}')"
     return f"""
-    WITH tok AS (
+    tok AS (
       SELECT doc_id, lang, u.pos, u.tok, {_typ_case_sql('u.tok', gaz)} AS typ
-      FROM {doc_table},
+      FROM documents,
            unnest(list_transform(range(1, len({toks}) + 1),
                   i -> {{'pos': i, 'tok': {toks}[i]}})) AS t(u)
     ),
     lagged AS (
       SELECT *, lag(typ) OVER (PARTITION BY doc_id ORDER BY pos) AS prev_typ
       FROM tok
-    ),
+    )"""
+
+
+def _gaz_spans_sql(gaz: dict[str, str]) -> str:
+    return f"""
+    WITH {_gaz_typed_sql(gaz)},
     runs AS (
       SELECT *, sum(CASE WHEN typ IS NOT NULL AND prev_typ IS NULL THEN 1 ELSE 0 END)
                   OVER (PARTITION BY doc_id ORDER BY pos
@@ -296,9 +308,6 @@ def _pipeline_triples_sql() -> str:
     split = "string_split(text, ' ')"
     corp_re = "(" + "|".join(CORP_SUFFIX) + ")$"
     in_list = lambda xs: ", ".join(f"'{x}'" for x in xs)  # noqa: E731
-    alias_vals = ", ".join(
-        f"('{a}', '{c}', '{t}')" for a, c, t in LINK_ALIAS_ROWS
-    )
     # the pipeline re-tokenizes the rewritten text with the reference's
     # punctuation-splitting tokenizer (generate_bio.py:86 — punct chars
     # become standalone tokens, so "3.14" -> "3",".","14" and each "."
@@ -306,8 +315,8 @@ def _pipeline_triples_sql() -> str:
     # bearing corpora diverge (found by scripts/fuzz_oracle.py)
     tok_re = TOKEN_RE_JAVA.replace("'", "''")
     rw_toks = f"regexp_extract_all(rw_text, '{tok_re}')"
-    return f"""
-    WITH rwt AS (
+    return _linked_triples_sql(f"""
+    rwt AS (
       SELECT doc_id,
              array_to_string(list_transform({split},
                     tok -> {_pipe_rewrite_sql("tok")}), ' ') AS rw_text
@@ -338,13 +347,14 @@ def _pipeline_triples_sql() -> str:
                      ROWS UNBOUNDED PRECEDING) AS run_id
       FROM prevved
     ),
-    m AS (
+    mention AS (
       SELECT doc_id, CAST(min(sent_id) AS INT) AS sent_id,
              string_agg(tok, ' ' ORDER BY pos) AS surface
       FROM runs WHERE cap GROUP BY doc_id, run_id
     ),
-    ruled AS (
-      SELECT doc_id, sent_id, surface,
+    m AS (
+      SELECT 'doc:' || CAST(doc_id AS VARCHAR) AS url, sent_id,
+             lower(surface) AS surface_norm,
              CASE WHEN regexp_matches({split}[-1], '{corp_re}') THEN 'corporation'
                   WHEN {split}[-1] IN ({in_list(LOC_SUFFIX)})
                        OR surface IN ({in_list(LOC_GAZ)}) THEN 'location'
@@ -352,41 +362,9 @@ def _pipeline_triples_sql() -> str:
                   WHEN {split}[-1] IN ({in_list(GROUP_SUFFIX)}) THEN 'group'
                   WHEN {split}[1] = 'The' THEN 'creative-work'
                   WHEN {split}[-1] IN ({in_list(PERSON_LAST)}) THEN 'person'
-                  ELSE '{UNKNOWN}' END AS rule_type
-      FROM (SELECT doc_id, sent_id, surface, surface AS text FROM m)
-    ),
-    alias AS (
-      SELECT * FROM (VALUES {alias_vals}) v(alias_norm, cid, dict_type)
-    ),
-    linked AS (
-      SELECT 'doc:' || CAST(doc_id AS VARCHAR) AS url, sent_id,
-             coalesce(a.cid, 'surface:' || lower(surface)) AS canonical_id,
-             coalesce(a.dict_type, r.rule_type) AS entity_type
-      FROM ruled r LEFT JOIN alias a ON a.alias_norm = lower(r.surface)
-    ),
-    -- mirror cooccurrence_pairs' degenerate-sentence cap: pairs only
-    -- among the first MAX_COOCCUR_ENTITIES canonical ids per sentence
-    -- (interpolated from ops.triples so the cap cannot drift)
-    dl AS (
-      SELECT url, sent_id, canonical_id FROM (
-        SELECT url, sent_id, canonical_id,
-               row_number() OVER (PARTITION BY url, sent_id
-                                  ORDER BY canonical_id) AS rk
-        FROM (SELECT DISTINCT url, sent_id, canonical_id FROM linked)
-      ) WHERE rk <= {MAX_COOCCUR_ENTITIES}
-    ),
-    tri AS (
-      SELECT canonical_id AS subj, 'typed_as' AS pred, entity_type AS obj
-      FROM linked WHERE entity_type IS NOT NULL
-      UNION ALL
-      SELECT canonical_id, 'mentioned_in', url FROM linked
-      UNION ALL
-      SELECT x.canonical_id, 'co_mentioned_with', y.canonical_id
-      FROM dl x JOIN dl y USING (url, sent_id)
-      WHERE x.canonical_id < y.canonical_id
-    )
-    SELECT DISTINCT subj, pred, obj FROM tri
-    """
+                  ELSE '{UNKNOWN}' END AS entity_type
+      FROM (SELECT doc_id, sent_id, surface, surface AS text FROM mention)
+    )""")
 
 
 # ---------------------------------------------------------------------------
@@ -925,20 +903,7 @@ def q_kg_mention_contexts(
     no shuffle before the final groupBy, so the plan holds at corpus scale.
     """
     docs = load(spark, sf_dir, "documents")
-    df = docs.select("doc_id", ws_tokens().alias("tokens"))
-
-    def tag(t: Column, i: Column) -> Column:
-        typ = _typ_col(t, GAZ_PRED)
-        prev_typ = _typ_col(
-            F.element_at(F.col("tokens"), F.greatest(i, F.lit(1))), GAZ_PRED
-        )
-        return (
-            F.when(typ.isNull(), F.lit("O"))
-            .when((i == 0) | prev_typ.isNull(), F.concat(F.lit("B-"), typ))
-            .otherwise(F.concat(F.lit("I-"), typ))
-        )
-
-    tagged = df.withColumn("tags", F.transform("tokens", tag))
+    tagged = _gaz_tags(docs.select("doc_id", ws_tokens().alias("tokens")), GAZ_PRED)
     # rewritten token stream: keep O (text) and B- (type name), drop I-
     kept = F.filter(
         F.arrays_zip(F.col("tokens"), F.col("tags")),
@@ -1038,14 +1003,11 @@ def q_kg_eval_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-context label equality, contexts whose gold label is the ``-100``
     pad SKIPPED. Contexts = predicted spans; gold label = the gold span's
     type at the same (doc, start, end) or -100 when absent."""
-    docs = load(spark, sf_dir, "documents")
-    pred = gaz_spans(docs, GAZ_PRED).select(
-        "doc_id", "start", "end", F.col("entity_type").alias("pred_type")
-    )
-    gold = gaz_spans(docs, GAZ_GOLD).select(
-        "doc_id", "start", "end", F.col("entity_type").alias("gold_type")
-    )
-    ctx = pred.join(gold, ["doc_id", "start", "end"], "left").select(
+    pred, gold = _kg_pred_gold(spark, sf_dir)
+    k = ["doc_id", "start", "end"]
+    p = pred.select(*k, F.col("entity_type").alias("pred_type"))
+    g = gold.select(*k, F.col("entity_type").alias("gold_type"))
+    ctx = p.join(g, k, "left").select(
         "pred_type", F.coalesce("gold_type", F.lit("-100")).alias("gold_type")
     )
     kept = ctx.filter(F.col("gold_type") != "-100")
@@ -1081,16 +1043,72 @@ LINK_ALIAS_ROWS = [
 ]
 
 
-def q_kg_linked_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end oracle twin of the pipeline's back half: gazetteer span
-    assembly (detector surrogate) → REAL ``link_mentions`` (exact
+def _linked_triples(mentions: DataFrame) -> DataFrame:
+    """The back-half tail of both oracle-checked chains: REAL
+    ``link_mentions`` against the ``LINK_ALIAS_ROWS`` dictionary (exact
     broadcast dictionary + self-link; fuzzy LSH off for cross-engine
     determinism — xxhash64 has no DuckDB twin) → REAL ``make_triples``
-    union-distinct. Verifies dictionary-type override, self canonical
-    ids, and all three triple predicates against one SQL formulation."""
+    union-distinct. Its DuckDB twin is :func:`_linked_triples_sql`."""
     from .ops.link import link_mentions
     from .ops.triples import make_triples
 
+    alias_df = local_frame(
+        mentions.sparkSession, LINK_ALIAS_ROWS,
+        "alias string, canonical_id string, entity_type string",
+    )
+    return make_triples(
+        link_mentions(mentions, alias_df, fuzzy=False, cleanup=_DEFERRED_UNPERSIST)
+    )
+
+
+def _linked_triples_sql(ctes: str) -> str:
+    """DuckDB twin of :func:`_linked_triples`: ``ctes`` ends with ``m``
+    (url, sent_id, surface_norm, entity_type), the mentions with the
+    surface already normalized the way the Spark side normalizes it."""
+    alias_vals = ", ".join(
+        f"('{a}', '{c}', '{t}')" for a, c, t in LINK_ALIAS_ROWS
+    )
+    return f"""
+    WITH {ctes},
+    alias AS (
+      SELECT * FROM (VALUES {alias_vals}) v(alias_norm, canonical_id, dict_type)
+    ),
+    linked AS (
+      SELECT url, sent_id,
+             coalesce(a.canonical_id, 'surface:' || m.surface_norm) AS canonical_id,
+             coalesce(a.dict_type, m.entity_type) AS entity_type
+      FROM m LEFT JOIN alias a ON a.alias_norm = m.surface_norm
+    ),
+    -- mirror cooccurrence_pairs' degenerate-sentence cap: pairs only
+    -- among the first MAX_COOCCUR_ENTITIES canonical ids per sentence
+    -- (interpolated from ops.triples so the cap cannot drift)
+    dl AS (
+      SELECT url, sent_id, canonical_id FROM (
+        SELECT url, sent_id, canonical_id,
+               row_number() OVER (PARTITION BY url, sent_id
+                                  ORDER BY canonical_id) AS rk
+        FROM (SELECT DISTINCT url, sent_id, canonical_id FROM linked)
+      ) WHERE rk <= {MAX_COOCCUR_ENTITIES}
+    ),
+    tri AS (
+      SELECT canonical_id AS subj, 'typed_as' AS pred, entity_type AS obj
+      FROM linked WHERE entity_type IS NOT NULL
+      UNION ALL
+      SELECT canonical_id, 'mentioned_in', url FROM linked
+      UNION ALL
+      SELECT x.canonical_id, 'co_mentioned_with', y.canonical_id
+      FROM dl x JOIN dl y USING (url, sent_id)
+      WHERE x.canonical_id < y.canonical_id
+    )
+    SELECT DISTINCT subj, pred, obj FROM tri
+    """
+
+
+def q_kg_linked_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """End-to-end oracle twin of the pipeline's back half: gazetteer span
+    assembly (detector surrogate) → :func:`_linked_triples`. Verifies
+    dictionary-type override, self canonical ids, and all three triple
+    predicates against one SQL formulation."""
     docs = load(spark, sf_dir, "documents")
     # cache the gazetteer mentions (deferred unpersist, round 6): the
     # linking join scans them twice (distinct surfaces + fact join) and
@@ -1104,13 +1122,7 @@ def q_kg_linked_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         "entity_type",
     ).cache()
     _DEFERRED_UNPERSIST.append(mentions)
-    alias_df = spark.createDataFrame(
-        LINK_ALIAS_ROWS, "alias string, canonical_id string, entity_type string"
-    )
-    linked = link_mentions(
-        mentions, alias_df, fuzzy=False, cleanup=_DEFERRED_UNPERSIST
-    )
-    return make_triples(linked)
+    return _linked_triples(mentions)
 
 
 QA_TAG_NAMES = [("ENGINE", "compute engine"), ("DATA", "data artifact"),
@@ -1157,20 +1169,7 @@ def q_kg_scheme_rewrite(
     from .ops.schemes import to_scheme_col
 
     docs = load(spark, sf_dir, "documents")
-    df = docs.select("doc_id", ws_tokens().alias("tokens"))
-
-    def tag(t: Column, i: Column) -> Column:
-        typ = _typ_col(t, GAZ_PRED)
-        prev_typ = _typ_col(
-            F.element_at(F.col("tokens"), F.greatest(i, F.lit(1))), GAZ_PRED
-        )
-        return (
-            F.when(typ.isNull(), F.lit("O"))
-            .when((i == 0) | prev_typ.isNull(), F.concat(F.lit("B-"), typ))
-            .otherwise(F.concat(F.lit("I-"), typ))
-        )
-
-    tagged = df.withColumn("tags", F.transform("tokens", tag))
+    tagged = _gaz_tags(docs.select("doc_id", ws_tokens().alias("tokens")), GAZ_PRED)
     return tagged.select(
         "doc_id",
         F.concat_ws(" ", to_scheme_col("tags", scheme)).alias(f"{scheme}_tags"),
@@ -1261,9 +1260,7 @@ def q_pipeline_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .ops.assemble import assemble_untyped
     from .ops.classify import classify_mentions
     from .ops.detect import detect_spans
-    from .ops.link import link_mentions
     from .ops.segment import segment_pages
-    from .ops.triples import make_triples
 
     docs = load(spark, sf_dir, "documents")
     rewritten = F.transform(F.split(F.col("text"), " "), _pipe_rewrite_col)
@@ -1276,13 +1273,7 @@ def q_pipeline_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     mentions = classify_mentions(assemble_untyped(detect_spans(sents))).drop(
         "tokens"
     )
-    alias_df = spark.createDataFrame(
-        LINK_ALIAS_ROWS, "alias string, canonical_id string, entity_type string"
-    )
-    linked = link_mentions(
-        mentions, alias_df, fuzzy=False, cleanup=_DEFERRED_UNPERSIST
-    )
-    return make_triples(linked)
+    return _linked_triples(mentions)
 
 
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1308,18 +1299,8 @@ def kg_mention_contexts_sql(
     X6 full-grid pattern miner (BIO tag per token, drop I-, B->type,
     O->text; every entity token x the clamped window grid, count >=
     threshold). scripts/fuzz_oracle.py draws random grids through this."""
-    toks = f"regexp_extract_all(text, '{TOKEN_WS_RE}')"
     return f"""
-            WITH tok AS (
-              SELECT doc_id, u.pos, u.tok, {_typ_case_sql('u.tok', GAZ_PRED)} AS typ
-              FROM documents,
-                   unnest(list_transform(range(1, len({toks}) + 1),
-                          i -> {{'pos': i, 'tok': {toks}[i]}})) AS t(u)
-            ),
-            lagged AS (
-              SELECT *, lag(typ) OVER (PARTITION BY doc_id ORDER BY pos) AS prev_typ
-              FROM tok
-            ),
+            WITH {_gaz_typed_sql(GAZ_PRED)},
             tagged AS (
               SELECT doc_id, pos,
                      CASE WHEN typ IS NULL THEN 'O'
@@ -1364,7 +1345,6 @@ def kg_scheme_rewrite_sql(scheme: str = "bioes") -> str:
 
     if scheme not in SCHEMES:
         raise ValueError(f"scheme must be one of {SCHEMES}, got {scheme!r}")
-    toks = f"regexp_extract_all(text, '{TOKEN_WS_RE}')"
     if scheme == "bio":
         conv = "tag"
     elif scheme == "bo":
@@ -1382,16 +1362,7 @@ def kg_scheme_rewrite_sql(scheme: str = "bioes") -> str:
             " THEN 'S-' || substr(tag, 3) ELSE tag END"
         )
     return f"""
-            WITH tok AS (
-              SELECT doc_id, u.pos, u.tok, {_typ_case_sql('u.tok', GAZ_PRED)} AS typ
-              FROM documents,
-                   unnest(list_transform(range(1, len({toks}) + 1),
-                          i -> {{'pos': i, 'tok': {toks}[i]}})) AS t(u)
-            ),
-            lagged AS (
-              SELECT *, lag(typ) OVER (PARTITION BY doc_id ORDER BY pos) AS prev_typ
-              FROM tok
-            ),
+            WITH {_gaz_typed_sql(GAZ_PRED)},
             bio AS (
               SELECT doc_id, pos,
                      CASE WHEN typ IS NULL THEN 'O'
@@ -1657,7 +1628,11 @@ def _oracles() -> dict[str, str]:
             SELECT node AS doc_id, min(comp) AS component_id
             FROM cc GROUP BY node
         """,
-        "dedup_simhash": dedup.simhash_sql(),
+        "dedup_simhash": f"""
+            SELECT doc_id,
+                   lpad(bin(simhash_v), {dedup.SIMHASH_BITS}, '0') AS simhash_bits
+            FROM ({dedup._simhash_values_sql("documents", dedup.SIMHASH_BITS)})
+        """,
         "dedup_simhash_pairs": dedup.simhash_pairs_sql(),
         "kg_word_shapes": f"""
             SELECT token,
@@ -1793,45 +1768,14 @@ def _oracles() -> dict[str, str]:
         # (lower + punct→space + ws collapse); gaz surfaces are lowercase
         # alphanumeric+space by construction, so ws-collapse alone is the
         # byte-equal normalization here.
-        "kg_linked_triples": f"""
-            WITH spans AS ({pred_spans}),
+        "kg_linked_triples": _linked_triples_sql(f"""
+            spans AS ({pred_spans}),
             m AS (
-              SELECT 'doc:' || CAST(doc_id AS VARCHAR) AS url, entity_type,
-                     trim(regexp_replace(surface, '\\s+', ' ', 'g')) AS surface_norm
+              SELECT 'doc:' || CAST(doc_id AS VARCHAR) AS url, 0 AS sent_id,
+                     trim(regexp_replace(surface, '\\s+', ' ', 'g')) AS surface_norm,
+                     entity_type
               FROM spans
-            ),
-            alias AS (
-              SELECT * FROM (VALUES {", ".join(f"('{a}', '{c}', '{t}')" for a, c, t in LINK_ALIAS_ROWS)})
-                v(alias_norm, canonical_id, dict_type)
-            ),
-            linked AS (
-              SELECT url,
-                     coalesce(a.canonical_id, 'surface:' || m.surface_norm) AS canonical_id,
-                     coalesce(a.dict_type, m.entity_type) AS entity_type
-              FROM m LEFT JOIN alias a ON a.alias_norm = m.surface_norm
-            ),
-            -- mirror cooccurrence_pairs' degenerate-sentence cap
-            -- (interpolated from ops.triples so the cap cannot drift)
-            dl AS (
-              SELECT url, canonical_id FROM (
-                SELECT url, canonical_id,
-                       row_number() OVER (PARTITION BY url
-                                          ORDER BY canonical_id) AS rk
-                FROM (SELECT DISTINCT url, canonical_id FROM linked)
-              ) WHERE rk <= {MAX_COOCCUR_ENTITIES}
-            ),
-            tri AS (
-              SELECT canonical_id AS subj, 'typed_as' AS pred, entity_type AS obj
-              FROM linked WHERE entity_type IS NOT NULL
-              UNION ALL
-              SELECT canonical_id, 'mentioned_in', url FROM linked
-              UNION ALL
-              SELECT x.canonical_id, 'co_mentioned_with', y.canonical_id
-              FROM dl x JOIN dl y USING (url)
-              WHERE x.canonical_id < y.canonical_id
-            )
-            SELECT DISTINCT subj, pred, obj FROM tri
-        """,
+            )"""),
         # Full-chain twin of q_pipeline_triples: same PIPE_REWRITE, then
         # sentence ids by counting '.' terminators, shape-run detection
         # (maximal capitalized runs — exactly what the BIOES scorer +

@@ -19,6 +19,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+# the directory that holds the ``split_ner_spark`` package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "split-ner-spark",
@@ -74,6 +77,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Python workers import the package's UDF modules by name; they
+        # start in the driver's cwd with the JVM's PYTHONPATH, neither of
+        # which holds the package when the driver runs outside the checkout
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)

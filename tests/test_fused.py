@@ -84,3 +84,30 @@ def test_fast_resume_skips_link_phase(spark, tmp_path, monkeypatch):
     )
     assert rebuilt["rows"] == first["rows"]
     assert rebuilt["triples"] == first["triples"]
+
+
+def test_workers_import_package_outside_checkout(tmp_path):
+    """A driver started in another directory, with the checkout on its
+    own ``sys.path`` only (no ``PYTHONPATH``), still runs the
+    ``mapInPandas`` stage: the Python workers find the package too."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {root!r})\n"
+        "from split_ner_spark.ops.fused import fused_mentions\n"
+        "from split_ner_spark.session import get_spark\n"
+        "spark = get_spark(cpus=2, driver_mem='1g')\n"
+        "print('ROWS', fused_mentions(spark, 20).count())\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    rows = [ln for ln in proc.stdout.splitlines() if ln.startswith("ROWS ")]
+    assert rows and int(rows[-1].split()[1]) > 0
