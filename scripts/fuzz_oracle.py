@@ -27,8 +27,6 @@ Pytest: tests/test_fuzz_oracle.py (marker: fuzz) runs >=25 settings.
 from __future__ import annotations
 
 import argparse
-import hashlib
-import math
 import os
 import random
 import sys
@@ -39,6 +37,7 @@ import duckdb  # noqa: E402
 import pyarrow as pa  # noqa: E402
 import pyarrow.parquet as pq  # noqa: E402
 
+from scripts.oracle_check import frame_fingerprint  # noqa: E402
 from split_ner_spark.ops import dedup  # noqa: E402
 from split_ner_spark import queries as Q  # noqa: E402
 
@@ -227,7 +226,8 @@ def build_pair(spark, sf_dir: str, s: dict, cleanup: list):
     if fam == "minhash_lsh":
         return (
             f"minhash_lsh k={s['k']} h={s['n_hashes']} b={s['bands']}",
-            dedup.minhash_lsh_pairs(docs, s["k"], s["n_hashes"], s["bands"]),
+            dedup.minhash_lsh_pairs(docs, s["k"], s["n_hashes"], s["bands"],
+                                    cleanup=cleanup),
             dedup.minhash_lsh_pairs_sql("documents", s["k"], s["n_hashes"],
                                         s["bands"]),
         )
@@ -245,7 +245,8 @@ def build_pair(spark, sf_dir: str, s: dict, cleanup: list):
     if fam == "simhash_pairs":
         return (
             f"simhash_pairs d={s['max_hamming']}",
-            dedup.simhash_pairs(docs, max_hamming=s["max_hamming"]),
+            dedup.simhash_pairs(docs, max_hamming=s["max_hamming"],
+                                cleanup=cleanup),
             dedup.simhash_pairs_sql("documents",
                                     max_hamming=s["max_hamming"]),
         )
@@ -282,25 +283,6 @@ def build_pair(spark, sf_dir: str, s: dict, cleanup: list):
     return (f"fixed:{name}", Q.QUERIES[name](spark, sf_dir), Q.ORACLES[name])
 
 
-# ---------------------------------------------------------------------------
-# comparison (same normalization as the driver / test_queries_oracle)
-
-def _norm(v) -> str:
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return str(v).lower()
-    if isinstance(v, float):
-        return "nan" if math.isnan(v) else repr(v)
-    return str(v)
-
-
-def _fingerprint(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted("\x01".join(_norm(r[i]) for i in order) for r in rows)
-    return len(lines), hashlib.sha256("\n".join(lines).encode()).hexdigest()
-
-
 def run_setting(spark, tmpdir: str, s: dict) -> tuple[str, str | None]:
     """Run one setting; returns (label, error-or-None)."""
     rng = random.Random(s["data_seed"])
@@ -333,8 +315,8 @@ def run_setting(spark, tmpdir: str, s: dict) -> tuple[str, str | None]:
         Q.drain_cache()
     if sorted(scols) != sorted(ocols):
         return label, f"columns differ: spark={sorted(scols)} duck={sorted(ocols)}"
-    sn, sh = _fingerprint(scols, srows)
-    on, oh = _fingerprint(ocols, orows)
+    sn, sh = frame_fingerprint(scols, srows)
+    on, oh = frame_fingerprint(ocols, orows)
     if sn != on:
         return label, f"row counts differ: spark={sn} duck={on}"
     if sh != oh:

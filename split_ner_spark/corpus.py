@@ -85,6 +85,30 @@ if not all(f[:1].islower() for f in FILLERS_EN) or not all(
     raise AssertionError("corpus filler/fake-cap case invariant violated")
 
 
+def _inlined_randbelow_ok() -> bool:
+    """_gen_page's filler draw inlines CPython's private ``_randbelow``
+    (getrandbits(n.bit_length()) until < n); compare it with
+    ``_randbelow`` on a cloned Random, for the filler-list sizes."""
+    ours = random.Random(SEED)
+    ref = random.Random()
+    ref.setstate(ours.getstate())
+    for n in {len(FILLERS_EN), *map(len, FILLERS_OTHER.values())}:
+        k = n.bit_length()
+        for _ in range(32):
+            r = ours.getrandbits(k)
+            while r >= n:
+                r = ours.getrandbits(k)
+            if r != ref._randbelow(n):
+                return False
+    return True
+
+
+# a change to that private algorithm would silently change the golden
+# corpus. Raise (not assert): must survive -O.
+if not _inlined_randbelow_ok():
+    raise AssertionError("inlined getrandbits draw differs from Random._randbelow")
+
+
 def build_registry(seed: int = SEED) -> list[dict]:
     """Deterministic entity registry: canonical_id, entity_type, surfaces
     (each surface pre-tokenized with the reference tokenizer), plus which

@@ -27,27 +27,27 @@ from pyspark.sql import functions as F
 # NB: the size guard matters — sequence(0, -1) DESCENDS in Spark, so an
 # empty label array would otherwise index into nothing.
 _SPANS_BIOES_EXPR = """
-IF(size({labels}) < 1, cast(array() as array<struct<start:int,end:int>>),
+IF(size(labels) < 1, cast(array() as array<struct<start:int,end:int>>),
 aggregate(
-  sequence(0, size({labels}) - 1),
+  sequence(0, size(labels) - 1),
   named_struct('spans', cast(array() as array<struct<start:int,end:int>>),
                'cur', -1, 'last', -1),
   (acc, i) -> CASE
-    WHEN element_at({labels}, i + 1) = 'B' THEN named_struct(
+    WHEN element_at(labels, i + 1) = 'B' THEN named_struct(
       'spans', IF(acc.cur >= 0,
                   array_append(acc.spans, named_struct('start', acc.cur, 'end', acc.last)),
                   acc.spans),
       'cur', i, 'last', i)
-    WHEN element_at({labels}, i + 1) = 'S' THEN named_struct(
+    WHEN element_at(labels, i + 1) = 'S' THEN named_struct(
       'spans', array_append(
         IF(acc.cur >= 0,
            array_append(acc.spans, named_struct('start', acc.cur, 'end', acc.last)),
            acc.spans),
         named_struct('start', i, 'end', i)),
       'cur', -1, 'last', -1)
-    WHEN element_at({labels}, i + 1) = 'I' AND acc.cur >= 0 AND acc.last = i - 1
+    WHEN element_at(labels, i + 1) = 'I' AND acc.cur >= 0 AND acc.last = i - 1
       THEN named_struct('spans', acc.spans, 'cur', acc.cur, 'last', i)
-    WHEN element_at({labels}, i + 1) = 'E' AND acc.cur >= 0 AND acc.last = i - 1
+    WHEN element_at(labels, i + 1) = 'E' AND acc.cur >= 0 AND acc.last = i - 1
       THEN named_struct(
         'spans', array_append(acc.spans, named_struct('start', acc.cur, 'end', i)),
         'cur', -1, 'last', -1)
@@ -66,19 +66,19 @@ aggregate(
 # typed BIO with can_continue (analysis.py:77-91): B-X opens (can=true);
 # I-X extends the last span iff type matches AND can; else can=false.
 _SPANS_BIO_EXPR = """
-IF(size({tags}) < 1, cast(array() as array<struct<tag:string,start:int,end:int>>),
+IF(size(tags) < 1, cast(array() as array<struct<tag:string,start:int,end:int>>),
 aggregate(
-  sequence(0, size({tags}) - 1),
+  sequence(0, size(tags) - 1),
   named_struct('spans', cast(array() as array<struct<tag:string,start:int,end:int>>),
                'can', false),
   (acc, i) -> CASE
-    WHEN element_at({tags}, i + 1) LIKE 'B-%' THEN named_struct(
+    WHEN element_at(tags, i + 1) LIKE 'B-%' THEN named_struct(
       'spans', array_append(acc.spans,
-        named_struct('tag', substring(element_at({tags}, i + 1), 3),
+        named_struct('tag', substring(element_at(tags, i + 1), 3),
                      'start', i, 'end', i)),
       'can', true)
-    WHEN element_at({tags}, i + 1) LIKE 'I-%' AND acc.can AND size(acc.spans) > 0
-         AND element_at(acc.spans, -1).tag = substring(element_at({tags}, i + 1), 3)
+    WHEN element_at(tags, i + 1) LIKE 'I-%' AND acc.can AND size(acc.spans) > 0
+         AND element_at(acc.spans, -1).tag = substring(element_at(tags, i + 1), 3)
       THEN named_struct(
         'spans', array_append(slice(acc.spans, 1, size(acc.spans) - 1),
           named_struct('tag', element_at(acc.spans, -1).tag,
@@ -92,12 +92,14 @@ aggregate(
 """
 
 
-def spans_bioes_col(labels_col: str = "labels") -> F.Column:
-    return F.expr(_SPANS_BIOES_EXPR.format(labels=labels_col))
+def spans_bioes_col() -> F.Column:
+    """Spans of the ``labels`` column (BIOES)."""
+    return F.expr(_SPANS_BIOES_EXPR)
 
 
-def spans_bio_col(tags_col: str = "tags") -> F.Column:
-    return F.expr(_SPANS_BIO_EXPR.format(tags=tags_col))
+def spans_bio_col() -> F.Column:
+    """Typed spans of the ``tags`` column (BIO)."""
+    return F.expr(_SPANS_BIO_EXPR)
 
 
 def _surface_col() -> F.Column:
@@ -112,7 +114,7 @@ def assemble_untyped(detected: DataFrame) -> DataFrame:
     mentions_untyped(url, sent_id, start, end, surface, detect_score).
     FIXTURES.md F4 shape."""
     return (
-        detected.withColumn("span", F.explode(spans_bioes_col("labels")))
+        detected.withColumn("span", F.explode(spans_bioes_col()))
         .select(
             "url",
             "sent_id",

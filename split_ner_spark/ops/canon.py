@@ -23,9 +23,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import local_frame
+from .lsh import SURFACE_BANDS, SURFACE_HASHES, char_shingles_col, lsh_self_join
 
 # edges up to which components are found by a driver union-find
 DRIVER_THRESHOLD = 100_000
+# star-contraction rounds before non-convergence raises
+MAX_ITER = 50
+# char-3-gram Jaccard at which two self-linked surfaces merge
+SELF_JACCARD = 0.7
 
 
 def _driver_union_find(rows: list, e: DataFrame) -> DataFrame:
@@ -98,9 +103,7 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
-def star_contraction_components(
-    edges_uv: DataFrame, max_iter: int = 50
-) -> DataFrame:
+def star_contraction_components(edges_uv: DataFrame) -> DataFrame:
     """Large-star/small-star alternation (Kiveris et al., SoCC'14) on a
     deduplicated (u, v) edge frame → (node, component).
 
@@ -109,7 +112,7 @@ def star_contraction_components(
     stop early on a high-diameter graph. Each round: two groupBy
     aggregates + ``localCheckpoint`` to cut lineage; convergence = edge
     multiset stable (count + order-independent hash). Raises RuntimeError
-    if ``max_iter`` rounds pass without convergence — wrong components
+    if ``MAX_ITER`` rounds pass without convergence — wrong components
     must never be returned silently."""
     nodes = (
         edges_uv.select(F.col("u").alias("node"))
@@ -119,7 +122,7 @@ def star_contraction_components(
     )
     e = edges_uv.localCheckpoint()
     prev = _edge_checksum(e)
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         e = _small_star(_large_star(e)).localCheckpoint()
         cur = _edge_checksum(e)
         if cur == prev:
@@ -127,7 +130,7 @@ def star_contraction_components(
         prev = cur
     else:
         raise RuntimeError(
-            f"star-contraction did not converge in {max_iter} rounds; "
+            f"star-contraction did not converge in {MAX_ITER} rounds; "
             "components would be wrong — raising instead of returning them"
         )
     # converged state is a disjoint union of stars rooted at each
@@ -142,7 +145,7 @@ def star_contraction_components(
 
 
 def _components(
-    e: DataFrame, max_iter: int = 50, driver_threshold: int = DRIVER_THRESHOLD
+    e: DataFrame, driver_threshold: int = DRIVER_THRESHOLD
 ) -> DataFrame | None:
     """Deduplicated, loop-free (u, v) edges → (node, component), or
     ``None`` when there is no edge. ONE driver round answers emptiness,
@@ -153,15 +156,11 @@ def _components(
         return None
     if len(head) <= driver_threshold:
         return _driver_union_find([(r["u"], r["v"]) for r in head], e)
-    return star_contraction_components(e, max_iter=max_iter)
+    return star_contraction_components(e)
 
 
 def connected_components(
-    edges: DataFrame,
-    max_iter: int = 50,
-    src: str = "src",
-    dst: str = "dst",
-    driver_threshold: int = DRIVER_THRESHOLD,
+    edges: DataFrame, driver_threshold: int = DRIVER_THRESHOLD
 ) -> DataFrame:
     """edges(src, dst) undirected → (node, component) where component is
     the min node id (by the column's ordering) in the component.
@@ -173,20 +172,15 @@ def connected_components(
     convergence on any diameter, which is the only safe choice at true
     web scale (a 10^12-node similarity graph's diameter is unknown)."""
     e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    cc = _components(e, max_iter, driver_threshold)
+    cc = _components(e, driver_threshold)
     return _driver_union_find([], e) if cc is None else cc
 
 
-def self_surface_canon_map(
-    self_surf: DataFrame,
-    jaccard_threshold: float = 0.7,
-    num_hashes: int = 16,
-    bands: int = 8,
-) -> DataFrame | None:
+def self_surface_canon_map(self_surf: DataFrame) -> DataFrame | None:
     """DISTINCT self-linked surfaces → (surface_norm, _canon2) rows for the
     MERGED surfaces only, or ``None`` when no near-duplicate pair exists
     (callers then skip the merge entirely). ``_canon2`` is
@@ -196,16 +190,15 @@ def self_surface_canon_map(
     surface DIMENSION instead of re-deriving distinct surfaces from the
     mention fact table.
 
-    The similarity pairs come from one broadcast-shaped LSH self-join
-    (already one row per pair, so no dedupe shuffle) and are merged by
-    :func:`_components`: up to ``DRIVER_THRESHOLD`` pairs by a driver
-    union-find returned as a local relation (one Spark action in all)."""
-    from .lsh import char_shingles_col, lsh_self_join  # local import: no cycle
-
+    The similarity pairs (Jaccard ≥ ``SELF_JACCARD``) come from one
+    broadcast-shaped LSH self-join (already one row per pair, so no
+    dedupe shuffle) and are merged by :func:`_components`: up to
+    ``DRIVER_THRESHOLD`` pairs by a driver union-find returned as a local
+    relation (one Spark action in all)."""
     sh = self_surf.withColumn("shingles", char_shingles_col(F.col("surface_norm")))
     pairs = lsh_self_join(
-        sh, "surface_norm", num_hashes=num_hashes, bands=bands,
-        threshold=jaccard_threshold,
+        sh, "surface_norm", num_hashes=SURFACE_HASHES, bands=SURFACE_BANDS,
+        threshold=SELF_JACCARD,
     )
     cc = _components(pairs.select(F.col("a").alias("u"), F.col("b").alias("v")))
     if cc is None:

@@ -81,29 +81,27 @@ def classify_type_col(surface_col: F.Column) -> F.Column:
     )
 
 
-def classify_mentions(
-    mentions: DataFrame, use_udf: bool = False, scorer=None
-) -> DataFrame:
+def classify_mentions(mentions: DataFrame, scorer=None) -> DataFrame:
     """mentions_untyped → + entity_type (typed mentions, FIXTURES.md F3).
 
-    The default is the pure-Catalyst twin (``classify_type_col``): the
-    surrogate model is rule-expressible, so the shipped path stays inside
-    WholeStageCodegen — no Arrow crossing, no per-row Python. Tests pin
-    UDF == expression on every surface, so swapping is free.
+    Without a ``scorer`` this is the pure-Catalyst twin
+    (``classify_type_col``): the surrogate model is rule-expressible, so
+    the shipped path stays inside WholeStageCodegen — no Arrow crossing,
+    no per-row Python. Tests pin UDF == expression on every surface, so
+    swapping is free.
 
-    ``use_udf=True`` (or passing a ``scorer``) runs the Arrow-batched UDF
-    boundary instead — the slot where a real transformer checkpoint sits
-    (e.g. :class:`split_ner_spark.hf_scorer.HFScorer`); ``scorer`` must
-    expose ``classify_surfaces(list[str]) -> list[str]``."""
-    if not use_udf and scorer is None:
+    Passing a ``scorer`` runs the Arrow-batched UDF boundary instead — the
+    slot where a real transformer checkpoint sits (e.g.
+    :class:`split_ner_spark.hf_scorer.HFScorer`; the surrogate
+    :class:`.detect.DeterministicScorer` maps :func:`classify_surface`);
+    ``scorer`` must expose ``classify_surfaces(list[str]) -> list[str]``."""
+    if scorer is None:
         return mentions.withColumn("entity_type", classify_type_col(F.col("surface")))
 
     @F.pandas_udf(T.StringType())
     def _classify(surfaces: pd.Series) -> pd.Series:
-        if scorer is not None:
-            return pd.Series(
-                scorer.classify_surfaces(list(surfaces)), index=surfaces.index
-            )
-        return surfaces.map(classify_surface)
+        return pd.Series(
+            scorer.classify_surfaces(list(surfaces)), index=surfaces.index
+        )
 
     return mentions.withColumn("entity_type", _classify(F.col("surface")))

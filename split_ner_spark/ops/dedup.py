@@ -87,7 +87,12 @@ def shingle_arrays(documents: DataFrame, k: int = 3) -> DataFrame:
     shingle at crawl scale where empty pages number in the millions.
     Exact-duplicate handling of empty docs belongs to exact_dedup.
     (Found by scripts/fuzz_oracle.py — the fixed test corpus has no
-    empty docs.)"""
+    empty docs.)
+
+    Precondition: ``doc_id`` is unique in ``documents``. Rows are emitted
+    per input row, so two documents sharing an id yield two arrays under
+    one id, and every consumer keyed on ``doc_id`` (the grouped
+    signatures, the size and verification joins) then mixes them."""
     toks = ws_tokens()
     n = F.size(toks)
     sh = F.array_distinct(
@@ -166,7 +171,13 @@ def minhash_signatures_from_arrays(
     affine mix below 2^63. The shuffle this adds carries one PARTIALLY
     AGGREGATED row per (doc, map partition) — each doc's shingle rows are
     generated inside one partition, so the exchange moves ~|docs| rows of
-    32 longs, not |shingles| rows."""
+    32 longs, not |shingles| rows.
+
+    Precondition: ``doc_id`` is unique in ``sh_arrays`` (as
+    :func:`shingle_arrays` gives for unique input ids). The aggregate
+    groups by ``doc_id``, so rows sharing an id get ONE signature over
+    the union of their shingles, where the per-row fold gave one each;
+    the equivalence test covers unique ids only."""
     bases = F.transform(
         F.col("sh"), lambda h: F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
     )
@@ -206,7 +217,8 @@ def minhash_lsh_pairs(
     n_hashes: int = N_MINHASH,
     bands: int = N_BANDS,
     sh_arrays: DataFrame | None = None,
-    cleanup: list | None = None,
+    *,
+    cleanup: list,
 ) -> DataFrame:
     """LSH candidate pairs: docs sharing at least one signature band.
 
@@ -215,11 +227,11 @@ def minhash_lsh_pairs(
     Pass ``sh_arrays`` (from :func:`shingle_arrays`, ideally persisted) to
     share the tokenize+md5 pass with other consumers.
 
-    ``cleanup`` (round 6): when provided, the tiny banded frame
-    (doc_id, band_id, band_key — a few dozen bytes per doc) is cached and
-    appended to the list, so the self-join's broadcast-build side and its
-    probe side read ONE materialization instead of each re-running the
-    whole tokenize→md5→signature pipeline (the planner builds a broadcast
+    ``cleanup`` (round 6): the tiny banded frame (doc_id, band_id,
+    band_key — a few dozen bytes per doc) is cached and appended to the
+    list, so the self-join's broadcast-build side and its probe side read
+    ONE materialization instead of each re-running the whole
+    tokenize→md5→signature pipeline (the planner builds a broadcast
     from one side, which otherwise duplicates the full upstream compute;
     exchange reuse cannot help because the broadcast side's plan differs).
     Same deferred-unpersist contract as :func:`lsh_verified_jaccard`.
@@ -247,10 +259,8 @@ def minhash_lsh_pairs(
                 ),
             )
         ).alias("band"),
-    ).select("doc_id", "band.band_id", "band.band_key")
-    if cleanup is not None:
-        banded = banded.cache()
-        cleanup.append(banded)
+    ).select("doc_id", "band.band_id", "band.band_key").cache()
+    cleanup.append(banded)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -362,7 +372,8 @@ def lsh_verified_jaccard(
     threshold: float = 0.5,
     n_hashes: int = N_MINHASH,
     bands: int = N_BANDS,
-    cleanup: list | None = None,
+    *,
+    cleanup: list,
 ) -> DataFrame:
     """The production dedup composition: MinHash-LSH candidate generation,
     then exact n-gram-Jaccard verification restricted to candidates.
@@ -379,13 +390,12 @@ def lsh_verified_jaccard(
     ``cache()`` plays that role (materialized by the first stage that
     reads it, reused by the rest of the same job).
 
-    Pass ``cleanup`` (a list) to receive the cached shingle frame so the
-    caller can ``unpersist()`` it once the result is materialized — the
-    same contract as ``link_mentions``. Without it a long-lived session
-    calling this repeatedly accumulates one cached frame per call."""
+    The cached shingle frame (and the banded frame of
+    :func:`minhash_lsh_pairs`) are appended to ``cleanup`` for the caller
+    to ``unpersist()`` once the result is materialized — the same
+    contract as ``link_mentions``."""
     sh_arr = shingle_arrays(documents, k).cache()
-    if cleanup is not None:
-        cleanup.append(sh_arr)
+    cleanup.append(sh_arr)
     cand = minhash_lsh_pairs(
         documents, k, n_hashes, bands, sh_arrays=sh_arr, cleanup=cleanup
     )
@@ -514,7 +524,8 @@ def simhash_pairs(
     documents: DataFrame,
     bits: int = SIMHASH_PAIR_BITS,
     max_hamming: int = 3,
-    cleanup: list | None = None,
+    *,
+    cleanup: list,
 ) -> DataFrame:
     """Near-dup pairs with hamming(simhash) ≤ d, via pigeonhole banding.
 
@@ -546,16 +557,14 @@ def simhash_pairs(
        on one reducer.
 
     ``cleanup``: same deferred-unpersist contract as the other dedup
-    operators — when provided, the small (doc_id, simhash_v) frame is
-    cached so the three consumers (distinct values, expansion probe,
-    expansion build) share one simhash aggregation."""
+    operators — the small (doc_id, simhash_v) frame is cached and
+    appended to it, so the three consumers (distinct values, expansion
+    probe, expansion build) share one simhash aggregation."""
     n_bands = max_hamming + 1
     width = bits // n_bands
     mask = (1 << width) - 1
-    sv = simhash_values(documents, bits)
-    if cleanup is not None:
-        sv = sv.cache()
-        cleanup.append(sv)
+    sv = simhash_values(documents, bits).cache()
+    cleanup.append(sv)
     # Explicit fan-out of the probe side: AQE rightly coalesces the tiny
     # post-distinct shuffle (28k fingerprints ≈ <1 MiB) down to 1-2
     # partitions — but this operator's OUTPUT is quadratic in bucket

@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from .classify import classify_surface
+
 DETECTED_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType()),
@@ -39,7 +41,8 @@ DETECTED_SCHEMA = T.StructType(
 
 
 class DeterministicScorer:
-    """Surrogate span detector: BIOES over capitalized-token runs.
+    """Surrogate span detector: BIOES over capitalized-token runs (and the
+    rule-based span classifier, for the UDF path of classify_mentions).
 
     Deterministic, hermetic, and honest: it misses lowercased planted
     mentions (FN) and fires on capitalized fakes (FP) exactly like a
@@ -107,6 +110,10 @@ class DeterministicScorer:
             else:
                 i += 1
         return spans, nflag
+
+    def classify_surfaces(self, surfaces: list[str]) -> list[str]:
+        """``classify_mentions``' scorer contract over ``classify_surface``."""
+        return [classify_surface(s) for s in surfaces]
 
 
 def detect_spans(sentences: DataFrame, scorer=None) -> DataFrame:

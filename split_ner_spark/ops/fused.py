@@ -94,18 +94,16 @@ def fused_mentions(
     spark: SparkSession,
     n_pages: int,
     seed: int = corpus.SEED,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Synthetic corpus → typed mentions in one python stage.
 
     Row-identical to ``classify_mentions(assemble_untyped(detect_spans(
     segment_pages(corpus.pages(gen)))))`` (pinned by tests)."""
     registry = corpus.build_registry(seed)
-    if partitions is None:
-        # 4x overdecomposition: with exactly one task-wave the slowest
-        # task sets the wall (measured ~20% straggler tail); 4 waves of
-        # smaller tasks smooth it — the standard 2-4x-cores rule.
-        partitions = max(8, spark.sparkContext.defaultParallelism * 4)
+    # 4x overdecomposition: with exactly one task-wave the slowest task
+    # sets the wall (measured ~20% straggler tail); 4 waves of smaller
+    # tasks smooth it — the standard 2-4x-cores rule.
+    partitions = max(8, spark.sparkContext.defaultParallelism * 4)
     scorer = DeterministicScorer()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -27,7 +27,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..reference_impl import PUNCT_CHARS
-from .lsh import char_shingles_col, lsh_similarity_join
+from .canon import self_surface_canon_map
+from .lsh import SURFACE_BANDS, SURFACE_HASHES, char_shingles_col, lsh_similarity_join
+
+# char-3-gram Jaccard at which a dictionary miss links to an alias
+FUZZY_JACCARD = 0.55
 
 
 def norm_surface_col(col: F.Column) -> F.Column:
@@ -40,11 +44,9 @@ def norm_surface_col(col: F.Column) -> F.Column:
 def link_mentions(
     mentions: DataFrame,
     alias_df: DataFrame,
-    jaccard_threshold: float = 0.55,
-    num_hashes: int = 16,
-    bands: int = 8,
+    *,
+    cleanup: list,
     fuzzy: bool = True,
-    cleanup: list | None = None,
     canonicalize_self: bool = False,
 ) -> DataFrame:
     """mentions(..., surface, entity_type) × alias(alias, canonical_id,
@@ -67,11 +69,10 @@ def link_mentions(
     application join) — at 2M pages this removed two full fact-table
     passes from the pipeline's link phase.
 
-    Intermediate caches (distinct surfaces, dictionary-linked dim) are
-    unpersisted as soon as the final surface→entity dimension is
-    materialized; pass ``cleanup`` to ALSO receive that final cached dim
-    so long-running callers (streaming foreachBatch) can unpersist it
-    after consuming the result.
+    The distinct-surface cache is unpersisted as soon as the final
+    surface→entity dimension is materialized; that cached dimension is
+    appended to ``cleanup``, for the caller to unpersist once it has
+    consumed the result.
     """
     dim = (
         alias_df.select(
@@ -116,8 +117,9 @@ def link_mentions(
         scored = lsh_similarity_join(
             missed.withColumn("shingles", char_shingles_col(F.col("surface_norm"))),
             dim.withColumn("shingles", char_shingles_col(F.col("alias_norm"))),
-            "surface_norm", "alias_norm", num_hashes=num_hashes, bands=bands,
-            threshold=jaccard_threshold, keep_right=("canonical_id", "dict_type"),
+            "surface_norm", "alias_norm", num_hashes=SURFACE_HASHES,
+            bands=SURFACE_BANDS, threshold=FUZZY_JACCARD,
+            keep_right=("canonical_id", "dict_type"),
         )
         best = scored.groupBy("surface_norm").agg(
             F.min(
@@ -164,13 +166,10 @@ def link_mentions(
     # LRU-evicted full_dim block would recompute from scratch, which is
     # correct, just slower; a long-running stream must not accumulate them)
     surfaces.unpersist()
-    if cleanup is not None:
-        cleanup.append(full_dim)
+    cleanup.append(full_dim)
 
     join_dim = full_dim
     if canonicalize_self:
-        from .canon import self_surface_canon_map  # local import: no cycle
-
         # dimension-level canonicalization: full_dim is unique per
         # surface_norm and already cached, so the LSH self-join (one
         # action) runs on |distinct self surfaces| rows, and ``comp`` maps

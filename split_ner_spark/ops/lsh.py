@@ -9,7 +9,7 @@ rebuild replaces it with banded MinHash, the standard scalable design.
 
 Everything is Catalyst expressions (no UDFs, no pyspark.ml dependency):
 
-1. shingle: char n-grams of '^'+s+'$' (array<string>, distinct);
+1. shingle: char 3-grams of '^'+s+'$' (array<string>, distinct);
 2. signature: sig[i] = min over shingles of xxhash64(shingle, i) — the
    "k independent hash functions" are the seeded xxhash64 family; computed
    as an array fold per row, zero shuffle, built as one SQL string;
@@ -31,15 +31,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# the operating point of the surface-linking call sites (link_mentions'
+# fuzzy path and self_surface_canon_map): r = 2 rows per band
+SURFACE_HASHES = 16
+SURFACE_BANDS = 8
 
-def char_shingles_col(col: F.Column, n: int = 3) -> F.Column:
-    """Distinct char n-grams of '^'+s+'$' (boundary-marked, so 1-2 char
+
+def char_shingles_col(col: F.Column) -> F.Column:
+    """Distinct char 3-grams of '^'+s+'$' (boundary-marked, so 1-2 char
     strings still produce at least one shingle)."""
     s = F.concat(F.lit("^"), col, F.lit("$"))
     return F.array_distinct(
         F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(s) - (n - 1), F.lit(1))),
-            lambda i: F.substring(s, i, n),
+            F.sequence(F.lit(1), F.greatest(F.length(s) - 2, F.lit(1))),
+            lambda i: F.substring(s, i, 3),
         )
     )
 
@@ -96,7 +101,6 @@ def lsh_similarity_join(
     right: DataFrame,
     left_id: str,
     right_id: str,
-    shingles_col: str = "shingles",
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
@@ -106,7 +110,7 @@ def lsh_similarity_join(
     signatures collide in ≥1 band. Returns (left_id, right_id, jaccard,
     *keep_right), one row per pair.
 
-    left/right must carry ``shingles_col``; ids must be distinct within
+    left/right must carry a ``shingles`` column; ids must be distinct within
     each side, and ``right_id`` and ``keep_right`` must not reuse
     ``left_id``'s name. ``right`` is broadcast, so it must fit the
     broadcast budget (its band rows are ``bands`` × its row count).
@@ -116,11 +120,11 @@ def lsh_similarity_join(
     operating point, or raise bands for recall.
     """
     lb = _band_rows(
-        left.select(left_id, F.col(shingles_col).alias("_sh_l")),
+        left.select(left_id, F.col("shingles").alias("_sh_l")),
         left_id, "_sh_l", num_hashes, bands, "_bands_l",
     )
     rb = _band_rows(
-        right.select(right_id, F.col(shingles_col).alias("_sh_r"), *keep_right),
+        right.select(right_id, F.col("shingles").alias("_sh_r"), *keep_right),
         right_id, "_sh_r", num_hashes, bands, "_bands_r", keep=keep_right,
     )
     # a pair colliding in several bands is kept at its first colliding
@@ -140,14 +144,14 @@ def lsh_similarity_join(
 def lsh_self_join(
     df: DataFrame,
     id_col: str,
-    shingles_col: str = "shingles",
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
 ) -> DataFrame:
-    """Near-duplicate pairs within one table: (a, b, jaccard), a < b."""
-    a = df.select(F.col(id_col).alias("a"), F.col(shingles_col))
-    b = df.select(F.col(id_col).alias("b"), F.col(shingles_col))
+    """Near-duplicate pairs within one table (which carries ``shingles``):
+    (a, b, jaccard), a < b."""
+    a = df.select(F.col(id_col).alias("a"), "shingles")
+    b = df.select(F.col(id_col).alias("b"), "shingles")
     return lsh_similarity_join(
-        a, b, "a", "b", shingles_col, num_hashes, bands, threshold
+        a, b, "a", "b", num_hashes, bands, threshold
     ).filter(F.col("a") < F.col("b"))

@@ -69,17 +69,14 @@ def extracted_text(pages: DataFrame, use_html: bool = False) -> DataFrame:
     return src.mapInPandas(run, schema=EXTRACT_SCHEMA)
 
 
-def segment_pages(pages: DataFrame, lang: str | None = "en") -> DataFrame:
-    """pages → sentences(url, sent_id, tokens, sent_text).
+def segment_pages(pages: DataFrame) -> DataFrame:
+    """English pages → sentences(url, sent_id, tokens, sent_text).
 
     The ``lang`` filter is applied *before* the UDF so Catalyst pushes it
     into the parquet scan (predicate pushdown) and prunes ``html`` (column
     pruning) — at 100 TB this skips ~8% of pages and the whole binary col.
     """
-    src = pages
-    if lang is not None:
-        src = src.filter(F.col("lang") == lang)
-    src = src.select("url", "text")
+    src = pages.filter(F.col("lang") == "en").select("url", "text")
 
     def run(batches):
         for pdf in batches:

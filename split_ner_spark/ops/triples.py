@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 # constant into their `rk <= N` window filters, so a cap change cannot
 # silently break Spark/DuckDB equivalence (ADVICE r4).
 MAX_COOCCUR_ENTITIES = 1024
+# a key holding more than this share of the detection rows is hot
+HOT_FRACTION = 0.01
 
 
 def cooccurrence_pairs(
@@ -141,42 +143,39 @@ def salted_by_subject(
     triples: DataFrame,
     n_partitions: int = 64,
     n_salts: int = 16,
-    hot_fraction: float = 0.01,
-    detect_on: DataFrame | None = None,
-    detect_col: str = "subj",
+    *,
+    detect_on: DataFrame,
+    detect_col: str,
 ) -> DataFrame:
     """Repartition triples by (subj, salt) where salt spreads heavy
     subjects across ``n_salts`` buckets; cold subjects keep one bucket.
 
-    Hot-set detection is ONE action: an exact ``groupBy(key).count()``
-    whose total rides an :class:`Observation`, with the top-``cap`` keys
-    by count collected in the same action. A key is hot when it holds
-    more than ``hot_fraction`` of the total, so at most 1/hot_fraction
-    keys qualify and ``cap`` bounds the collect. Map-side partial
-    aggregation already limits the shuffle to partitions × distinct keys,
-    so a sample would save little and cost extra jobs — and could miss a
-    hot key on a micro-batch. The hot set becomes a broadcast-free
+    Hot-set detection is ONE action on ``detect_on``: an exact
+    ``groupBy(detect_col).count()`` whose total rides an
+    :class:`Observation`, with the top-``cap`` keys by count collected in
+    the same action. A key is hot when it holds more than
+    ``HOT_FRACTION`` of the total, so at most 1/HOT_FRACTION keys qualify
+    and ``cap`` bounds the collect. Map-side partial aggregation already
+    limits the shuffle to partitions × distinct keys, so a sample would
+    save little and cost extra jobs — and could miss a hot key on a
+    micro-batch. The hot set becomes a broadcast-free
     ``isin`` literal: no join, no cached frame survives the call.
 
-    ``detect_on``/``detect_col``: run hot-key detection against a
-    DIFFERENT (typically already-materialized) frame — the pipeline
-    passes its cached ``linked`` mentions (col ``canonical_id``), whose
-    per-key counts are a faithful proxy for per-subject triple counts
-    (mentioned_in ∝ mentions, co-occurrence subjects are canonical ids).
-    This lets the caller skip caching the triple set solely for the
-    detection pass: the triples are then computed exactly once, inside
+    The pipeline passes its cached ``linked`` mentions as ``detect_on``
+    (col ``canonical_id``), whose per-key counts are a faithful proxy for
+    per-subject triple counts (mentioned_in ∝ mentions, co-occurrence
+    subjects are canonical ids). So the triple set is not cached solely
+    for the detection pass: the triples are computed exactly once, inside
     the write job. Salting is a partitioning heuristic, so a proxy
     detection source changes no output values.
 
     Output VALUES are unchanged by any of this (salt is dropped);
     only the physical partitioning differs. Salt is a deterministic hash
     of the full triple, not a random()."""
-    det_frame = triples if detect_on is None else detect_on
-    det_col = "subj" if detect_on is None else detect_col
-    cap = int(1.0 / hot_fraction) + 1
+    cap = int(1.0 / HOT_FRACTION) + 1
     obs = Observation()
     top = (
-        det_frame.groupBy(det_col)
+        detect_on.groupBy(detect_col)
         .agg(F.count("*").alias("_c"))
         .observe(obs, F.sum("_c").alias("total"))
         .orderBy(F.desc("_c"))
@@ -184,7 +183,7 @@ def salted_by_subject(
         .collect()
     )
     total = obs.get["total"] or 0
-    hot_subjects = [r[det_col] for r in top if r["_c"] > hot_fraction * total]
+    hot_subjects = [r[detect_col] for r in top if r["_c"] > HOT_FRACTION * total]
     if hot_subjects:
         salted = triples.withColumn(
             "salt",

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -41,6 +42,13 @@ from .ops.metrics import triple_pr
 from .ops.segment import segment_pages
 from .ops.triples import make_triples, salted_by_subject
 from .session import local_frame
+
+
+def _write_json(path: str, obj) -> None:
+    """Atomically: a reader sees the old file or the whole new one."""
+    with open(path + ".tmp", "w") as fh:
+        json.dump(obj, fh)
+    os.replace(path + ".tmp", path)
 
 
 class StageCommitter:
@@ -64,6 +72,12 @@ class StageCommitter:
     def _load_marker(self, stage: str) -> dict:
         with open(self._marker(stage)) as fh:
             return json.load(fh)
+
+    def uncommit_all(self) -> None:
+        """Remove every commit marker: no stage of an earlier run resumes."""
+        for f in os.listdir(self.base):
+            if f.startswith("_COMMIT."):
+                os.remove(os.path.join(self.base, f))
 
     def rows(self, stage: str) -> int:
         return self._load_marker(stage)["rows"]
@@ -93,9 +107,13 @@ class StageCommitter:
         t0 = time.time()
         df.write.mode("overwrite").parquet(tmp)
         wall_ms = int((time.time() - t0) * 1000)
+        # the old marker goes first: a run killed from here until the new
+        # marker is in place leaves the stage uncommitted (rebuilt on
+        # resume), never a marker over a deleted or half-swapped table
+        marker = self._marker(stage)
+        if os.path.exists(marker):
+            os.remove(marker)
         if os.path.exists(final):
-            import shutil
-
             shutil.rmtree(final)
         os.rename(tmp, final)
         # the written schema, so neither this re-read nor a resumed run's
@@ -122,13 +140,12 @@ class StageCommitter:
                     )
                     + "\n"
                 )
-        with open(self._marker(stage), "w") as fh:
-            json.dump(
-                {"stage": stage, "rows": rows, "wall_ms": wall_ms,
-                 "n_files": len(per_file), "committed_at": time.time(),
-                 "schema": committed.schema.jsonValue()},
-                fh,
-            )
+        _write_json(
+            marker,
+            {"stage": stage, "rows": rows, "wall_ms": wall_ms,
+             "n_files": len(per_file), "committed_at": time.time(),
+             "schema": committed.schema.jsonValue()},
+        )
         return committed
 
     def stage(self, stage: str, build, resume: bool = True) -> DataFrame:
@@ -176,10 +193,29 @@ def run_pipeline(
     them only while the triples stage builds, so a committed ``fast``
     rerun skips the link phase.
 
+    ``<workdir>/_run.json`` records ``n_pages`` and ``seed``: resuming a
+    workdir built with other values raises ``ValueError``, and
+    ``resume=False`` uncommits every stage before it rewrites the record.
+
     Returns a summary dict (rows per stage, triple P/R when evaluate=True,
     wall seconds, triples/sec)."""
     sc = StageCommitter(workdir)
     t_start = time.time()
+    run_key = {"n_pages": n_pages, "seed": seed}
+    key_path = os.path.join(workdir, "_run.json")
+    if not resume:
+        # even a rebuild killed before its last stage must not leave an
+        # earlier run's later stages committed
+        sc.uncommit_all()
+    elif os.path.exists(key_path):
+        with open(key_path) as fh:
+            recorded = json.load(fh)
+        if recorded != run_key:
+            raise ValueError(
+                f"{workdir} holds the run {recorded}, not {run_key}; "
+                "pass resume=False to rebuild it"
+            )
+    _write_json(key_path, run_key)
 
     def build_pages_gold():
         return corpus.gen_pages_with_gold(spark, n_pages, seed)

@@ -227,7 +227,7 @@ def gaz_spans(documents: DataFrame, gaz: dict[str, str]) -> DataFrame:
         documents.select("doc_id", "lang", ws_tokens().alias("tokens")), gaz
     )
     return (
-        tagged.withColumn("span", F.explode(spans_bio_col("tags")))
+        tagged.withColumn("span", F.explode(spans_bio_col()))
         .select(
             "doc_id",
             "lang",
@@ -461,7 +461,7 @@ def q_kg_oov_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     vocab = sorted(set(GAZ_PRED) | set(GAZ_GOLD) | set(STOPWORDS["en"]))
     toks = docs.select(F.explode(ws_tokens()).alias("token"))
-    vdf = spark.createDataFrame([(w,) for w in vocab], "token string")
+    vdf = local_frame(spark, [(w,) for w in vocab], "token string")
     return (
         toks.join(F.broadcast(vdf), "token", "left_anti")
         .groupBy("token")
@@ -1139,8 +1139,8 @@ def q_kg_qa_contexts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents")
     sents = docs.select("doc_id", ws_tokens().alias("tokens"))
-    tag_names = spark.createDataFrame(
-        QA_TAG_NAMES, "entity_type string, tag_name string"
+    tag_names = local_frame(
+        spark, QA_TAG_NAMES, "entity_type string, tag_name string"
     )
     det = detect_contexts(sents).agg(
         F.count("*").alias("n_contexts"),

@@ -263,7 +263,6 @@ def incremental_triples(
         )
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        cleanup: list[DataFrame] = []
         # foreachBatch hands a LAZY frame, and the link+triple stages run
         # more than one action (the surface-dimension materialization
         # inside link_mentions, then the write). Unpinned, every action
@@ -278,6 +277,7 @@ def incremental_triples(
         # multiplies under re-execution). The batch pipeline gets the
         # same property from its committed stage tables.
         mentions = mentions_from_pages(batch_df).drop("warc_ts").persist()
+        cleanup = [mentions]
         try:
             linked = link_mentions(mentions, alias_df, cleanup=cleanup)
             triples = make_triples(linked)
@@ -285,7 +285,6 @@ def incremental_triples(
                 f"{out_dir}/epoch={int(epoch_id)}"
             )
         finally:
-            mentions.unpersist()
             for df in cleanup:
                 df.unpersist()
 

@@ -30,10 +30,13 @@ def test_exact_dedup_flags_identical_text(spark):
 
 
 def test_minhash_lsh_finds_near_dups_not_distinct_docs(spark):
+    cleanup: list = []
     pairs = {
         (r["doc_a"], r["doc_b"])
-        for r in dedup.minhash_lsh_pairs(_docs(spark)).collect()
+        for r in dedup.minhash_lsh_pairs(_docs(spark), cleanup=cleanup).collect()
     }
+    for df in cleanup:
+        df.unpersist()
     assert (0, 1) in pairs  # identical
     assert (0, 2) in pairs and (1, 2) in pairs  # near dup
     assert (0, 3) not in pairs and (3, 4) not in pairs
@@ -50,10 +53,15 @@ def test_ngram_jaccard_values(spark):
 
 
 def test_simhash_hamming_orders_similarity(spark):
+    cleanup: list = []
     pairs = {
         (r["doc_a"], r["doc_b"]): r["hamming"]
-        for r in dedup.simhash_pairs(_docs(spark), max_hamming=15).collect()
+        for r in dedup.simhash_pairs(
+            _docs(spark), max_hamming=15, cleanup=cleanup
+        ).collect()
     }
+    for df in cleanup:
+        df.unpersist()
     assert pairs[(0, 1)] == 0  # identical text → identical fingerprint
     assert pairs[(0, 2)] <= 10  # one-word swap → few bits flip
 

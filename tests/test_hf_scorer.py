@@ -49,9 +49,10 @@ def test_plan_identical_under_scorer_swap(spark):
 
 def test_classify_plan_identical_under_scorer_swap(spark):
     from split_ner_spark.ops.classify import classify_mentions
+    from split_ner_spark.ops.detect import DeterministicScorer
 
     m = spark.createDataFrame([("Acme Corp",)], "surface string")
-    a = classify_mentions(m, use_udf=True)
+    a = classify_mentions(m, scorer=DeterministicScorer())
     b = classify_mentions(m, scorer=HFScorer("d", classify_model_path="c"))
     assert a.schema == b.schema
     assert _plan_skeleton(a) == _plan_skeleton(b)

@@ -24,16 +24,12 @@ from split_ner_spark.ops.assemble import assemble_untyped
 from split_ner_spark.pipeline import alias_dim
 
 
-def canonicalize_self_linked(
-    linked: DataFrame,
-    jaccard_threshold: float = 0.7,
-    num_hashes: int = 16,
-    bands: int = 8,
-) -> DataFrame:
+def canonicalize_self_linked(linked: DataFrame) -> DataFrame:
     """Merge variant UNKNOWN surfaces: mentions the dictionary could not
     link (linked_via='self') whose normalized surfaces are near-duplicates
-    (char-3-gram Jaccard ≥ threshold under LSH blocking) collapse into one
-    component; canonical_id becomes ``surface:<component representative>``.
+    (char-3-gram Jaccard ≥ ``SELF_JACCARD`` under LSH blocking) collapse
+    into one component; canonical_id becomes
+    ``surface:<component representative>``.
 
     This is the C1-upgrade canonicalization of SURVEY §2 applied inside
     the pipeline: dictionary-linked mentions are untouched; candidate new
@@ -49,10 +45,7 @@ def canonicalize_self_linked(
     comp = self_surface_canon_map(
         linked.filter(F.col("linked_via") == "self")
         .select("surface_norm")
-        .distinct(),
-        jaccard_threshold=jaccard_threshold,
-        num_hashes=num_hashes,
-        bands=bands,
+        .distinct()
     )
     if comp is None:
         return linked
@@ -83,12 +76,15 @@ def test_canonicalize_fold_matches_composition(spark):
     mentions = mentions.unionByName(planted)
     alias = alias_dim(spark)
 
-    old = canonicalize_self_linked(link_mentions(mentions, alias))
-    new = link_mentions(mentions, alias, canonicalize_self=True)
+    cleanup: list = []
+    old = canonicalize_self_linked(link_mentions(mentions, alias, cleanup=cleanup))
+    new = link_mentions(mentions, alias, cleanup=cleanup, canonicalize_self=True)
 
     assert old.columns == new.columns
     a = sorted(map(tuple, old.collect()))
     b = sorted(map(tuple, new.collect()))
+    for df in cleanup:
+        df.unpersist()
     assert a == b
     # the slice must actually exercise the merge: some self ids exist and
     # at least one surface was remapped off its own-surface id

@@ -54,7 +54,7 @@ def test_salted_by_subject_no_residual_cache(spark):
         [(f"s{i % 3}", "p", f"o{i}") for i in range(300)],
         "subj string, pred string, obj string",
     )
-    out = salted_by_subject(tri, n_partitions=4)
+    out = salted_by_subject(tri, n_partitions=4, detect_on=tri, detect_col="subj")
     assert out.count() == 300
     assert _cache_empty(spark)
 
@@ -71,7 +71,9 @@ def test_salted_by_subject_values_unchanged_and_hot_spread(spark):
         + [(f"cold{i}", "p", "o") for i in range(50)],
         "subj string, pred string, obj string",
     )
-    out = salted_by_subject(tri, n_partitions=8, n_salts=8)
+    out = salted_by_subject(
+        tri, n_partitions=8, n_salts=8, detect_on=tri, detect_col="subj"
+    )
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, tri.collect()))
     # the planted hot subject (89% of rows) must be detected and spread
     hot_parts = (

@@ -143,3 +143,50 @@ def test_stage_f1_report(spark, workdir, summary):
     _, macro = R.micro_macro(gold_tags)
     assert abs(rep2["__micro__"]["f1"] - mf1) < 1e-12
     assert abs(rep2["__macro__"]["f1"] - macro) < 1e-12
+
+
+def test_kill_between_rmtree_and_rename_resumes(spark, tmp_path, monkeypatch):
+    """A rebuild killed after the committed table is deleted and before
+    its replacement is renamed into place leaves the stage uncommitted:
+    the next resume=True run rebuilds it instead of reopening a missing
+    table, and returns the first run's rows and triples."""
+    from split_ner_spark import pipeline
+
+    wd = str(tmp_path / "fast")
+    kw = dict(n_pages=200, evaluate=False, granularity="fast")
+    first = pipeline.run_pipeline(spark, wd, resume=False, **kw)
+
+    class Killed(Exception):
+        pass
+
+    real_rename = os.rename
+
+    def rename(src, dst, *a, **k):
+        if dst == os.path.join(wd, "mentions"):
+            raise Killed(dst)
+        return real_rename(src, dst, *a, **k)
+
+    with monkeypatch.context() as m:
+        m.setattr(pipeline.os, "rename", rename)
+        with pytest.raises(Killed):
+            pipeline.run_pipeline(spark, wd, resume=False, **kw)
+    assert not os.path.exists(os.path.join(wd, "mentions"))
+    again = pipeline.run_pipeline(spark, wd, **kw)
+    assert again["rows"] == first["rows"]
+    assert again["triples"] == first["triples"]
+
+
+def test_resume_rejects_other_run_parameters(spark, tmp_path):
+    """Resuming a workdir built with other n_pages raises instead of
+    returning the old tables; resume=False rebuilds and re-records."""
+    wd = str(tmp_path / "fast")
+    kw = dict(evaluate=False, granularity="fast")
+    first = run_pipeline(spark, wd, n_pages=100, resume=False, **kw)
+    with pytest.raises(ValueError, match="'n_pages': 100.*'n_pages': 150"):
+        run_pipeline(spark, wd, n_pages=150, **kw)
+    other = run_pipeline(spark, wd, n_pages=150, resume=False, **kw)
+    assert other["rows"]["mentions"] > first["rows"]["mentions"]
+    with open(os.path.join(wd, "_run.json")) as fh:
+        assert json.load(fh) == {"n_pages": 150, "seed": corpus.SEED}
+    again = run_pipeline(spark, wd, n_pages=150, **kw)
+    assert again["rows"] == other["rows"]

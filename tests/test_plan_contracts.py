@@ -56,7 +56,10 @@ def test_link_joins_are_broadcast(spark):
         [("spark", "eng:spark", "engine")],
         "alias string, canonical_id string, entity_type string",
     )
-    p = plan_of(link_mentions(mentions, alias, fuzzy=False))
+    cleanup: list = []
+    p = plan_of(link_mentions(mentions, alias, fuzzy=False, cleanup=cleanup))
+    for df in cleanup:
+        df.unpersist()
     assert "SortMergeJoin" not in p
     assert "BroadcastHashJoin" in p
 
@@ -94,7 +97,7 @@ def test_salted_write_no_join(spark):
         [("s", "p", "o")] * 5, "subj string, pred string, obj string"
     )
     # detection picks "s" (every row), so the isin literal is in the plan
-    p = plan_of(salted_by_subject(tri, 4))
+    p = plan_of(salted_by_subject(tri, 4, detect_on=tri, detect_col="subj"))
     assert p.count("Exchange") == 1
     assert "Join" not in p
 
@@ -107,6 +110,10 @@ def test_alias_dim_is_local_relation(spark):
 
     p = alias_dim(spark)._jdf.queryExecution().optimizedPlan().toString()
     assert "LocalRelation" in p and "LogicalRDD" not in p, p
+    # the vocabulary dim of X3 and the tag-name dim of Q2 likewise
+    for q in (Q.q_kg_oov_tokens, Q.q_kg_qa_contexts):
+        p = q(spark, SF_DIR)._jdf.queryExecution().optimizedPlan().toString()
+        assert "LocalRelation" in p and "LogicalRDD" not in p, (q.__name__, p)
 
 
 def test_hot_subject_detection_one_action(spark):
@@ -132,7 +139,10 @@ def test_hot_subject_detection_one_action(spark):
             sc.setLocalProperty("spark.jobGroup.id", None)
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    detect = jobs_of("detect", lambda: salted_by_subject(tri, 4))
+    detect = jobs_of(
+        "detect",
+        lambda: salted_by_subject(tri, 4, detect_on=tri, detect_col="subj"),
+    )
     one = jobs_of(
         "one_action",
         lambda: tri.groupBy("subj").count().orderBy(F.desc("count"))
@@ -166,7 +176,12 @@ def test_no_cartesian_in_lsh_candidates(spark):
     never a cartesian or nested-loop join."""
     from split_ner_spark.ops import dedup
 
-    p = plan_of(dedup.minhash_lsh_pairs(Q.load(spark, SF_DIR, "documents")))
+    cleanup: list = []
+    p = plan_of(
+        dedup.minhash_lsh_pairs(Q.load(spark, SF_DIR, "documents"), cleanup=cleanup)
+    )
+    for df in cleanup:
+        df.unpersist()
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
 

@@ -23,7 +23,9 @@ def test_salting_spreads_hot_subject(spark):
     rows += [(f"cold:{i % 500}", "mentioned_in", f"url{i}") for i in range(5000)]
     tri = spark.createDataFrame(rows, "subj string, pred string, obj string")
     n_part = 16
-    salted = salted_by_subject(tri, n_partitions=n_part, n_salts=16)
+    salted = salted_by_subject(
+        tri, n_partitions=n_part, n_salts=16, detect_on=tri, detect_col="subj"
+    )
     sizes = (
         salted.withColumn("pid", F.spark_partition_id())
         .groupBy("pid")
@@ -42,12 +44,14 @@ def test_salting_small_input_exact_fallback(spark):
     (expected hits < 1), detection must fall back to an exact count so the
     salting a micro-batch needs still engages."""
     # 300 rows total — a 5% sample holds ~15 rows; without the fallback the
-    # hot key (33% of data, >> hot_fraction=0.01) could be missed entirely
+    # hot key (33% of data, >> HOT_FRACTION=0.01) could be missed entirely
     # on an unlucky seed, and an empty sample disables salting outright.
     rows = [("hot:tiny", "mentioned_in", f"url{i}") for i in range(100)]
     rows += [(f"cold:{i}", "mentioned_in", f"url{i}") for i in range(200)]
     tri = spark.createDataFrame(rows, "subj string, pred string, obj string")
-    salted = salted_by_subject(tri, n_partitions=8, n_salts=8)
+    salted = salted_by_subject(
+        tri, n_partitions=8, n_salts=8, detect_on=tri, detect_col="subj"
+    )
     sizes = (
         salted.withColumn("pid", F.spark_partition_id())
         .groupBy("pid")
@@ -109,7 +113,7 @@ def test_spark_bio_assembler_equals_python_on_random_tags(spark):
     )
     got = {
         r["i"]: [(s["tag"], s["start"], s["end"]) for s in r["spans"]]
-        for r in df.select("i", spans_bio_col("tags").alias("spans")).collect()
+        for r in df.select("i", spans_bio_col().alias("spans")).collect()
     }
     for i, tags in enumerate(cases):
         assert got[i] == get_spans_bio(tags), f"case {i}: {tags}"
@@ -126,7 +130,7 @@ def test_spark_bioes_assembler_equals_python_on_random_labels(spark):
     )
     got = {
         r["i"]: [(s["start"], s["end"]) for s in r["spans"]]
-        for r in df.select("i", spans_bioes_col("labels").alias("spans")).collect()
+        for r in df.select("i", spans_bioes_col().alias("spans")).collect()
     }
     for i, labels in enumerate(cases):
         assert got[i] == get_spans_bioes(labels), f"case {i}: {labels}"

@@ -41,7 +41,7 @@ def test_spans_bioes_exhaustive(spark):
     )
     got = {
         r["id"]: [(s["start"], s["end"]) for s in r["spans"]]
-        for r in df.select("id", spans_bioes_col("labels").alias("spans")).collect()
+        for r in df.select("id", spans_bioes_col().alias("spans")).collect()
     }
     for i, c in enumerate(cases):
         assert got[i] == R.get_spans_bioes(c), (c, got[i])
@@ -55,7 +55,7 @@ def test_spans_bio_exhaustive(spark):
     )
     got = {
         r["id"]: [(s["tag"], s["start"], s["end"]) for s in r["spans"]]
-        for r in df.select("id", spans_bio_col("tags").alias("spans")).collect()
+        for r in df.select("id", spans_bio_col().alias("spans")).collect()
     }
     for i, c in enumerate(cases):
         assert got[i] == R.get_spans_bio(c), (c, got[i])
