@@ -6,10 +6,11 @@ Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": <sf>, "triples_per_sec": ...}
 
-The pipeline stage (synthetic corpus scaled to the sf, full
-segment→detect→assemble→classify→link→triples run with committed stage
-tables) is the BASELINE.json headline — its triples/sec is reported
-alongside per-query latencies. Scaling-efficiency evidence (same job at
+The pipeline stage (synthetic corpus scaled to the sf, one
+``run_pipeline`` run: the fused generate→detect→classify mentions stage
+and the link→triples stage, each committed as a table) is the
+BASELINE.json headline — its triples/sec is reported alongside per-query
+latencies. Scaling-efficiency evidence (same job at
 local[8] vs local[32]) lives in scripts/scaling_bench.py / BASELINE.md.
 """
 
@@ -252,7 +253,7 @@ def main() -> None:
     try:
         run_pipeline(spark, warm, n_pages=max(200, n_pages // 10),
                      resume=False, evaluate=False,
-                     triple_partitions=max(cpus * 2, 32), granularity="fast")
+                     triple_partitions=max(cpus * 2, 32))
     finally:
         shutil.rmtree(warm, ignore_errors=True)
     # three measured runs, SAME steady-state protocol as
@@ -269,7 +270,7 @@ def main() -> None:
             t0 = time.time()
             summary = run_pipeline(
                 spark, workdir, n_pages=n_pages, resume=False, evaluate=False,
-                triple_partitions=max(cpus * 2, 32), granularity="fast",
+                triple_partitions=max(cpus * 2, 32),
             )
             walls.append(round(time.time() - t0, 3))
         finally:

@@ -7,9 +7,11 @@ plan claims in OPTIMIZATION_r06.md are checkable.
 
 Usage:
   python bench_extra.py [--sf-dir DIR] [--reps N] [--plans-dir DIR]
-                        [--queries a,b,c] [--pipeline]
+                        [--plans-suffix S] [--queries a,b,c|docemb]
 
 Prints one JSON line with per-query noop walls (min and median of reps).
+Whole-pipeline walls come from bench.py, per-phase pipeline numbers from
+``perfbench/run.py --trace 1``.
 """
 from __future__ import annotations
 
@@ -22,7 +24,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from bench import HEADLINE, sf_from_dir  # noqa: E402
+from bench import HEADLINE  # noqa: E402
 from split_ner_spark.queries import QUERIES, drain_cache  # noqa: E402
 from split_ner_spark.session import get_spark  # noqa: E402
 
@@ -56,9 +58,6 @@ def main() -> None:
     ap.add_argument("--plans-suffix", default="before")
     ap.add_argument("--queries", default=None,
                     help="comma list; 'docemb' = doc/emb-only set")
-    ap.add_argument("--pipeline", action="store_true",
-                    help="also time two fast-mode pipeline runs (whole-run walls)")
-    ap.add_argument("--pipeline-pages", type=int, default=None)
     args = ap.parse_args()
 
     if args.queries == "docemb":
@@ -102,38 +101,6 @@ def main() -> None:
         out["queries_min"][name] = min(runs)
         print(f"# {name}: median={out['queries'][name]} runs={runs}",
               file=sys.stderr)
-
-    if args.pipeline:
-        import shutil
-        import tempfile
-
-        from split_ner_spark.pipeline import run_pipeline
-
-        sf = args.pipeline_pages or max(
-            2_000, int(20_000_000 * sf_from_dir(args.sf_dir)))
-        tmp_root = "/dev/shm" if os.path.isdir("/dev/shm") else None
-        warm = tempfile.mkdtemp(prefix="bx_warm_", dir=tmp_root)
-        try:
-            run_pipeline(spark, warm, n_pages=max(200, sf // 10),
-                         resume=False, evaluate=False,
-                         triple_partitions=max(cpus * 2, 32),
-                         granularity="fast")
-        finally:
-            shutil.rmtree(warm, ignore_errors=True)
-        walls = []
-        for _ in range(2):
-            workdir = tempfile.mkdtemp(prefix="bx_pipe_", dir=tmp_root)
-            try:
-                t0 = time.time()
-                run_pipeline(spark, workdir, n_pages=sf, resume=False,
-                             evaluate=False,
-                             triple_partitions=max(cpus * 2, 32),
-                             granularity="fast")
-                walls.append(round(time.time() - t0, 3))
-            finally:
-                shutil.rmtree(workdir, ignore_errors=True)
-        out["pipeline_pages"] = sf
-        out["pipeline_walls"] = walls
 
     spark.stop()
     print(json.dumps(out))

@@ -20,6 +20,10 @@ Usage:
   git archive <baseline-commit> | tar -x -C /tmp/baseline
   python scripts/ab_pipeline.py /tmp/baseline /path/to/repo [n_pairs] [n_pages]
 
+Both arms call ``run_pipeline`` with its defaults: a baseline from before
+the per-stage commit graph was deleted runs that six-commit graph, not
+the fused two-commit one.
+
 Round-6 second-session result (baseline b0fe45d vs final, 6 pairs, 2M
 pages): old best 34.0 / median 44.0 -> new best 21.0 / median 35.0,
 triples == 7,472,901 in all 12 runs.
@@ -43,13 +47,12 @@ RUN_ONE = textwrap.dedent(
     spark = get_spark(cpus=len(os.sched_getaffinity(0)))
     warm = tempfile.mkdtemp(prefix="ab_warm_")
     run_pipeline(spark, warm, n_pages=max(200, int(sys.argv[2]) // 10),
-                 resume=False, evaluate=False, granularity="fast",
-                 triple_partitions=64)
+                 resume=False, evaluate=False, triple_partitions=64)
     shutil.rmtree(warm)
     wd = tempfile.mkdtemp(prefix="ab_run_")
     t0 = time.time()
     s = run_pipeline(spark, wd, n_pages=int(sys.argv[2]), resume=False,
-                     evaluate=False, granularity="fast", triple_partitions=64)
+                     evaluate=False, triple_partitions=64)
     print(f"RESULT {root} wall={time.time()-t0:.2f} triples={s['triples']}",
           flush=True)
     shutil.rmtree(wd)

@@ -7,7 +7,7 @@ Launch (BASELINE.json requirement — ``spark-submit --py-files``):
     spark-submit --master 'local[32]' \\
         --py-files dist/split_ner_spark.zip \\
         scripts/run_pipeline.py \\
-        --workdir /tmp/kg_run --pages 20000 [--no-resume] [--fast] [--evaluate]
+        --workdir /tmp/kg_run --pages 20000 [--no-resume] [--evaluate]
 
 On a real cluster only ``--master`` (and executor memory/instances conf)
 changes; the script body is identical. The job is resumable BY DEFAULT:
@@ -30,8 +30,6 @@ def main() -> None:
                     action="store_false", default=True,
                     help="rebuild every stage even if committed in --workdir "
                          "(default: resume from the last committed stage)")
-    ap.add_argument("--fast", action="store_true",
-                    help="fused two-commit DAG instead of per-stage commits")
     ap.add_argument("--evaluate", action="store_true",
                     help="compute triple P/R vs the analytic goldens")
     ap.add_argument("--triple-partitions", type=int, default=64)
@@ -51,7 +49,6 @@ def main() -> None:
         resume=args.resume,
         evaluate=args.evaluate,
         triple_partitions=args.triple_partitions,
-        granularity="fast" if args.fast else "full",
     )
     print(json.dumps(summary))
     spark.stop()

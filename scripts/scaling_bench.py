@@ -86,7 +86,7 @@ def run_one(cpus: int, n_pages: int, light: bool = False) -> None:
     try:
         run_pipeline(spark, warm, n_pages=max(2000, n_pages // 10),
                      resume=False, evaluate=False,
-                     triple_partitions=max(cpus * 2, 32), granularity="fast")
+                     triple_partitions=max(cpus * 2, 32))
     finally:
         shutil.rmtree(warm, ignore_errors=True)
 
@@ -122,7 +122,7 @@ def run_one(cpus: int, n_pages: int, light: bool = False) -> None:
             t0 = time.time()
             summary = run_pipeline(
                 spark, workdir, n_pages=n_pages, resume=False, evaluate=False,
-                triple_partitions=max(cpus * 2, 32), granularity="fast",
+                triple_partitions=max(cpus * 2, 32),
             )
             job_walls.append(round(time.time() - t0, 2))
         finally:

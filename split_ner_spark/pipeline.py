@@ -17,10 +17,11 @@ On a real deployment the committer is one `writeTo(...).append()` against
 Iceberg with snapshot ids in place of commit markers; the stage graph and
 resume logic are identical (atomic dir rename ≈ snapshot commit).
 
-Stage graph (each stage reads its predecessor's COMMITTED table, so
+Stage graph (the triples stage reads the COMMITTED mentions table, so
 resume is real, not lineage replay):
 
-    pages → sentences → detected → mentions (typed) → linked → triples
+    mentions (generate→segment→detect→assemble→classify, one fused
+    Python stage) → triples (link→canonicalize→triples→salted write)
 """
 
 from __future__ import annotations
@@ -34,12 +35,9 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import types as T
 
 from . import corpus
-from .ops.assemble import assemble_untyped
-from .ops.classify import classify_mentions
-from .ops.detect import detect_spans
+from .ops.fused import fused_mentions
 from .ops.link import link_mentions
 from .ops.metrics import triple_pr
-from .ops.segment import segment_pages
 from .ops.triples import make_triples, salted_by_subject
 from .session import local_frame
 
@@ -58,7 +56,6 @@ class StageCommitter:
         self.base = base_dir
         os.makedirs(base_dir, exist_ok=True)
         self.lineage_path = os.path.join(base_dir, "_lineage.jsonl")
-        self.stages: list[str] = []  # stages run through stage(), in order
 
     def path(self, stage: str) -> str:
         return os.path.join(self.base, stage)
@@ -151,7 +148,6 @@ class StageCommitter:
     def stage(self, stage: str, build, resume: bool = True) -> DataFrame:
         """Memoized stage: reuse the committed table or build+commit it."""
         spark = SparkSession.getActiveSession()
-        self.stages.append(stage)
         if resume and self.is_committed(stage):
             return self.read(spark, stage)
         return self.write(build(), stage)
@@ -175,23 +171,19 @@ def run_pipeline(
     resume: bool = True,
     evaluate: bool = True,
     triple_partitions: int = 64,
-    granularity: str = "full",
+    granularity: str = "fast",
 ) -> dict:
-    """Full pipeline over the deterministic synthetic corpus.
+    """Full pipeline over the deterministic synthetic corpus: one lazy DAG
+    with two commit points, ``mentions`` and ``triples``.
 
-    ``granularity``:
-    - ``"full"`` — commit every stage (fine-grained resume; default).
-    - ``"fast"`` — one fused lazy DAG with two commit points (mentions,
-      triples). The chain gen→segment→detect→assemble→classify is narrow
-      (no shuffle), so fusing removes four materialization barriers — the
-      Spark-first shape (single DAG) that the reference's file-glued
-      pipeline lacks (/root/reference/README.md:130-148); resume still
-      works at the two commits.
+    The chain generate→segment→detect→assemble→classify is narrow (no
+    shuffle), so it runs as one fused Python stage with no materialization
+    barrier, where the reference glues its two model stages through
+    files. The triples stage caches the linked mentions only while it
+    builds, so a rerun over a committed workdir skips the link phase.
 
-    After the mentions prefix both share one link→triples path. ``full``
-    commits the linked mentions as the ``linked`` stage; ``fast`` caches
-    them only while the triples stage builds, so a committed ``fast``
-    rerun skips the link phase.
+    ``granularity`` accepts only ``"fast"``; any other value raises
+    ``ValueError``.
 
     ``<workdir>/_run.json`` records ``n_pages`` and ``seed``: resuming a
     workdir built with other values raises ``ValueError``, and
@@ -199,6 +191,8 @@ def run_pipeline(
 
     Returns a summary dict (rows per stage, triple P/R when evaluate=True,
     wall seconds, triples/sec)."""
+    if granularity != "fast":
+        raise ValueError(f"granularity must be 'fast', not {granularity!r}")
     sc = StageCommitter(workdir)
     t_start = time.time()
     run_key = {"n_pages": n_pages, "seed": seed}
@@ -217,82 +211,47 @@ def run_pipeline(
             )
     _write_json(key_path, run_key)
 
-    def build_pages_gold():
-        return corpus.gen_pages_with_gold(spark, n_pages, seed)
+    mentions = sc.stage(
+        "mentions", lambda: fused_mentions(spark, n_pages, seed), resume
+    )
 
-    # the link dimension's caches, plus fast mode's linked cache
-    cleanup: list = []
-
-    def link() -> DataFrame:
-        # ``mentions`` is the committed table of the prefix below;
-        # canonicalize_self=True runs the self-surface LSH/CC work on the
-        # surface dimension instead of two extra fact-table scans
-        return link_mentions(
-            mentions, alias_dim(spark, seed), cleanup=cleanup,
-            canonicalize_self=True,
-        )
-
-    # Only the mentions prefix and what ``linked`` is depend on granularity.
-    pg = None
-    if granularity == "fast":
-        from .ops.fused import fused_mentions
-
-        mentions = sc.stage(
-            "mentions",
-            lambda: fused_mentions(spark, n_pages, seed),
-            resume,
-        )
-
-        def linked() -> DataFrame:
-            # make_triples reads the linked mentions four times
-            # (typed/mentioned/co-mention a+b) and hot-subject detection
-            # once more, so they are cached — in full mode the committed
-            # "linked" table plays this role. Only the four columns
-            # make_triples needs: ~4x smaller than the full mention rows.
-            # Called only when the triples stage builds, so a committed
-            # rerun skips the link phase.
-            df = (
-                link()
-                .select("url", "sent_id", "canonical_id", "entity_type")
-                .cache()
-            )
-            cleanup.append(df)
-            return df
-    else:
-        pg = sc.stage("pages_gold", build_pages_gold, resume)
-        pages = corpus.pages(pg)
-
-        sents = sc.stage("sentences", lambda: segment_pages(pages), resume)
-        detected = sc.stage("detected", lambda: detect_spans(sents), resume)
-        mentions = sc.stage(
-            "mentions",
-            lambda: classify_mentions(assemble_untyped(detected)).drop("tokens"),
-            resume,
-        )
-        linked_table = sc.stage("linked", link, resume)
-
-        def linked() -> DataFrame:
-            return linked_table
-
+    cleanup: list = []  # the link dimension's caches and the linked cache
     cooccur_obs = None  # set only when the triples stage builds
 
     def build_triples() -> DataFrame:
         nonlocal cooccur_obs
-        lk = linked()
+        # canonicalize_self=True runs the self-surface LSH/CC work on the
+        # surface dimension instead of two extra fact-table scans.
+        # make_triples reads the linked mentions four times
+        # (typed/mentioned/co-mention a+b) and hot-subject detection once
+        # more, so they are cached — only the four columns make_triples
+        # needs: ~4x smaller than the full mention rows.
+        lk = (
+            link_mentions(
+                mentions, alias_dim(spark, seed), cleanup=cleanup,
+                canonicalize_self=True,
+            )
+            .select("url", "sent_id", "canonical_id", "entity_type")
+            .cache()
+        )
+        cleanup.append(lk)
         cooccur_obs = Observation("cooccur_cap")
         # hot-subject detection counts ``lk`` per canonical_id in one
-        # action (in fast mode that also fills its cache); canonical_id
-        # counts ≈ per-subject triple counts — a partitioning heuristic,
-        # so output values are unchanged. make_triples then executes
-        # exactly once, inside the write job.
+        # action, which also fills its cache; canonical_id counts ≈
+        # per-subject triple counts — a partitioning heuristic, so output
+        # values are unchanged. make_triples then executes exactly once,
+        # inside the write job.
         return salted_by_subject(
             make_triples(lk, observation=cooccur_obs), triple_partitions,
             detect_on=lk, detect_col="canonical_id",
         )
 
-    triples = sc.stage("triples", build_triples, resume)
-    for df in cleanup:
-        df.unpersist()
+    try:
+        triples = sc.stage("triples", build_triples, resume)
+    finally:
+        # a failed build or commit must not leave its caches behind either
+        for df in cleanup:
+            df.unpersist()
 
     wall_s = time.time() - t_start
     # Co-occurrence cap observability (VERDICT r4 #3): how many sentences
@@ -311,7 +270,7 @@ def run_pipeline(
                 json.dumps({"stage": "triples", "metric": "cooccur_cap",
                             **cooccur_metrics}) + "\n"
             )
-    rows = {s: sc.rows(s) for s in sc.stages}
+    rows = {s: sc.rows(s) for s in ("mentions", "triples")}
     summary = {
         "n_pages": n_pages,
         "rows": rows,
@@ -321,11 +280,8 @@ def run_pipeline(
         "cooccur_cap": cooccur_metrics,
     }
     if evaluate:
-        if pg is None:
-            pg = build_pages_gold()
-        gold = corpus.gold_mentions(pg)
-        golden = corpus.golden_triples(gold)
+        pg = corpus.gen_pages_with_gold(spark, n_pages, seed)
+        golden = corpus.golden_triples(corpus.gold_mentions(pg))
         summary["triple_match"] = triple_pr(triples, golden)
-    with open(os.path.join(workdir, "_report.json"), "w") as fh:
-        json.dump(summary, fh, indent=2)
+    _write_json(os.path.join(workdir, "_report.json"), summary)
     return summary

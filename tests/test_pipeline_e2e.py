@@ -2,15 +2,17 @@
 
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
 
-from split_ner_spark import corpus
+from split_ner_spark import corpus, pipeline
 from split_ner_spark import reference_impl as R
 from split_ner_spark.ops.metrics import f1_report
 from split_ner_spark.ops.segment import extracted_text
-from split_ner_spark.pipeline import run_pipeline
+from split_ner_spark.pipeline import StageCommitter, run_pipeline
 
 
 @pytest.fixture(scope="module")
@@ -33,28 +35,31 @@ def test_triple_pr_gate(summary):
 
 def test_stage_rows_sane(summary):
     rows = summary["rows"]
-    assert rows["pages_gold"] == 400
-    assert rows["sentences"] > rows["pages_gold"]
-    assert rows["detected"] == rows["sentences"]
-    assert rows["mentions"] == rows["linked"]
+    assert rows.keys() == {"mentions", "triples"}
+    assert rows["mentions"] > 0
     assert rows["triples"] > 0
 
 
-def test_resume_skips_committed_stages(spark, workdir, summary):
-    # all stages committed → rerun must not rebuild anything (fast) and
-    # must produce the identical report
+def test_resume_skips_committed_stages(spark, workdir, summary, monkeypatch):
+    # all stages committed → rerun must not rebuild anything, nor run the
+    # link phase, and must produce the identical report
+    def boom(*_args, **_kwargs):
+        raise AssertionError("link phase ran on a committed workdir")
+
+    monkeypatch.setattr(pipeline, "link_mentions", boom)
+    monkeypatch.setattr(pipeline, "salted_by_subject", boom)
     s2 = run_pipeline(spark, workdir, n_pages=400)
     assert s2["rows"] == summary["rows"]
     assert s2["triple_match"] == summary["triple_match"]
     # without evaluation a committed rerun runs no Spark job at all: the
-    # six committed tables reopen with the schemas their markers record
+    # two committed tables reopen with the schemas their markers record
     sc = spark.sparkContext
-    sc.setJobGroup("full_resume", "full_resume")
+    sc.setJobGroup("committed_resume", "committed_resume")
     try:
         s3 = run_pipeline(spark, workdir, n_pages=400, evaluate=False)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup("full_resume")) == 0
+    assert len(sc.statusTracker().getJobIdsForGroup("committed_resume")) == 0
     assert s3["rows"] == summary["rows"]
 
 
@@ -68,7 +73,7 @@ def test_kill_and_rerun_from_partial(spark, workdir, summary):
 def test_lineage_records(workdir, summary):
     lines = [json.loads(l) for l in open(os.path.join(workdir, "_lineage.jsonl"))]
     stages = {l["stage"] for l in lines}
-    assert {"pages_gold", "sentences", "detected", "mentions", "linked", "triples"} <= stages
+    assert stages == {"mentions", "triples"}
     part_lines = [l for l in lines if "metric" not in l]
     assert all(
         l["rows"] >= 0 and l["wall_ms"] >= 0 and l["partition_file"]
@@ -145,42 +150,117 @@ def test_stage_f1_report(spark, workdir, summary):
     assert abs(rep2["__macro__"]["f1"] - macro) < 1e-12
 
 
-def test_kill_between_rmtree_and_rename_resumes(spark, tmp_path, monkeypatch):
-    """A rebuild killed after the committed table is deleted and before
-    its replacement is renamed into place leaves the stage uncommitted:
-    the next resume=True run rebuilds it instead of reopening a missing
-    table, and returns the first run's rows and triples."""
-    from split_ner_spark import pipeline
+class Killed(Exception):
+    """The run was killed at a step of ``StageCommitter.write``."""
 
-    wd = str(tmp_path / "fast")
-    kw = dict(n_pages=200, evaluate=False, granularity="fast")
-    first = pipeline.run_pipeline(spark, wd, resume=False, **kw)
 
-    class Killed(Exception):
-        pass
+def _fault(point: str, wd: str, stage: str):
+    """``(target, name, replacement)``: kill the ``stage`` commit in ``wd``
+    at ``point`` of ``StageCommitter.write``; every other call goes
+    through."""
+    final = os.path.join(wd, stage)
+    marker = os.path.join(wd, f"_COMMIT.{stage}.json")
+    if point == "tmp_written":
+        real_parquet = DataFrameWriter.parquet
 
-    real_rename = os.rename
+        def parquet(self, path, *a, **k):
+            real_parquet(self, path, *a, **k)
+            if path == os.path.join(wd, f"_tmp.{stage}"):
+                raise Killed(path)
 
-    def rename(src, dst, *a, **k):
-        if dst == os.path.join(wd, "mentions"):
-            raise Killed(dst)
-        return real_rename(src, dst, *a, **k)
+        return DataFrameWriter, "parquet", parquet
+    if point == "rmtree":
+        real_rmtree = shutil.rmtree
 
+        def rmtree(path, *a, **k):
+            if path == final:
+                # killed part-way: one data file of the old table is gone
+                first = min(f for f in os.listdir(path) if f.endswith(".parquet"))
+                os.remove(os.path.join(path, first))
+                raise Killed(path)
+            return real_rmtree(path, *a, **k)
+
+        return pipeline.shutil, "rmtree", rmtree
+    if point == "rename":
+        real_rename = os.rename
+
+        def rename(src, dst, *a, **k):
+            if dst == final:
+                raise Killed(dst)
+            return real_rename(src, dst, *a, **k)
+
+        return pipeline.os, "rename", rename
+    if point == "footer":
+        real_footer = StageCommitter._footer_counts
+
+        def footer_counts(table_dir):
+            if table_dir == final:
+                raise Killed(table_dir)
+            return real_footer(table_dir)
+
+        return StageCommitter, "_footer_counts", staticmethod(footer_counts)
+    assert point == "marker"
+    real_write_json = pipeline._write_json
+
+    def write_json(path, obj):
+        if path == marker:
+            # killed mid-write: a torn tmp file, never the marker itself
+            with open(path + ".tmp", "w") as fh:
+                fh.write('{"stage": ')
+            raise Killed(path)
+        return real_write_json(path, obj)
+
+    return pipeline, "_write_json", write_json
+
+
+def _sorted_triples(spark, wd: str) -> list[tuple]:
+    return sorted(map(tuple, StageCommitter(wd).read(spark, "triples").collect()))
+
+
+@pytest.fixture(scope="module")
+def committed_100(spark, tmp_path_factory):
+    """A committed 100-page workdir, its summary and its sorted triples."""
+    wd = str(tmp_path_factory.mktemp("committed_100") / "wd")
+    first = run_pipeline(spark, wd, n_pages=100, resume=False, evaluate=False)
+    return wd, first, _sorted_triples(spark, wd)
+
+
+@pytest.mark.parametrize(
+    "point", ["tmp_written", "rmtree", "rename", "footer", "marker"]
+)
+@pytest.mark.parametrize("stage", ["mentions", "triples"])
+def test_fault_in_stage_commit_resumes(
+    spark, tmp_path, monkeypatch, committed_100, stage, point
+):
+    """A rebuild of a committed workdir killed at any step of a stage's
+    commit leaves no cached frame behind and leaves that stage
+    uncommitted: the next resume=True run rebuilds it instead of
+    reopening a missing or torn table, and returns the committed run's
+    rows and exactly its triples."""
+    base, first, triples = committed_100
+    wd = str(tmp_path / "wd")
+    shutil.copytree(base, wd)
+    jsc = spark.sparkContext._jsc
+
+    def persisted() -> set:
+        return set(jsc.getPersistentRDDs().keys())
+
+    before = persisted()
     with monkeypatch.context() as m:
-        m.setattr(pipeline.os, "rename", rename)
+        m.setattr(*_fault(point, wd, stage))
         with pytest.raises(Killed):
-            pipeline.run_pipeline(spark, wd, resume=False, **kw)
-    assert not os.path.exists(os.path.join(wd, "mentions"))
-    again = pipeline.run_pipeline(spark, wd, **kw)
+            run_pipeline(spark, wd, n_pages=100, resume=False, evaluate=False)
+    assert persisted() == before
+    again = run_pipeline(spark, wd, n_pages=100, evaluate=False)
     assert again["rows"] == first["rows"]
-    assert again["triples"] == first["triples"]
+    assert _sorted_triples(spark, wd) == triples
 
 
 def test_resume_rejects_other_run_parameters(spark, tmp_path):
     """Resuming a workdir built with other n_pages raises instead of
     returning the old tables; resume=False rebuilds and re-records."""
-    wd = str(tmp_path / "fast")
-    kw = dict(evaluate=False, granularity="fast")
+    wd = str(tmp_path / "wd")
+    kw = dict(evaluate=False)
     first = run_pipeline(spark, wd, n_pages=100, resume=False, **kw)
     with pytest.raises(ValueError, match="'n_pages': 100.*'n_pages': 150"):
         run_pipeline(spark, wd, n_pages=150, **kw)
