@@ -32,6 +32,38 @@ def test_fused_equals_staged(spark):
     assert len(a) > 100
 
 
+def test_fast_resume_skips_link_phase(spark, tmp_path, monkeypatch):
+    """A fully committed workdir resumes without running the link phase,
+    or any Spark job: the committed tables reopen with the schema their
+    markers record. With the triples marker gone, the rerun rebuilds the
+    same triples."""
+    from split_ner_spark import pipeline
+
+    wd = str(tmp_path / "fast")
+    first = pipeline.run_pipeline(spark, wd, n_pages=300, resume=False, evaluate=False)
+
+    def boom(*_args, **_kwargs):
+        raise AssertionError("link phase ran on a committed workdir")
+
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "link_mentions", boom)
+        m.setattr(pipeline, "salted_by_subject", boom)
+        sc = spark.sparkContext
+        sc.setJobGroup("fast_resume", "fast_resume")
+        try:
+            again = pipeline.run_pipeline(spark, wd, n_pages=300, evaluate=False)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("fast_resume")) == 0
+    assert again["rows"] == first["rows"]
+    assert again["triples"] == first["triples"]
+
+    os.remove(os.path.join(wd, "_COMMIT.triples.json"))
+    rebuilt = pipeline.run_pipeline(spark, wd, n_pages=300, evaluate=False)
+    assert rebuilt["rows"] == first["rows"]
+    assert rebuilt["triples"] == first["triples"]
+
+
 def test_workers_import_package_outside_checkout(tmp_path):
     """A driver started in another directory, with the checkout on its
     own ``sys.path`` only (no ``PYTHONPATH``), still runs the
