@@ -1,5 +1,6 @@
-"""Fused python pass: corpus-gen → extract → segment → detect → assemble →
-classify in ONE ``mapInPandas`` stage.
+"""Fused python pass: corpus-gen → detect → assemble → classify in ONE
+``mapInPandas`` stage (the generator emits each page's sentences, so
+there is no extract/segment step).
 
 Why this exists: chained ``mapInPandas`` stages each get their OWN python
 worker per task, so a 3-deep python chain at ``local[32]`` runs ~96
@@ -10,16 +11,18 @@ and one Arrow crossing — the python-side analog of whole-stage codegen,
 and the reason SURVEY §2.10 fixes the UDF surface to as few boundaries as
 possible.
 
-Semantics are IDENTICAL to the staged operators: the fused body calls the
-same pure-python twins (reference_impl.extract_text/ tokenize_fast/
-segment/ get_spans_bioes, detect.DeterministicScorer, classify_surface)
-that the staged Spark operators are pinned against; a test asserts
-fused == staged row-for-row.
+Semantics are IDENTICAL to the staged operators: the generator's
+sentences equal ``segment(tokenize_fast(extract_text(text)))`` of the
+same page, and the fused body calls the same scorer and classifier
+(detect.DeterministicScorer, classify_surface) that the staged Spark
+operators are pinned against; tests assert both, and fused == staged
+row-for-row.
 
-At a real 100 TB deployment the same fusion applies unchanged: the UDF
-reads ``pages`` rows instead of generating them (swap ``gen`` for the
-Iceberg scan) and the two transformer forwards replace the surrogate
-scorer inside the single worker.
+At a real 100 TB deployment the same fusion applies: the UDF reads
+``pages`` rows instead of generating them (swap ``gen`` for the Iceberg
+scan), derives each page's sentences from its text (the derivation the
+generator's sentences are pinned to), and the two transformer forwards
+replace the surrogate scorer inside the single worker.
 """
 
 from __future__ import annotations
@@ -31,22 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from .. import corpus
-from ..reference_impl import extract_text, segment, tokenize_fast
 from .classify import classify_surface
 from .detect import DeterministicScorer
-
-MENTIONS_TS_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("sent_id", T.IntegerType()),
-        T.StructField("start", T.IntegerType()),
-        T.StructField("end", T.IntegerType()),
-        T.StructField("surface", T.StringType()),
-        T.StructField("detect_score", T.DoubleType()),
-        T.StructField("entity_type", T.StringType()),
-    ]
-)
 
 MENTIONS_SCHEMA = T.StructType(
     [
@@ -64,13 +53,10 @@ MENTIONS_SCHEMA = T.StructType(
 def _mentions_for_page(page: dict, scorer: DeterministicScorer) -> list[tuple]:
     if page["lang"] != "en":
         return []
-    # round 6: sentences come straight from the generator when present
+    # sentences come straight from the generator
     # (corpus._gen_page(mentions_only=True) — pinned equal to
-    # segment∘tokenize_fast∘extract_text of the page text); the text path
-    # stays for real-page sources (mentions_from_pages).
-    sents = page.get("sents")
-    if sents is None:
-        sents = segment(tokenize_fast(extract_text(None, page["text"])))
+    # segment∘tokenize_fast∘extract_text of the page text)
+    sents = page["sents"]
     out = []
     url = page["url"]
     # detect_runs == get_spans_bioes(detect_labels(...)) + non-O count
@@ -123,30 +109,3 @@ def fused_mentions(
     ids = spark.range(0, n_pages, 1, partitions)
     return ids.mapInPandas(run, schema=MENTIONS_SCHEMA)
 
-
-def mentions_from_pages(pages: DataFrame) -> DataFrame:
-    """pages(url, warc_ts, text, lang, ...) → typed mentions (+ warc_ts),
-    one fused python stage. Stream-safe (stateless per batch): this is the
-    operator the incremental/streaming path uses, and the shape a real
-    deployment runs over an Iceberg pages scan."""
-    scorer = DeterministicScorer()
-    src = pages.select("url", "warc_ts", "text", "lang")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for url, ts, text, lang in zip(
-                pdf["url"], pdf["warc_ts"], pdf["text"], pdf["lang"]
-            ):
-                page = {"url": url, "text": text, "lang": lang}
-                for m in _mentions_for_page(page, scorer):
-                    rows.append((m[0], ts) + m[1:])
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "url", "warc_ts", "sent_id", "start", "end", "surface",
-                    "detect_score", "entity_type",
-                ],
-            )
-
-    return src.mapInPandas(run, schema=MENTIONS_TS_SCHEMA)

@@ -11,7 +11,8 @@ tie-break).
 
 Path 3 (miss): still-unmatched surfaces get a self canonical id
 ``surface:<norm>`` so downstream triples are still emitted (they become
-candidate new entities).
+candidate new entities); on the fuzzy path, near-duplicate self surfaces
+then share one ``surface:<representative>`` id (ops/canon.py).
 
 The expensive work runs on DISTINCT surfaces, not on mentions — the
 reference memoizes tokenization the same way
@@ -47,27 +48,29 @@ def link_mentions(
     *,
     cleanup: list,
     fuzzy: bool = True,
-    canonicalize_self: bool = False,
 ) -> DataFrame:
     """mentions(..., surface, entity_type) × alias(alias, canonical_id,
     entity_type) → + canonical_id, linked_via, final entity_type
     (dictionary type wins over the classifier's rule type when linked).
 
-    ``fuzzy=False`` skips the MinHash-LSH miss path (exact + self only) —
-    used where deterministic cross-engine reproducibility matters (the
-    DuckDB oracle twin) or when the dictionary is exhaustive.
+    ``fuzzy`` switches both MinHash-LSH passes together:
 
-    ``canonicalize_self=True`` (round 6) folds
-    :func:`..canon.self_surface_canon_map` into the surface dimension
-    BEFORE the fact join: near-duplicate self-linked surfaces collapse to
-    one ``surface:<representative>`` id. Row-identical to applying the
-    same map to the linked mentions afterwards (the reference composition
-    in tests/test_link_canon_fold.py) but runs the LSH +
-    connected-components work on the already-materialized |distinct
-    surfaces| dimension instead of re-scanning the mention fact table
-    twice (once for the distinct, a second time for the comp-map
-    application join) — at 2M pages this removed two full fact-table
-    passes from the pipeline's link phase.
+    - the dictionary-miss path: surfaces that miss the dictionary link to
+      their best alias at char-3-gram Jaccard ≥ ``FUZZY_JACCARD``;
+    - self-canonicalization: :func:`..canon.self_surface_canon_map` is
+      folded into the surface dimension BEFORE the fact join, so
+      near-duplicate self-linked surfaces collapse to one
+      ``surface:<representative>`` id. Row-identical to applying the
+      same map to the linked mentions afterwards (the reference
+      composition in tests/test_link_canon_fold.py) but runs the LSH +
+      connected-components work on the already-materialized |distinct
+      surfaces| dimension instead of re-scanning the mention fact table
+      twice — at 2M pages this removed two full fact-table passes from
+      the pipeline's link phase.
+
+    ``fuzzy=False`` runs neither (exact + self only) — used where
+    deterministic cross-engine reproducibility matters: xxhash64 LSH has
+    no DuckDB twin, so the oracle-checked queries link this way.
 
     The distinct-surface cache is unpersisted as soon as the final
     surface→entity dimension is materialized; that cached dimension is
@@ -164,12 +167,12 @@ def link_mentions(
     full_dim.count()
     # full_dim is materialized — its upstreams are no longer needed (an
     # LRU-evicted full_dim block would recompute from scratch, which is
-    # correct, just slower; a long-running stream must not accumulate them)
+    # correct, just slower)
     surfaces.unpersist()
     cleanup.append(full_dim)
 
     join_dim = full_dim
-    if canonicalize_self:
+    if fuzzy:
         # dimension-level canonicalization: full_dim is unique per
         # surface_norm and already cached, so the LSH self-join (one
         # action) runs on |distinct self surfaces| rows, and ``comp`` maps

@@ -220,17 +220,14 @@ def run_pipeline(
 
     def build_triples() -> DataFrame:
         nonlocal cooccur_obs
-        # canonicalize_self=True runs the self-surface LSH/CC work on the
-        # surface dimension instead of two extra fact-table scans.
+        # fuzzy linking (the default) also self-canonicalizes, on the
+        # surface dimension rather than with extra fact-table scans.
         # make_triples reads the linked mentions four times
         # (typed/mentioned/co-mention a+b) and hot-subject detection once
         # more, so they are cached — only the four columns make_triples
         # needs: ~4x smaller than the full mention rows.
         lk = (
-            link_mentions(
-                mentions, alias_dim(spark, seed), cleanup=cleanup,
-                canonicalize_self=True,
-            )
+            link_mentions(mentions, alias_dim(spark, seed), cleanup=cleanup)
             .select("url", "sent_id", "canonical_id", "entity_type")
             .cache()
         )
@@ -280,8 +277,14 @@ def run_pipeline(
         "cooccur_cap": cooccur_metrics,
     }
     if evaluate:
-        pg = corpus.gen_pages_with_gold(spark, n_pages, seed)
-        golden = corpus.golden_triples(corpus.gold_mentions(pg))
-        summary["triple_match"] = triple_pr(triples, golden)
+        # golden_triples reads the gold in several branches and triple_pr
+        # runs two actions over them; cached, the generator runs once
+        gold = corpus.gold_mentions(
+            corpus.gen_pages_with_gold(spark, n_pages, seed)
+        ).cache()
+        try:
+            summary["triple_match"] = triple_pr(triples, corpus.golden_triples(gold))
+        finally:
+            gold.unpersist()
     _write_json(os.path.join(workdir, "_report.json"), summary)
     return summary

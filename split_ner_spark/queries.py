@@ -123,8 +123,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # afterwards (bench.py does after every query; tests/test_no_cache_leak.py
 # runs EVERY registry entry and asserts the Spark cache manager ends
 # empty). A harness that never drains leaks at most one bounded dim per
-# leaky-query invocation — the long-lived callers (streaming foreachBatch,
-# pipeline stages) all clean up eagerly inline.
+# leaky-query invocation — the long-lived caller (the pipeline's triples
+# stage) cleans up eagerly inline.
 #
 # The registry is keyed by owning SparkSession (ADVICE r4): a multi-session
 # process drains each session's frames against THAT session only, and a
@@ -1046,9 +1046,10 @@ LINK_ALIAS_ROWS = [
 def _linked_triples(mentions: DataFrame) -> DataFrame:
     """The back-half tail of both oracle-checked chains: REAL
     ``link_mentions`` against the ``LINK_ALIAS_ROWS`` dictionary (exact
-    broadcast dictionary + self-link; fuzzy LSH off for cross-engine
-    determinism — xxhash64 has no DuckDB twin) → REAL ``make_triples``
-    union-distinct. Its DuckDB twin is :func:`_linked_triples_sql`."""
+    broadcast dictionary + self-link; fuzzy LSH and self-canonicalization
+    off for cross-engine determinism — xxhash64 has no DuckDB twin) → REAL
+    ``make_triples`` union-distinct. Its DuckDB twin is
+    :func:`_linked_triples_sql`."""
     from .ops.link import link_mentions
     from .ops.triples import make_triples
 

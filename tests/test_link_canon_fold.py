@@ -1,5 +1,7 @@
-"""link_mentions(canonicalize_self=True) must be row-identical to the
-round-5 composition canonicalize_self_linked(link_mentions(...)).
+"""Fuzzy link_mentions (which folds self-canonicalization into its
+surface dimension) must be row-identical to the round-5 composition
+canonicalize_self_linked(link_mentions(...)), where the inner link is
+fuzzy but runs no self-canonicalization.
 
 The corpus slice is sized so the fuzzy/self paths are exercised: fuzzy
 surfaces (concatenated corp variants) miss the dictionary, and FN-noise
@@ -18,6 +20,7 @@ from split_ner_spark import corpus
 from split_ner_spark.ops.canon import self_surface_canon_map
 from split_ner_spark.ops.classify import classify_mentions
 from split_ner_spark.ops.detect import detect_spans
+from split_ner_spark.ops import link
 from split_ner_spark.ops.link import link_mentions
 from split_ner_spark.ops.segment import segment_pages
 from split_ner_spark.ops.assemble import assemble_untyped
@@ -38,10 +41,9 @@ def canonicalize_self_linked(linked: DataFrame) -> DataFrame:
 
     NOTE (round 6): re-derives the distinct self surfaces by scanning the
     mention-level input. When the linker's surface dimension is already
-    materialized, prefer ``link_mentions(..., canonicalize_self=True)``,
-    which runs :func:`self_surface_canon_map` at dimension level and is
-    pinned row-identical to this composition by
-    tests/test_link_canon_fold.py."""
+    materialized, prefer fuzzy ``link_mentions(...)``, which runs
+    :func:`self_surface_canon_map` at dimension level and is pinned
+    row-identical to this composition by tests/test_link_canon_fold.py."""
     comp = self_surface_canon_map(
         linked.filter(F.col("linked_via") == "self")
         .select("surface_norm")
@@ -63,7 +65,7 @@ def canonicalize_self_linked(linked: DataFrame) -> DataFrame:
     return out
 
 
-def test_canonicalize_fold_matches_composition(spark):
+def test_canonicalize_fold_matches_composition(spark, monkeypatch):
     pages = corpus.pages(corpus.gen_pages_with_gold(spark, 800))
     mentions = classify_mentions(
         assemble_untyped(detect_spans(segment_pages(pages)))
@@ -77,8 +79,13 @@ def test_canonicalize_fold_matches_composition(spark):
     alias = alias_dim(spark)
 
     cleanup: list = []
-    old = canonicalize_self_linked(link_mentions(mentions, alias, cleanup=cleanup))
-    new = link_mentions(mentions, alias, cleanup=cleanup, canonicalize_self=True)
+    # the operator's own "no merge" branch: fuzzy-linked mentions without
+    # self-canonicalization, which the reference then canonicalizes
+    with monkeypatch.context() as m:
+        m.setattr(link, "self_surface_canon_map", lambda surfaces: None)
+        unfolded = link_mentions(mentions, alias, cleanup=cleanup)
+    old = canonicalize_self_linked(unfolded)
+    new = link_mentions(mentions, alias, cleanup=cleanup)
 
     assert old.columns == new.columns
     a = sorted(map(tuple, old.collect()))

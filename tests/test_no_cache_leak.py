@@ -11,8 +11,8 @@ and any future ``.cache()`` added to an operator are caught here.
 ``localCheckpoint`` blocks (ops/canon.py) are NOT tracked by the SQL
 cache manager; they are released by the ContextCleaner when the frame is
 garbage-collected and are bounded per invocation — the SQL cache is the
-leak class that compounds in long-lived sessions (streaming foreachBatch,
-notebook servers), so that is what this test pins.
+leak class that compounds in long-lived sessions (notebook servers,
+repeated pipeline runs), so that is what this test pins.
 """
 
 from __future__ import annotations

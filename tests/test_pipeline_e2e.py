@@ -20,9 +20,17 @@ def workdir(tmp_path_factory):
     return str(tmp_path_factory.mktemp("kgwork"))
 
 
+def _persisted(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
 @pytest.fixture(scope="module")
 def summary(spark, workdir):
-    return run_pipeline(spark, workdir, n_pages=400)
+    before = _persisted(spark)
+    s = run_pipeline(spark, workdir, n_pages=400)
+    # the run, its evaluation's gold cache included, persists nothing
+    assert _persisted(spark) <= before
+    return s
 
 
 def test_triple_pr_gate(summary):
@@ -48,7 +56,9 @@ def test_resume_skips_committed_stages(spark, workdir, summary, monkeypatch):
 
     monkeypatch.setattr(pipeline, "link_mentions", boom)
     monkeypatch.setattr(pipeline, "salted_by_subject", boom)
+    before = _persisted(spark)
     s2 = run_pipeline(spark, workdir, n_pages=400)
+    assert _persisted(spark) <= before
     assert s2["rows"] == summary["rows"]
     assert s2["triple_match"] == summary["triple_match"]
     # without evaluation a committed rerun runs no Spark job at all: the
@@ -213,6 +223,27 @@ def _fault(point: str, wd: str, stage: str):
     return pipeline, "_write_json", write_json
 
 
+def test_write_over_committed_stage_uncommits_first(spark, tmp_path, monkeypatch):
+    """Rewriting a committed stage removes its marker before the old
+    table goes: a kill mid-swap leaves the stage uncommitted, and the
+    next resume rebuilds and re-commits it."""
+    sc = StageCommitter(str(tmp_path / "wd"))
+    sc.write(spark.range(10), "r")
+    assert sc.is_committed("r")
+
+    def rmtree(path, *a, **k):
+        raise Killed(path)
+
+    with monkeypatch.context() as m:
+        m.setattr(pipeline.shutil, "rmtree", rmtree)
+        with pytest.raises(Killed):
+            sc.write(spark.range(20), "r")
+    assert not sc.is_committed("r")
+    rebuilt = sc.stage("r", lambda: spark.range(20), resume=True)
+    assert sc.is_committed("r") and sc.rows("r") == 20
+    assert sorted(r.id for r in rebuilt.collect()) == list(range(20))
+
+
 def _sorted_triples(spark, wd: str) -> list[tuple]:
     return sorted(map(tuple, StageCommitter(wd).read(spark, "triples").collect()))
 
@@ -240,17 +271,12 @@ def test_fault_in_stage_commit_resumes(
     base, first, triples = committed_100
     wd = str(tmp_path / "wd")
     shutil.copytree(base, wd)
-    jsc = spark.sparkContext._jsc
-
-    def persisted() -> set:
-        return set(jsc.getPersistentRDDs().keys())
-
-    before = persisted()
+    before = _persisted(spark)
     with monkeypatch.context() as m:
         m.setattr(*_fault(point, wd, stage))
         with pytest.raises(Killed):
             run_pipeline(spark, wd, n_pages=100, resume=False, evaluate=False)
-    assert persisted() == before
+    assert _persisted(spark) == before
     again = run_pipeline(spark, wd, n_pages=100, evaluate=False)
     assert again["rows"] == first["rows"]
     assert _sorted_triples(spark, wd) == triples
