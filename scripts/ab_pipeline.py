@@ -22,7 +22,8 @@ Usage:
 
 Both arms call ``run_pipeline`` with its defaults: a baseline from before
 the per-stage commit graph was deleted runs that six-commit graph, not
-the fused two-commit one.
+the fused two-commit one. ``mentions=`` is the wall the ``mentions``
+commit marker records: the fused Python stage and its parquet write.
 
 Round-6 second-session result (baseline b0fe45d vs final, 6 pairs, 2M
 pages): old best 34.0 / median 44.0 -> new best 21.0 / median 35.0,
@@ -39,7 +40,7 @@ import textwrap
 
 RUN_ONE = textwrap.dedent(
     """
-    import os, shutil, sys, tempfile, time
+    import json, os, shutil, sys, tempfile, time
     root = sys.argv[1]
     sys.path.insert(0, root)
     from split_ner_spark.session import get_spark
@@ -53,8 +54,11 @@ RUN_ONE = textwrap.dedent(
     t0 = time.time()
     s = run_pipeline(spark, wd, n_pages=int(sys.argv[2]), resume=False,
                      evaluate=False, triple_partitions=64)
-    print(f"RESULT {root} wall={time.time()-t0:.2f} triples={s['triples']}",
-          flush=True)
+    wall = time.time() - t0
+    with open(os.path.join(wd, "_COMMIT.mentions.json")) as fh:
+        mentions_s = json.load(fh)["wall_ms"] / 1000
+    print(f"RESULT {root} wall={wall:.2f} mentions={mentions_s:.2f} "
+          f"triples={s['triples']}", flush=True)
     shutil.rmtree(wd)
     spark.stop()
     """

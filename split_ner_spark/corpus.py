@@ -346,18 +346,46 @@ def _gen_page(
     }
 
 
+# Pages per Python task of a page-id → mapInPandas generator stage. Two
+# measured costs (PySpark 4.1.2, Python 3.11, 4-core VM) set it:
+# - ~0.2 s fixed per Python task, outside the UDF body: the worker's
+#   setup_spark_files calls importlib.invalidate_caches() on every task,
+#   and on 3.11 that re-reads the directory of each cached zipimporter
+#   (16 of them: pyspark.zip x12, the spark-core jar x2, py4j x2, ~26.7k
+#   entries in all);
+# - ~84 µs per page for the fused generate→detect→classify body (5,000
+#   pages in 0.42 s serial); the full-page generator here is ~70 µs.
+# The fixed cost stays at ~10% of a task's work once it carries
+# 0.2 s / (0.10 x 84 µs) ≈ 23.8k pages (~12% for the full-page one).
+PAGES_PER_TASK = 24_000
+
+
+def generator_partitions(n_pages: int, cores: int) -> int:
+    """Tasks for a page-id generator stage: whole waves of ``cores``
+    tasks, as many as give each task ``PAGES_PER_TASK`` pages, clamped to
+    1–4 waves. Small runs take one wave, because there the per-task fixed
+    cost outweighs the work (4 tasks for 5,000 pages at 4 cores). Once the
+    work dominates, runs take 4 waves, whose smaller tasks smooth the
+    straggler tail (128 tasks for 20M pages at 32 cores)."""
+    waves = -(-n_pages // (cores * PAGES_PER_TASK))
+    return cores * min(max(waves, 1), 4)
+
+
 def gen_pages_with_gold(
     spark: SparkSession, n_pages: int, seed: int = SEED, partitions: int | None = None
 ) -> DataFrame:
     """Distributed deterministic generation: ``spark.range`` → mapInPandas.
 
     The generator is a pure function of (seed, id); partitioning only
-    affects parallelism, never content. At 100 TB scale this is exactly how
-    a synthetic load generator should run — no driver-side materialization.
+    affects parallelism, never content, and defaults to
+    :func:`generator_partitions`. At 100 TB scale this is exactly how a
+    synthetic load generator should run — no driver-side materialization.
     """
     registry = build_registry(seed)
     if partitions is None:
-        partitions = max(8, spark.sparkContext.defaultParallelism)
+        partitions = generator_partitions(
+            n_pages, spark.sparkContext.defaultParallelism
+        )
 
     def gen(batches):
         for pdf in batches:

@@ -86,10 +86,16 @@ def fused_mentions(
     Row-identical to ``classify_mentions(assemble_untyped(detect_spans(
     segment_pages(corpus.pages(gen)))))`` (pinned by tests)."""
     registry = corpus.build_registry(seed)
-    # 4x overdecomposition: with exactly one task-wave the slowest task
-    # sets the wall (measured ~20% straggler tail); 4 waves of smaller
-    # tasks smooth it — the standard 2-4x-cores rule.
-    partitions = max(8, spark.sparkContext.defaultParallelism * 4)
+    # Tasks sized by work, not by cores alone (corpus.generator_partitions):
+    # each Python task pays ~0.2 s fixed outside this body, and the body
+    # costs ~84 µs per page. Once tasks carry enough pages they are split
+    # 4 waves deep, because with one wave the slowest task sets the wall
+    # (measured ~20% straggler tail): 128 tasks at 20M pages on local[32].
+    # A small run keeps one wave: at 5,000 pages on 4 cores a task does
+    # ~26 ms of work, and 4 waves paid ~0.8 s of fixed cost per core.
+    partitions = corpus.generator_partitions(
+        n_pages, spark.sparkContext.defaultParallelism
+    )
     scorer = DeterministicScorer()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

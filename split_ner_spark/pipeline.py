@@ -145,10 +145,29 @@ class StageCommitter:
         )
         return committed
 
+    def _check_footers(self, stage: str) -> None:
+        """Raise unless the committed table's data files still hold the
+        rows and files its marker records (driver-side footer reads, no
+        Spark job): a data file lost or rewritten after the commit must
+        not reopen as a whole table."""
+        marker = self._load_marker(stage)
+        table = self.path(stage)
+        per_file = self._footer_counts(table) if os.path.isdir(table) else []
+        rows = sum(n for _, n in per_file)
+        if (rows, len(per_file)) != (marker["rows"], marker["n_files"]):
+            raise ValueError(
+                f"committed stage {stage!r} holds {rows} rows in "
+                f"{len(per_file)} files, but its marker records "
+                f"{marker['rows']} rows in {marker['n_files']} files; "
+                "pass resume=False to rebuild it"
+            )
+
     def stage(self, stage: str, build, resume: bool = True) -> DataFrame:
-        """Memoized stage: reuse the committed table or build+commit it."""
+        """Memoized stage: reuse the committed table, once its footers
+        match the marker, or build+commit it."""
         spark = SparkSession.getActiveSession()
         if resume and self.is_committed(stage):
+            self._check_footers(stage)
             return self.read(spark, stage)
         return self.write(build(), stage)
 

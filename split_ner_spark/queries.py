@@ -74,22 +74,27 @@ _FAN_OUT_TABLES = {"documents", "embeddings"}
 
 def _scan_layout(path: str) -> tuple[int, int]:
     """(total_bytes, total_row_groups) of a parquet file/directory,
-    driver-side footer metadata only (no Spark job)."""
+    driver-side footer metadata only (no Spark job). Past
+    ``_FAN_OUT_MAX_BYTES`` the walk stops: total_bytes is then the size
+    seen so far and row groups read as ``1 << 30``."""
     import os
 
     import pyarrow.parquet as pq
 
-    files: list[str] = []
     if os.path.isdir(path):
-        for root, _d, fs in os.walk(path):
-            files.extend(os.path.join(root, f) for f in fs
-                         if f.endswith(".parquet"))
+        walk = (os.path.join(root, f) for root, _d, fs in os.walk(path)
+                for f in fs if f.endswith(".parquet"))
     else:
-        files = [path]
-    total = sum(os.path.getsize(f) for f in files)
-    if total >= _FAN_OUT_MAX_BYTES:
-        # big input: scan splits provide parallelism; do not touch footers
-        return total, 1 << 30
+        walk = [path]
+    files: list[str] = []
+    total = 0
+    for f in walk:
+        total += os.path.getsize(f)
+        if total >= _FAN_OUT_MAX_BYTES:
+            # big input: scan splits provide parallelism; stat no more
+            # files and do not touch footers
+            return total, 1 << 30
+        files.append(f)
     rgs = 0
     for f in files:
         try:

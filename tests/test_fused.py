@@ -32,6 +32,40 @@ def test_fused_equals_staged(spark):
     assert len(a) > 100
 
 
+def test_generator_partitions_rule():
+    """Whole waves of ``cores`` tasks, sized by pages per task, 1-4 deep:
+    one wave where the per-task fixed cost would dominate, four where the
+    work does."""
+    rule = corpus.generator_partitions
+    assert rule(5_000, 4) == 4
+    assert rule(20_000_000, 32) == 128
+    wave = 4 * corpus.PAGES_PER_TASK
+    assert [rule(n, 4) for n in (wave, wave + 1, 2 * wave + 1)] == [4, 8, 12]
+    for cores in (1, 4, 8, 32):
+        for n in (0, 1, 5_000, 200_000, 2_000_000, 20_000_000, 10**9):
+            p = rule(n, cores)
+            assert cores <= p <= 4 * cores and p % cores == 0, (n, cores, p)
+
+
+def test_generator_stages_use_the_rule(spark):
+    """Both page-id generator stages take their task count from
+    ``corpus.generator_partitions``, one wave and several; an explicit
+    ``partitions=`` still wins. Planning only: no Spark job runs."""
+    cores = spark.sparkContext.defaultParallelism
+    sc = spark.sparkContext
+    sc.setJobGroup("generator_partitions", "generator_partitions")
+    try:
+        for n in (300, 2 * cores * corpus.PAGES_PER_TASK + 1):
+            want = corpus.generator_partitions(n, cores)
+            for df in (fused_mentions(spark, n), corpus.gen_pages_with_gold(spark, n)):
+                assert df.rdd.getNumPartitions() == want, n
+        explicit = corpus.gen_pages_with_gold(spark, 300, partitions=7)
+        assert explicit.rdd.getNumPartitions() == 7
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("generator_partitions")) == 0
+
+
 def test_fast_resume_skips_link_phase(spark, tmp_path, monkeypatch):
     """A fully committed workdir resumes without running the link phase,
     or any Spark job: the committed tables reopen with the schema their

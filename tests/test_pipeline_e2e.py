@@ -282,6 +282,24 @@ def test_fault_in_stage_commit_resumes(
     assert _sorted_triples(spark, wd) == triples
 
 
+def test_resume_rejects_table_short_of_its_marker(spark, tmp_path, committed_100):
+    """A committed mentions table that lost a data file after its commit
+    is not reopened as whole: resume raises, naming the stage and both
+    counts, and resume=False rebuilds the committed run's triples."""
+    base, first, triples = committed_100
+    wd = str(tmp_path / "wd")
+    shutil.copytree(base, wd)
+    table = os.path.join(wd, "mentions")
+    lost = min(f for f in os.listdir(table) if f.endswith(".parquet"))
+    os.remove(os.path.join(table, lost))
+    want = first["rows"]["mentions"]
+    with pytest.raises(ValueError, match=rf"'mentions'.*rows.*{want} rows.*resume=False"):
+        run_pipeline(spark, wd, n_pages=100, evaluate=False)
+    again = run_pipeline(spark, wd, n_pages=100, resume=False, evaluate=False)
+    assert again["rows"] == first["rows"]
+    assert _sorted_triples(spark, wd) == triples
+
+
 def test_resume_rejects_other_run_parameters(spark, tmp_path):
     """Resuming a workdir built with other n_pages raises instead of
     returning the old tables; resume=False rebuilds and re-records."""

@@ -88,6 +88,29 @@ def test_x6_single_shuffle(spark):
     assert p.count("Exchange") <= 2, p[:2000]
 
 
+def test_scan_layout_walk_stops_past_fan_out_max(tmp_path, monkeypatch):
+    """The fan-out decision's size walk stops statting files once the
+    total reaches ``_FAN_OUT_MAX_BYTES`` and reads no footer: a 1 TiB
+    directory costs a few stats, not one per file. The files are sparse,
+    so they take no disk space."""
+    import os
+
+    half = Q._FAN_OUT_MAX_BYTES // 2
+    for i in range(10):
+        with open(tmp_path / f"part-{i:05d}.parquet", "wb") as fh:
+            os.truncate(fh.fileno(), half)
+    calls = []
+    real_getsize = os.path.getsize
+
+    def getsize(path):
+        calls.append(path)
+        return real_getsize(path)
+
+    monkeypatch.setattr(os.path, "getsize", getsize)
+    assert Q._scan_layout(str(tmp_path)) == (2 * half, 1 << 30)
+    assert len(calls) == 2
+
+
 def test_salted_write_no_join(spark):
     """Round 4: hot-subject salting is an isin literal — no broadcast
     join, exactly the one repartition Exchange."""
