@@ -19,7 +19,7 @@ Two tiers, chosen by graph size (:func:`_components`):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import local_frame
@@ -33,9 +33,9 @@ MAX_ITER = 50
 SELF_JACCARD = 0.7
 
 
-def _driver_union_find(rows: list, e: DataFrame) -> DataFrame:
-    """Union-find over ``rows`` of (u, v) → (node, component) as a local
-    relation, typed like ``e``'s ``u`` column."""
+def _union_find(rows) -> dict:
+    """Union-find over (u, v) pairs → {node: component}, the component
+    being the minimum node of its set."""
     parent: dict = {}
 
     def find(x):
@@ -52,9 +52,14 @@ def _driver_union_find(rows: list, e: DataFrame) -> DataFrame:
             if rv < ru:
                 ru, rv = rv, ru
             parent[rv] = ru
-    out = [(n, find(n)) for n in parent]
+    return {n: find(n) for n in parent}
+
+
+def _driver_union_find(rows: list, e: DataFrame) -> DataFrame:
+    """:func:`_union_find` over ``rows`` of (u, v) → (node, component) as a
+    local relation, typed like ``e``'s ``u`` column."""
     schema = e.select(F.col("u").alias("node"), F.col("u").alias("component")).schema
-    return local_frame(e.sparkSession, out, schema)
+    return local_frame(e.sparkSession, list(_union_find(rows).items()), schema)
 
 
 def _edge_checksum(e: DataFrame) -> tuple[int, int]:
@@ -180,30 +185,36 @@ def connected_components(
     return _driver_union_find([], e) if cc is None else cc
 
 
-def self_surface_canon_map(self_surf: DataFrame) -> DataFrame | None:
-    """DISTINCT self-linked surfaces → (surface_norm, _canon2) rows for the
-    MERGED surfaces only, or ``None`` when no near-duplicate pair exists
-    (callers then skip the merge entirely). ``_canon2`` is
-    ``surface:<component representative>``; a surface with no row keeps
-    its own ``surface:<norm>`` id (callers coalesce on a null
-    ``_canon2``). :func:`link_mentions` runs this over the materialized
-    surface DIMENSION instead of re-deriving distinct surfaces from the
-    mention fact table.
+def self_surface_canon_map(surfaces: list) -> dict:
+    """DISTINCT self-linked surfaces (a driver list) → ``{surface_norm:
+    "surface:<component representative>"}`` for the MERGED surfaces only;
+    empty when no near-duplicate pair exists. A surface with no entry
+    keeps its own ``surface:<norm>`` id. :func:`..link.link_mentions`
+    runs this over the self surfaces of its collected dimension.
 
     The similarity pairs (Jaccard ≥ ``SELF_JACCARD``) come from one
-    broadcast-shaped LSH self-join (already one row per pair, so no
-    dedupe shuffle) and are merged by :func:`_components`: up to
-    ``DRIVER_THRESHOLD`` pairs by a driver union-find returned as a local
-    relation (one Spark action in all)."""
-    sh = self_surf.withColumn("shingles", char_shingles_col(F.col("surface_norm")))
-    pairs = lsh_self_join(
+    broadcast-shaped LSH self-join over the surfaces as a local relation
+    (already one row per pair, so no dedupe shuffle). The surface count
+    ``n`` bounds the edge count by n·(n−1)/2, which picks the tier:
+
+    - n < 2: no pair can exist, so no Spark job runs;
+    - n·(n−1)/2 ≤ ``DRIVER_THRESHOLD``: one plain edge ``collect()`` and a
+      driver union-find;
+    - past that: :func:`_components` (``limit``-bounded collect, then
+      star contraction when the edges outgrow the driver)."""
+    n = len(surfaces)
+    if n < 2:
+        return {}
+    sh = local_frame(
+        SparkSession.active(), [(s,) for s in surfaces], "surface_norm string"
+    ).withColumn("shingles", char_shingles_col(F.col("surface_norm")))
+    e = lsh_self_join(
         sh, "surface_norm", num_hashes=SURFACE_HASHES, bands=SURFACE_BANDS,
         threshold=SELF_JACCARD,
-    )
-    cc = _components(pairs.select(F.col("a").alias("u"), F.col("b").alias("v")))
-    if cc is None:
-        return None  # no near-duplicate unknown surfaces — nothing to merge
-    return cc.select(
-        F.col("node").alias("surface_norm"),
-        F.concat(F.lit("surface:"), F.col("component")).alias("_canon2"),
-    )
+    ).select(F.col("a").alias("u"), F.col("b").alias("v"))
+    if n * (n - 1) // 2 <= DRIVER_THRESHOLD:
+        comp = _union_find(e.collect())
+    else:
+        cc = _components(e, DRIVER_THRESHOLD)
+        comp = {} if cc is None else dict(cc.collect())
+    return {s: "surface:" + c for s, c in comp.items()}

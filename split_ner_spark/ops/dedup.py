@@ -392,8 +392,7 @@ def lsh_verified_jaccard(
 
     The cached shingle frame (and the banded frame of
     :func:`minhash_lsh_pairs`) are appended to ``cleanup`` for the caller
-    to ``unpersist()`` once the result is materialized — the same
-    contract as ``link_mentions``."""
+    to ``unpersist()`` once the result is materialized."""
     sh_arr = shingle_arrays(documents, k).cache()
     cleanup.append(sh_arr)
     cand = minhash_lsh_pairs(
@@ -625,15 +624,14 @@ def simhash_pairs(
     # (its row count scales with the near-dup structure and is NOT
     # broadcastable in general), so the quadratic expansion output stays
     # evenly spread over the probe partitions. The hint is CONDITIONAL on
-    # the optimizer's size estimate of the input (cached intermediates
-    # have no useful stats, so without the hint the local planner picked
-    # a sort-merge join): past ~the broadcast budget the hint is dropped
-    # and the planner's shuffle equi-join takes over — the expansion
-    # shape itself is scale-valid either way.
+    # the optimizer's size estimate of the broadcast frame itself — ``sv``,
+    # whose not-yet-materialized cache reports its aggregate plan's
+    # estimate (without the hint the local planner picked a sort-merge
+    # join): past ~the broadcast budget the hint is dropped and the
+    # planner's shuffle equi-join takes over — the expansion shape itself
+    # is scale-valid either way.
     try:
-        est_bytes = int(
-            documents._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
+        est_bytes = int(sv._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:
         est_bytes = 0
     def _maybe_broadcast(df: DataFrame) -> DataFrame:

@@ -15,9 +15,15 @@ candidate new entities); on the fuzzy path, near-duplicate self surfaces
 then share one ``surface:<representative>`` id (ops/canon.py).
 
 The expensive work runs on DISTINCT surfaces, not on mentions — the
-reference memoizes tokenization the same way
-(/root/reference/splitner/dataset_qa.py:152-155: cache per distinct
-token); here `dropDuplicates` + join-back is the distributed analog.
+reference memoizes tokenization the same way (splitner/dataset_qa.py:
+152-155, a cache per distinct token). That surface→entity dimension is
+small and does not grow with the corpus (148 distinct surfaces at both
+5,000 and 200,000 synthetic pages), so it is kept in memory as a build
+side: the dictionary and the resolved dimension are each collected to
+the driver once, and the dimension goes back into the one fact join as
+a broadcast local relation. Collecting it adds no size limit that
+broadcasting it did not already impose — a broadcast collects its build
+side too.
 
 Normalization twin: reference_impl.normalize_surface (tests pin equality).
 """
@@ -28,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..reference_impl import PUNCT_CHARS
+from ..session import local_frame
 from .canon import self_surface_canon_map
 from .lsh import SURFACE_BANDS, SURFACE_HASHES, char_shingles_col, lsh_similarity_join
 
@@ -46,158 +53,122 @@ def link_mentions(
     mentions: DataFrame,
     alias_df: DataFrame,
     *,
-    cleanup: list,
     fuzzy: bool = True,
 ) -> DataFrame:
     """mentions(..., surface, entity_type) × alias(alias, canonical_id,
-    entity_type) → + canonical_id, linked_via, final entity_type
-    (dictionary type wins over the classifier's rule type when linked).
+    entity_type) → + surface_norm, canonical_id, linked_via, final
+    entity_type (dictionary type wins over the classifier's rule type when
+    linked).
+
+    Aliases that normalize to the same string keep the FIRST row in
+    ``alias_df``'s order: the dictionary is collected and deduplicated on
+    the driver (no job when ``alias_df`` is a local relation).
+
+    The surface dimension is ONE query over the distinct normalized
+    surfaces, collected: exact hit (broadcast dictionary left join) →
+    fuzzy best (see below) → self, resolved per surface in one
+    projection. It caches nothing; the returned frame is the fact table
+    joined to the dimension as a broadcast local relation, so a caller
+    has nothing to release.
 
     ``fuzzy`` switches both MinHash-LSH passes together:
 
     - the dictionary-miss path: surfaces that miss the dictionary link to
-      their best alias at char-3-gram Jaccard ≥ ``FUZZY_JACCARD``;
-    - self-canonicalization: :func:`..canon.self_surface_canon_map` is
-      folded into the surface dimension BEFORE the fact join, so
-      near-duplicate self-linked surfaces collapse to one
-      ``surface:<representative>`` id. Row-identical to applying the
-      same map to the linked mentions afterwards (the reference
-      composition in tests/test_link_canon_fold.py) but runs the LSH +
-      connected-components work on the already-materialized |distinct
-      surfaces| dimension instead of re-scanning the mention fact table
-      twice — at 2M pages this removed two full fact-table passes from
-      the pipeline's link phase.
+      their best alias at char-3-gram Jaccard ≥ ``FUZZY_JACCARD``. The
+      scored candidates are unioned with the exact-path rows and reduced
+      by one ``groupBy(surface_norm)``, which needs no exchange: the
+      distinct already hash-partitions on that key;
+    - self-canonicalization: :func:`..canon.self_surface_canon_map` runs
+      on the self-linked surfaces of the collected dimension, so
+      near-duplicate ones collapse to one ``surface:<representative>`` id
+      BEFORE the fact join. Row-identical to applying the same map to the
+      linked mentions afterwards (the reference composition in
+      tests/test_link_canon_fold.py), but the fact table is read once.
+      With fewer than 2 self surfaces no self-join runs; up to
+      ``canon.DRIVER_THRESHOLD`` possible pairs its edges come back in one
+      plain collect.
 
     ``fuzzy=False`` runs neither (exact + self only) — used where
     deterministic cross-engine reproducibility matters: xxhash64 LSH has
     no DuckDB twin, so the oracle-checked queries link this way.
-
-    The distinct-surface cache is unpersisted as soon as the final
-    surface→entity dimension is materialized; that cached dimension is
-    appended to ``cleanup``, for the caller to unpersist once it has
-    consumed the result.
     """
-    dim = (
-        alias_df.select(
-            norm_surface_col(F.col("alias")).alias("alias_norm"),
-            F.col("canonical_id"),
-            F.col("entity_type").alias("dict_type"),
-        )
-        .dropDuplicates(["alias_norm"])
+    spark = mentions.sparkSession
+    first: dict = {}
+    for row in alias_df.select(
+        norm_surface_col(F.col("alias")), "canonical_id", "entity_type"
+    ).collect():
+        first.setdefault(row[0], row)
+    dim = local_frame(
+        spark, list(first.values()),
+        "alias_norm string, canonical_id string, dict_type string",
     )
 
-    # the distinct-surface dimension is consumed by THREE branches (exact,
-    # fuzzy-miss, self); cache it so each branch does not re-scan +
-    # re-shuffle the mention fact table. At web scale this table is
-    # |distinct surfaces| ≪ |mentions| — the reference memoizes
-    # per-distinct-token the same way (dataset_qa.py:152-155).
-    surfaces = (
-        mentions.select(norm_surface_col(F.col("surface")).alias("surface_norm"))
-        .distinct()
-        .cache()
-    )
-
-    # ONE left-join cascade builds the whole surface→entity dimension:
-    # exact hit (broadcast dict left join) → fuzzy best (broadcast band
-    # join + one groupBy over the exact misses) → self, resolved with
-    # coalesce in a single projection. The round-2 shape (three branches
-    # + two anti-joins + an intermediate cached union) spent ~25 small
-    # job rounds building this dimension — pure fixed cost at pipeline
-    # scale, since |distinct surfaces| ≪ |mentions|.
-    s1 = surfaces.join(
+    surfaces = mentions.select(
+        norm_surface_col(F.col("surface")).alias("surface_norm")
+    ).distinct()
+    resolved = surfaces.join(
         F.broadcast(dim), surfaces.surface_norm == dim.alias_norm, "left"
     ).select("surface_norm", "canonical_id", "dict_type")
-
+    f_cid = f_type = F.lit(None).cast("string")
     if fuzzy:
-        # Fuzzy path, shuffle-free except one groupBy: exact misses →
-        # lsh_similarity_join against the dictionary (broadcast band join,
-        # Jaccard verified inline) → one groupBy(surface) keeping the best
-        # match (max jaccard, then min alias_norm — min of
-        # struct(-jaccard, alias_norm)). The dictionary's canonical_id and
-        # type ride along the band rows (alias_norm is unique in ``dim``),
-        # so no join back to the dictionary is needed.
-        missed = s1.filter(F.col("canonical_id").isNull()).select("surface_norm")
+        # exact misses → lsh_similarity_join against the dictionary
+        # (broadcast band join, Jaccard verified inline); the best match is
+        # the min of struct(-jaccard, alias_norm, ...): max Jaccard, then
+        # min alias_norm. The dictionary's canonical_id and type ride
+        # along the band rows (alias_norm is unique in ``dim``).
+        missed = resolved.filter(F.col("canonical_id").isNull()).select("surface_norm")
         scored = lsh_similarity_join(
             missed.withColumn("shingles", char_shingles_col(F.col("surface_norm"))),
             dim.withColumn("shingles", char_shingles_col(F.col("alias_norm"))),
             "surface_norm", "alias_norm", num_hashes=SURFACE_HASHES,
             bands=SURFACE_BANDS, threshold=FUZZY_JACCARD,
             keep_right=("canonical_id", "dict_type"),
-        )
-        best = scored.groupBy("surface_norm").agg(
-            F.min(
-                F.struct(
-                    (-F.col("jaccard")).alias("_nj"),
-                    "alias_norm", "canonical_id", "dict_type",
-                )
-            ).alias("_b")
-        )
-        fuzzy_dim = best.select(
+        ).select(
             "surface_norm",
-            F.col("_b.canonical_id").alias("_f_cid"),
-            F.col("_b.dict_type").alias("_f_type"),
+            F.struct(
+                (-F.col("jaccard")).alias("_nj"),
+                "alias_norm", "canonical_id", "dict_type",
+            ).alias("_b"),
         )
-        resolved = s1.join(F.broadcast(fuzzy_dim), "surface_norm", "left")
-    else:
-        resolved = s1.withColumn(
-            "_f_cid", F.lit(None).cast("string")
-        ).withColumn("_f_type", F.lit(None).cast("string"))
-
-    # eagerly materialize the final surface→entity dimension (it is as
-    # small as |distinct surfaces|), THEN broadcast it into the fact join.
-    # Order matters: broadcasting the unmaterialized subplan re-executes
-    # it inside the broadcast build, and a cached-but-unmaterialized
-    # dimension has unknown stats, which planned the 10^6+-row fact join
-    # as sort-merge (measured 5x slower). At 10^12 docs with a dimension
-    # past the broadcast budget, drop the hint and pre-partition both
-    # sides on surface_norm instead.
-    full_dim = resolved.select(
+        # one row per surface from the exact path plus its scored
+        # candidates; each surface has one non-null exact-path value
+        resolved = (
+            resolved.unionByName(scored, allowMissingColumns=True)
+            .groupBy("surface_norm")
+            .agg(
+                F.max("canonical_id").alias("canonical_id"),
+                F.max("dict_type").alias("dict_type"),
+                F.min("_b").alias("_b"),
+            )
+        )
+        f_cid, f_type = F.col("_b.canonical_id"), F.col("_b.dict_type")
+    rows = resolved.select(
         "surface_norm",
         F.coalesce(
             F.col("canonical_id"),
-            F.col("_f_cid"),
+            f_cid,
             F.concat(F.lit("surface:"), F.col("surface_norm")),
-        ).alias("canonical_id"),
-        F.coalesce(F.col("dict_type"), F.col("_f_type")).alias("dict_type"),
+        ),
+        F.coalesce(F.col("dict_type"), f_type),
         F.when(F.col("canonical_id").isNotNull(), F.lit("exact"))
-        .when(F.col("_f_cid").isNotNull(), F.lit("lsh"))
-        .otherwise(F.lit("self"))
-        .alias("linked_via"),
-    ).cache()
-    full_dim.count()
-    # full_dim is materialized — its upstreams are no longer needed (an
-    # LRU-evicted full_dim block would recompute from scratch, which is
-    # correct, just slower)
-    surfaces.unpersist()
-    cleanup.append(full_dim)
+        .when(f_cid.isNotNull(), F.lit("lsh"))
+        .otherwise(F.lit("self")),
+    ).collect()
 
-    join_dim = full_dim
     if fuzzy:
-        # dimension-level canonicalization: full_dim is unique per
-        # surface_norm and already cached, so the LSH self-join (one
-        # action) runs on |distinct self surfaces| rows, and ``comp`` maps
-        # only the merged ones; the fact table is only touched by the
-        # single broadcast join below.
-        comp = self_surface_canon_map(
-            full_dim.filter(F.col("linked_via") == "self").select("surface_norm")
-        )
-        if comp is not None:
-            join_dim = full_dim.join(F.broadcast(comp), "surface_norm", "left").select(
-                "surface_norm",
-                F.when(
-                    (F.col("linked_via") == "self") & F.col("_canon2").isNotNull(),
-                    F.col("_canon2"),
-                )
-                .otherwise(F.col("canonical_id"))
-                .alias("canonical_id"),
-                "dict_type",
-                "linked_via",
-            )
+        merged = self_surface_canon_map([r[0] for r in rows if r[3] == "self"])
+        rows = [
+            (s, merged.get(s, cid) if via == "self" else cid, t, via)
+            for s, cid, t, via in rows
+        ]
+    join_dim = local_frame(
+        spark, rows,
+        "surface_norm string, canonical_id string, dict_type string, linked_via string",
+    )
 
-    out = (
+    return (
         mentions.withColumn("surface_norm", norm_surface_col(F.col("surface")))
         .join(F.broadcast(join_dim), "surface_norm")
         .withColumn("entity_type", F.coalesce(F.col("dict_type"), F.col("entity_type")))
         .drop("dict_type")
     )
-    return out

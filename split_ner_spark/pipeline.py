@@ -173,9 +173,8 @@ class StageCommitter:
 
 
 def alias_dim(spark: SparkSession, seed: int = corpus.SEED) -> DataFrame:
-    """The alias dictionary as a local relation: ``link_mentions`` reads
-    it in several branches, and a local relation costs no Python-worker
-    job per read."""
+    """The alias dictionary as a local relation: ``link_mentions``
+    collects it, which a local relation answers without a Spark job."""
     rows = corpus.alias_rows(corpus.build_registry(seed))
     return local_frame(
         spark, rows, "alias string, canonical_id string, entity_type string"
@@ -234,7 +233,7 @@ def run_pipeline(
         "mentions", lambda: fused_mentions(spark, n_pages, seed), resume
     )
 
-    cleanup: list = []  # the link dimension's caches and the linked cache
+    cleanup: list = []  # the linked-mentions cache
     cooccur_obs = None  # set only when the triples stage builds
 
     def build_triples() -> DataFrame:
@@ -246,7 +245,7 @@ def run_pipeline(
         # more, so they are cached — only the four columns make_triples
         # needs: ~4x smaller than the full mention rows.
         lk = (
-            link_mentions(mentions, alias_dim(spark, seed), cleanup=cleanup)
+            link_mentions(mentions, alias_dim(spark, seed))
             .select("url", "sent_id", "canonical_id", "entity_type")
             .cache()
         )

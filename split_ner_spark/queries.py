@@ -119,17 +119,18 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# Deferred cache cleanup. A few operators (dedup.lsh_verified_jaccard,
-# link.link_mentions) cache a shared intermediate dimension that must stay
-# cached until the CALLER materializes the returned frame — so the query
-# wrapper cannot unpersist before returning. Wrappers thread this registry
-# as the operators' ``cleanup`` list (they only call ``.append``); any
-# harness that materializes query results calls :func:`drain_cache`
-# afterwards (bench.py does after every query; tests/test_no_cache_leak.py
-# runs EVERY registry entry and asserts the Spark cache manager ends
-# empty). A harness that never drains leaks at most one bounded dim per
-# leaky-query invocation — the long-lived caller (the pipeline's triples
-# stage) cleans up eagerly inline.
+# Deferred cache cleanup. The dedup operators (dedup.minhash_lsh_pairs,
+# lsh_verified_jaccard, simhash_pairs) and a few query wrappers cache a
+# shared intermediate that must stay cached until the CALLER materializes
+# the returned frame — so the wrapper cannot unpersist before returning.
+# Wrappers thread this registry as the operators' ``cleanup`` list (they
+# only call ``.append``); any harness that materializes query results
+# calls :func:`drain_cache` afterwards (bench.py does after every query;
+# tests/test_no_cache_leak.py runs EVERY registry entry and asserts the
+# Spark cache manager ends empty). A harness that never drains leaks at
+# most one bounded intermediate per leaky-query invocation — the
+# long-lived caller (the pipeline's triples stage) cleans up eagerly
+# inline.
 #
 # The registry is keyed by owning SparkSession (ADVICE r4): a multi-session
 # process drains each session's frames against THAT session only, and a
@@ -1063,7 +1064,7 @@ def _linked_triples(mentions: DataFrame) -> DataFrame:
         "alias string, canonical_id string, entity_type string",
     )
     return make_triples(
-        link_mentions(mentions, alias_df, fuzzy=False, cleanup=_DEFERRED_UNPERSIST)
+        link_mentions(mentions, alias_df, fuzzy=False)
     )
 
 

@@ -100,9 +100,9 @@ def test_quality_and_langid_sanity(spark):
 
 
 def test_lsh_verified_jaccard_cleanup_releases_cache(spark):
-    """The cleanup-list contract (same as link_mentions): after the caller
-    unpersists the handed-back frames, no cached RDD from this query
-    remains in executor storage."""
+    """The cleanup-list contract: after the caller unpersists the
+    handed-back frames, no cached RDD from this query remains in executor
+    storage."""
     spark.catalog.clearCache()
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     cleanup: list = []

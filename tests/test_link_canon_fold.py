@@ -44,13 +44,17 @@ def canonicalize_self_linked(linked: DataFrame) -> DataFrame:
     materialized, prefer fuzzy ``link_mentions(...)``, which runs
     :func:`self_surface_canon_map` at dimension level and is pinned
     row-identical to this composition by tests/test_link_canon_fold.py."""
-    comp = self_surface_canon_map(
-        linked.filter(F.col("linked_via") == "self")
+    merged = self_surface_canon_map([
+        r[0] for r in linked.filter(F.col("linked_via") == "self")
         .select("surface_norm")
         .distinct()
-    )
-    if comp is None:
+        .collect()
+    ])
+    if not merged:
         return linked
+    comp = linked.sparkSession.createDataFrame(
+        sorted(merged.items()), "surface_norm string, _canon2 string"
+    )
     out = (
         linked.join(comp, "surface_norm", "left")
         .withColumn(
@@ -78,20 +82,17 @@ def test_canonicalize_fold_matches_composition(spark, monkeypatch):
     mentions = mentions.unionByName(planted)
     alias = alias_dim(spark)
 
-    cleanup: list = []
     # the operator's own "no merge" branch: fuzzy-linked mentions without
     # self-canonicalization, which the reference then canonicalizes
     with monkeypatch.context() as m:
-        m.setattr(link, "self_surface_canon_map", lambda surfaces: None)
-        unfolded = link_mentions(mentions, alias, cleanup=cleanup)
+        m.setattr(link, "self_surface_canon_map", lambda surfaces: {})
+        unfolded = link_mentions(mentions, alias)
     old = canonicalize_self_linked(unfolded)
-    new = link_mentions(mentions, alias, cleanup=cleanup)
+    new = link_mentions(mentions, alias)
 
     assert old.columns == new.columns
     a = sorted(map(tuple, old.collect()))
     b = sorted(map(tuple, new.collect()))
-    for df in cleanup:
-        df.unpersist()
     assert a == b
     # the slice must actually exercise the merge: some self ids exist and
     # at least one surface was remapped off its own-surface id

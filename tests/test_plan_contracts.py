@@ -56,10 +56,7 @@ def test_link_joins_are_broadcast(spark):
         [("spark", "eng:spark", "engine")],
         "alias string, canonical_id string, entity_type string",
     )
-    cleanup: list = []
-    p = plan_of(link_mentions(mentions, alias, fuzzy=False, cleanup=cleanup))
-    for df in cleanup:
-        df.unpersist()
+    p = plan_of(link_mentions(mentions, alias, fuzzy=False))
     assert "SortMergeJoin" not in p
     assert "BroadcastHashJoin" in p
 
@@ -126,9 +123,9 @@ def test_salted_write_no_join(spark):
 
 
 def test_alias_dim_is_local_relation(spark):
-    """The alias dictionary is a local relation: a LogicalRDD over a
-    pickled Python RDD would re-run Python-worker tasks in every branch
-    of link_mentions that reads it."""
+    """The alias dictionary is a local relation: link_mentions collects
+    it, and a LogicalRDD over a pickled Python RDD would run a
+    Python-worker job for that collect."""
     from split_ner_spark.pipeline import alias_dim
 
     p = alias_dim(spark)._jdf.queryExecution().optimizedPlan().toString()
