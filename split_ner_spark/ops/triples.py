@@ -8,14 +8,20 @@ From linked typed mentions, emit the (subj, pred, obj) relation:
 
 Skew: the corpus plants Zipf-skewed entities (the hottest subject is in
 ~10% of pages — corpus.py), so a naive ``repartition(subj)`` would put a
-tenth of the output through one task. The writer therefore detects heavy
-hitters with one exact per-key count and spreads ONLY those across
-``n_salts`` salt buckets (salt = deterministic hash of the full triple):
-cold keys keep locality, hot keys parallelize. AQE handles join-side skew;
-this handles write/partition-side skew, which AQE does not (SURVEY §4).
+tenth of the output through one task. The writer therefore spreads ONLY
+the heavy hitters across ``n_salts`` salt buckets (salt = deterministic
+hash of the full triple): cold keys keep locality, hot keys parallelize.
+AQE handles join-side skew; this handles write/partition-side skew, which
+AQE does not (SURVEY §4). The heavy hitters come from build-side
+statistics, not from a pass over the triples: :func:`hot_subjects` reads
+the exact per-subject mention counts that the linker's surface dimension
+already holds (ops/link.link_mentions), so the salted write runs no
+detection job.
 """
 
 from __future__ import annotations
+
+from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -25,7 +31,7 @@ from pyspark.sql import functions as F
 # constant into their `rk <= N` window filters, so a cap change cannot
 # silently break Spark/DuckDB equivalence (ADVICE r4).
 MAX_COOCCUR_ENTITIES = 1024
-# a key holding more than this share of the detection rows is hot
+# a key holding more than this share of the counted rows is hot
 HOT_FRACTION = 0.01
 
 
@@ -139,51 +145,44 @@ def make_triples(
     )
 
 
+def hot_subjects(counts: Mapping) -> list:
+    """Exact per-key counts (``{key: rows}``) → the keys holding more than
+    ``HOT_FRACTION`` of all rows, most rows first (ties by key). So at
+    most 1/HOT_FRACTION keys qualify.
+
+    A ``None`` key — the mentions of a null surface, which the linker's
+    inner fact join drops — counts toward neither the keys nor the total.
+
+    The pipeline passes the mentions per ``canonical_id``, summed from the
+    linker's dimension rows: a faithful proxy for per-subject triple
+    counts (mentioned_in ∝ mentions, co-occurrence subjects are canonical
+    ids). Salting is a partitioning heuristic, so a proxy changes no
+    output values."""
+    counts = {k: n for k, n in counts.items() if k is not None}
+    total = sum(counts.values())
+    return sorted(
+        (k for k, n in counts.items() if n > HOT_FRACTION * total),
+        key=lambda k: (-counts[k], k),
+    )
+
+
 def salted_by_subject(
     triples: DataFrame,
     n_partitions: int = 64,
     n_salts: int = 16,
     *,
-    detect_on: DataFrame,
-    detect_col: str,
+    hot_subjects: list,
 ) -> DataFrame:
-    """Repartition triples by (subj, salt) where salt spreads heavy
-    subjects across ``n_salts`` buckets; cold subjects keep one bucket.
+    """Repartition triples by (subj, salt) where salt spreads the
+    ``hot_subjects`` (see :func:`hot_subjects`) across ``n_salts``
+    buckets; cold subjects keep one bucket.
 
-    Hot-set detection is ONE action on ``detect_on``: an exact
-    ``groupBy(detect_col).count()`` whose total rides an
-    :class:`Observation`, with the top-``cap`` keys by count collected in
-    the same action. A key is hot when it holds more than
-    ``HOT_FRACTION`` of the total, so at most 1/HOT_FRACTION keys qualify
-    and ``cap`` bounds the collect. Map-side partial aggregation already
-    limits the shuffle to partitions × distinct keys, so a sample would
-    save little and cost extra jobs — and could miss a hot key on a
-    micro-batch. The hot set becomes a broadcast-free
-    ``isin`` literal: no join, no cached frame survives the call.
+    Runs no Spark job: the hot set is given, and it becomes a
+    broadcast-free ``isin`` literal — no join, no cached frame.
 
-    The pipeline passes its cached ``linked`` mentions as ``detect_on``
-    (col ``canonical_id``), whose per-key counts are a faithful proxy for
-    per-subject triple counts (mentioned_in ∝ mentions, co-occurrence
-    subjects are canonical ids). So the triple set is not cached solely
-    for the detection pass: the triples are computed exactly once, inside
-    the write job. Salting is a partitioning heuristic, so a proxy
-    detection source changes no output values.
-
-    Output VALUES are unchanged by any of this (salt is dropped);
-    only the physical partitioning differs. Salt is a deterministic hash
-    of the full triple, not a random()."""
-    cap = int(1.0 / HOT_FRACTION) + 1
-    obs = Observation()
-    top = (
-        detect_on.groupBy(detect_col)
-        .agg(F.count("*").alias("_c"))
-        .observe(obs, F.sum("_c").alias("total"))
-        .orderBy(F.desc("_c"))
-        .limit(cap)
-        .collect()
-    )
-    total = obs.get["total"] or 0
-    hot_subjects = [r[detect_col] for r in top if r["_c"] > HOT_FRACTION * total]
+    Output VALUES are unchanged (salt is dropped); only the physical
+    partitioning differs. Salt is a deterministic hash of the full
+    triple, not a random()."""
     if hot_subjects:
         salted = triples.withColumn(
             "salt",

@@ -38,7 +38,7 @@ from . import corpus
 from .ops.fused import fused_mentions
 from .ops.link import link_mentions
 from .ops.metrics import triple_pr
-from .ops.triples import make_triples, salted_by_subject
+from .ops.triples import hot_subjects, make_triples, salted_by_subject
 from .session import local_frame
 
 
@@ -197,8 +197,10 @@ def run_pipeline(
     The chain generate→segment→detect→assemble→classify is narrow (no
     shuffle), so it runs as one fused Python stage with no materialization
     barrier, where the reference glues its two model stages through
-    files. The triples stage caches the linked mentions only while it
-    builds, so a rerun over a committed workdir skips the link phase.
+    files. The triples stage caches nothing: the linked mentions are
+    recomputed inside the one write job, and their hot subjects come from
+    the link dimension's mention counts. A rerun over a committed workdir
+    skips the link phase.
 
     ``granularity`` accepts only ``"fast"``; any other value raises
     ``ValueError``.
@@ -208,7 +210,9 @@ def run_pipeline(
     ``resume=False`` uncommits every stage before it rewrites the record.
 
     Returns a summary dict (rows per stage, triple P/R when evaluate=True,
-    wall seconds, triples/sec)."""
+    wall seconds, triples/sec, and — when the triples stage built — the
+    co-occurrence cap count, the link-path mix as distinct surfaces and
+    mentions per ``linked_via``, and the salted hot subjects)."""
     if granularity != "fast":
         raise ValueError(f"granularity must be 'fast', not {granularity!r}")
     sc = StageCommitter(workdir)
@@ -233,40 +237,32 @@ def run_pipeline(
         "mentions", lambda: fused_mentions(spark, n_pages, seed), resume
     )
 
-    cleanup: list = []  # the linked-mentions cache
     cooccur_obs = None  # set only when the triples stage builds
+    link_report: dict = {"link_mix": None, "hot_subjects": None}
 
     def build_triples() -> DataFrame:
         nonlocal cooccur_obs
         # fuzzy linking (the default) also self-canonicalizes, on the
-        # surface dimension rather than with extra fact-table scans.
-        # make_triples reads the linked mentions four times
-        # (typed/mentioned/co-mention a+b) and hot-subject detection once
-        # more, so they are cached — only the four columns make_triples
-        # needs: ~4x smaller than the full mention rows.
-        lk = (
-            link_mentions(mentions, alias_dim(spark, seed))
-            .select("url", "sent_id", "canonical_id", "entity_type")
-            .cache()
-        )
-        cleanup.append(lk)
+        # surface dimension rather than with extra fact-table scans
+        linked, dimension = link_mentions(mentions, alias_dim(spark, seed))
+        # the dimension's mention counts, summed per canonical_id, are
+        # exact per-subject counts: the hot subjects cost no Spark job,
+        # and make_triples executes exactly once, inside the write job
+        per_subject: dict = {}
+        mix = {via: {"surfaces": 0, "mentions": 0} for via in ("exact", "lsh", "self")}
+        for _, cid, _, via, n in dimension:
+            per_subject[cid] = per_subject.get(cid, 0) + n
+            mix[via]["surfaces"] += 1
+            mix[via]["mentions"] += n
+        hot = hot_subjects(per_subject)
+        link_report.update(link_mix=mix, hot_subjects=hot)
         cooccur_obs = Observation("cooccur_cap")
-        # hot-subject detection counts ``lk`` per canonical_id in one
-        # action, which also fills its cache; canonical_id counts ≈
-        # per-subject triple counts — a partitioning heuristic, so output
-        # values are unchanged. make_triples then executes exactly once,
-        # inside the write job.
         return salted_by_subject(
-            make_triples(lk, observation=cooccur_obs), triple_partitions,
-            detect_on=lk, detect_col="canonical_id",
+            make_triples(linked, observation=cooccur_obs), triple_partitions,
+            hot_subjects=hot,
         )
 
-    try:
-        triples = sc.stage("triples", build_triples, resume)
-    finally:
-        # a failed build or commit must not leave its caches behind either
-        for df in cleanup:
-            df.unpersist()
+    triples = sc.stage("triples", build_triples, resume)
 
     wall_s = time.time() - t_start
     # Co-occurrence cap observability (VERDICT r4 #3): how many sentences
@@ -293,6 +289,9 @@ def run_pipeline(
         "triples": rows["triples"],
         "triples_per_sec": round(rows["triples"] / wall_s, 2) if wall_s > 0 else None,
         "cooccur_cap": cooccur_metrics,
+        # what linking resolved and which subjects the write salted;
+        # absent (None) on a resumed run, like cooccur_cap
+        **link_report,
     }
     if evaluate:
         # golden_triples reads the gold in several branches and triple_pr

@@ -1052,7 +1052,7 @@ LINK_ALIAS_ROWS = [
 def _linked_triples(mentions: DataFrame) -> DataFrame:
     """The back-half tail of both oracle-checked chains: REAL
     ``link_mentions`` against the ``LINK_ALIAS_ROWS`` dictionary (exact
-    broadcast dictionary + self-link; fuzzy LSH and self-canonicalization
+    dictionary lookup + self-link; fuzzy LSH and self-canonicalization
     off for cross-engine determinism — xxhash64 has no DuckDB twin) → REAL
     ``make_triples`` union-distinct. Its DuckDB twin is
     :func:`_linked_triples_sql`."""
@@ -1064,7 +1064,7 @@ def _linked_triples(mentions: DataFrame) -> DataFrame:
         "alias string, canonical_id string, entity_type string",
     )
     return make_triples(
-        link_mentions(mentions, alias_df, fuzzy=False)
+        link_mentions(mentions, alias_df, fuzzy=False)[0]
     )
 
 
@@ -1251,7 +1251,7 @@ def q_pipeline_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL pipeline operator chain — segment_pages (UDF #1, real
     tokenizer + sentence splitter) → detect_spans (UDF #2, the shape-run
     BIOES scorer, mapInPandas) → assemble_untyped (W3 codegen fold) →
-    classify_mentions → link_mentions (broadcast dict + self-link) →
+    classify_mentions → link_mentions (dictionary lookup + self-link) →
     make_triples — hash-checked end-to-end against a DuckDB twin.
 
     Input = ``documents`` text under the deterministic ``PIPE_REWRITE``

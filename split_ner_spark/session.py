@@ -23,6 +23,14 @@ from pyspark.sql import DataFrame, SparkSession
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _default_driver_mem() -> str:
+    """Half the machine's physical memory, whole GiB, capped at 32g: a
+    driver heap larger than the box lets two sessions on it grow past its
+    memory together."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, min(32, phys // 2 // 1024**3))}g"
+
+
 def get_spark(
     app_name: str = "split-ner-spark",
     cpus: int | None = None,
@@ -35,7 +43,7 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
     if driver_mem is None:
-        driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
+        driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
     # shuffle/spill files on tmpfs: the box's virtual disk writes ~250MB/s
     # (measured), which serializes multi-GB shuffles and caps scaling at
     # ~8 threads; /dev/shm sustains ~850MB/s. Real clusters put

@@ -86,9 +86,9 @@ def test_canonicalize_fold_matches_composition(spark, monkeypatch):
     # self-canonicalization, which the reference then canonicalizes
     with monkeypatch.context() as m:
         m.setattr(link, "self_surface_canon_map", lambda surfaces: {})
-        unfolded = link_mentions(mentions, alias)
+        unfolded, _ = link_mentions(mentions, alias)
     old = canonicalize_self_linked(unfolded)
-    new = link_mentions(mentions, alias)
+    new, _ = link_mentions(mentions, alias)
 
     assert old.columns == new.columns
     a = sorted(map(tuple, old.collect()))

@@ -1,6 +1,7 @@
 """link_mentions builds its surface→entity dimension on the driver: the
-dictionary and the resolved dimension are each collected once, nothing is
-cached, and the job count stays small and fixed.
+dictionary and the per-surface mention counts are each collected once,
+the fuzzy path runs one collected LSH join, nothing is cached, and the
+job count stays small and fixed.
 
 The job counts come from ``sc.statusTracker()`` under a job group, over a
 200-page ``mentions`` stage committed the way ``run_pipeline`` commits
@@ -20,7 +21,7 @@ from split_ner_spark.pipeline import StageCommitter, alias_dim
 from split_ner_spark.session import local_frame
 
 # the fact join's dimension is built with at most this many Spark jobs
-LINK_JOB_BUDGET = 8
+LINK_JOB_BUDGET = 6
 # job-group suffixes: the status tracker remembers every group a session used
 _GROUP_IDS = itertools.count()
 
@@ -70,7 +71,7 @@ def test_link_job_budget_and_no_cache(spark, mentions, monkeypatch):
     before = set(sc._jsc.getPersistentRDDs().keys())
     counts = {}
     for fuzzy in (True, False):
-        out, counts[fuzzy] = _jobs_in(
+        (out, _), counts[fuzzy] = _jobs_in(
             spark, f"link_fuzzy_{fuzzy}",
             lambda: link_mentions(mentions, alias_dim(spark), fuzzy=fuzzy),
         )
@@ -95,7 +96,7 @@ def test_no_self_join_below_two_self_surfaces(spark, mentions, monkeypatch):
         "alias string, canonical_id string, entity_type string",
     )
     calls = _self_join_probe(spark, monkeypatch)
-    out = link_mentions(mentions, alias)
+    out, _ = link_mentions(mentions, alias)
     [(n_self, self_jobs)] = calls
     assert n_self < 2 and self_jobs == 0, calls
     self_linked = out.filter(F.col("linked_via") == "self").select("surface_norm")
@@ -115,8 +116,22 @@ def test_dictionary_dedupe_keeps_first_row(spark, fuzzy):
         alias = local_frame(
             spark, ordered, "alias string, canonical_id string, entity_type string"
         )
-        [hit] = link_mentions(mentions, alias, fuzzy=fuzzy).collect()
+        [hit] = link_mentions(mentions, alias, fuzzy=fuzzy)[0].collect()
         assert (hit["canonical_id"], hit["linked_via"]) == (ordered[0][1], "exact")
+
+
+@pytest.mark.parametrize("fuzzy", [True, False])
+def test_dimension_counts_match_linked(spark, mentions, fuzzy):
+    """The dimension rows' mention counts add up to the mentions, and per
+    canonical_id to the linked rows: the counts the pipeline takes its hot
+    subjects from are the fact join's own."""
+    linked, dimension = link_mentions(mentions, alias_dim(spark), fuzzy=fuzzy)
+    assert sum(r[4] for r in dimension) == mentions.count()
+    assert len({r[0] for r in dimension}) == len(dimension)
+    per_id: dict = {}
+    for _, cid, _, _, n in dimension:
+        per_id[cid] = per_id.get(cid, 0) + n
+    assert per_id == dict(linked.groupBy("canonical_id").count().collect())
 
 
 def test_self_canon_tiers_agree(spark, monkeypatch):

@@ -5,8 +5,9 @@ drains the deferred-unpersist registry and asserts the Spark SQL cache
 manager is empty — i.e. no query leaves a cached frame behind once its
 result is consumed and ``drain_cache()`` runs. This is the executable
 witness that the harness is leak-free: the two round-3 leak sites
-(q_dedup_lsh_jaccard's shingle cache, salted_by_subject's count cache)
-and any future ``.cache()`` added to an operator are caught here.
+(q_dedup_lsh_jaccard's shingle cache, salted_by_subject's count cache —
+now gone with its detection pass, which ``run_pipeline`` pins) and any
+future ``.cache()`` added to an operator are caught here.
 
 ``localCheckpoint`` blocks (ops/canon.py) are NOT tracked by the SQL
 cache manager; they are released by the ContextCleaner when the frame is
@@ -44,18 +45,20 @@ def test_every_query_leaves_cache_empty(spark):
     assert not leaked, f"queries leaving residual cached frames: {leaked}"
 
 
-def test_salted_by_subject_no_residual_cache(spark):
-    """The round-3 leak site in isolation: heavy-hitter detection must not
-    leave its per-key count frame cached after the call returns."""
-    from split_ner_spark.ops.triples import salted_by_subject
+def test_run_pipeline_persists_nothing(spark, tmp_path):
+    """The round-3 leak site, salted_by_subject's count cache, is gone
+    with its detection pass, and the link → triples path caches nothing
+    else: a rebuilding run leaves no persisted RDD and no cached frame."""
+    from split_ner_spark.pipeline import run_pipeline
 
     spark.catalog.clearCache()
-    tri = spark.createDataFrame(
-        [(f"s{i % 3}", "p", f"o{i}") for i in range(300)],
-        "subj string, pred string, obj string",
-    )
-    out = salted_by_subject(tri, n_partitions=4, detect_on=tri, detect_col="subj")
-    assert out.count() == 300
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    s = run_pipeline(spark, str(tmp_path), n_pages=100, resume=False, evaluate=False)
+    assert s["triples"] > 0
+    # no RDD is added; RDDs of earlier tests may be released meanwhile
+    # (the ContextCleaner frees unreferenced localCheckpoint blocks)
+    assert set(jsc.getPersistentRDDs().keys()) <= before
     assert _cache_empty(spark)
 
 
@@ -64,16 +67,16 @@ def test_salted_by_subject_values_unchanged_and_hot_spread(spark):
     and a detected hot subject spreads across >1 partition."""
     from pyspark.sql import functions as F
 
-    from split_ner_spark.ops.triples import salted_by_subject
+    from split_ner_spark.ops.triples import hot_subjects, salted_by_subject
 
     tri = spark.createDataFrame(
         [("hot", "p", f"o{i}") for i in range(400)]
         + [(f"cold{i}", "p", "o") for i in range(50)],
         "subj string, pred string, obj string",
     )
-    out = salted_by_subject(
-        tri, n_partitions=8, n_salts=8, detect_on=tri, detect_col="subj"
-    )
+    hot = hot_subjects(dict(tri.groupBy("subj").count().collect()))
+    assert hot == ["hot"]
+    out = salted_by_subject(tri, n_partitions=8, n_salts=8, hot_subjects=hot)
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, tri.collect()))
     # the planted hot subject (89% of rows) must be detected and spread
     hot_parts = (

@@ -56,7 +56,7 @@ def test_link_joins_are_broadcast(spark):
         [("spark", "eng:spark", "engine")],
         "alias string, canonical_id string, entity_type string",
     )
-    p = plan_of(link_mentions(mentions, alias, fuzzy=False))
+    p = plan_of(link_mentions(mentions, alias, fuzzy=False)[0])
     assert "SortMergeJoin" not in p
     assert "BroadcastHashJoin" in p
 
@@ -111,13 +111,13 @@ def test_scan_layout_walk_stops_past_fan_out_max(tmp_path, monkeypatch):
 def test_salted_write_no_join(spark):
     """Round 4: hot-subject salting is an isin literal — no broadcast
     join, exactly the one repartition Exchange."""
-    from split_ner_spark.ops.triples import salted_by_subject
+    from split_ner_spark.ops.triples import hot_subjects, salted_by_subject
 
     tri = spark.createDataFrame(
         [("s", "p", "o")] * 5, "subj string, pred string, obj string"
     )
-    # detection picks "s" (every row), so the isin literal is in the plan
-    p = plan_of(salted_by_subject(tri, 4, detect_on=tri, detect_col="subj"))
+    # "s" holds every row, so it is hot and the isin literal is in the plan
+    p = plan_of(salted_by_subject(tri, 4, hot_subjects=hot_subjects({"s": 5})))
     assert p.count("Exchange") == 1
     assert "Join" not in p
 
@@ -136,10 +136,10 @@ def test_alias_dim_is_local_relation(spark):
         assert "LocalRelation" in p and "LogicalRDD" not in p, (q.__name__, p)
 
 
-def test_hot_subject_detection_one_action(spark):
-    """salted_by_subject's hot-subject detection issues exactly the jobs
-    of ONE aggregate action (the observed per-key count with its top rows
-    collected) — no sample pass, no separate total, no re-count."""
+def test_salted_by_subject_runs_no_job(spark):
+    """salted_by_subject runs no Spark job: the hot set comes in as a
+    driver list (the pipeline sums it from the link dimension), so there
+    is no detection pass, sample, total or re-count."""
     from pyspark.sql import functions as F
 
     from split_ner_spark.ops.triples import salted_by_subject
@@ -150,25 +150,13 @@ def test_hot_subject_detection_one_action(spark):
         F.lit("p").alias("pred"),
         F.col("id").cast("string").alias("obj"),
     )
-
-    def jobs_of(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    detect = jobs_of(
-        "detect",
-        lambda: salted_by_subject(tri, 4, detect_on=tri, detect_col="subj"),
-    )
-    one = jobs_of(
-        "one_action",
-        lambda: tri.groupBy("subj").count().orderBy(F.desc("count"))
-        .limit(101).collect(),
-    )
-    assert detect == one >= 1, (detect, one)
+    sc.setJobGroup("salt_no_job", "salt_no_job")
+    try:
+        salted_by_subject(tri, 4, hot_subjects=["s0", "s1"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup("salt_no_job") == []
 
 
 def test_lsh_similarity_join_shuffle_free(spark):

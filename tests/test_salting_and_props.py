@@ -2,6 +2,7 @@
 
 - the salted triple write must spread a Zipf-hot subject across
   partitions (max partition ≪ the hot subject's row count);
+  the hot set comes from exact per-subject counts (``hot_subjects``);
 - Spark's array-fold BIO/BIOES assemblers must equal the pure-python
   reference twins on randomized label sequences (hypothesis drives the
   python side; Spark is checked batch-wise on the same inputs).
@@ -14,8 +15,24 @@ import random
 from pyspark.sql import functions as F
 
 from split_ner_spark.ops.assemble import spans_bio_col, spans_bioes_col
-from split_ner_spark.ops.triples import salted_by_subject
+from split_ner_spark.ops.triples import hot_subjects, salted_by_subject
 from split_ner_spark.reference_impl import get_spans_bio, get_spans_bioes
+
+
+def _exact_hot(tri):
+    """hot_subjects over exact per-subject counts, as the pipeline passes
+    them (there from the link dimension, here from the triples)."""
+    return hot_subjects(dict(tri.groupBy("subj").count().collect()))
+
+
+def test_hot_subjects_rule():
+    """Keys past HOT_FRACTION of the total, most rows first; the None key
+    (mentions of a null surface, which the fact join drops) counts toward
+    neither the keys nor the total."""
+    counts = {"hot": 5, "warm": 3, **{f"cold:{i}": 1 for i in range(200)}}
+    assert hot_subjects(counts) == ["hot", "warm"]
+    assert hot_subjects({**counts, None: 10**6}) == ["hot", "warm"]
+    assert hot_subjects({}) == []
 
 
 def test_salting_spreads_hot_subject(spark):
@@ -24,7 +41,7 @@ def test_salting_spreads_hot_subject(spark):
     tri = spark.createDataFrame(rows, "subj string, pred string, obj string")
     n_part = 16
     salted = salted_by_subject(
-        tri, n_partitions=n_part, n_salts=16, detect_on=tri, detect_col="subj"
+        tri, n_partitions=n_part, n_salts=16, hot_subjects=_exact_hot(tri)
     )
     sizes = (
         salted.withColumn("pid", F.spark_partition_id())
@@ -40,18 +57,16 @@ def test_salting_spreads_hot_subject(spark):
 
 
 def test_salting_small_input_exact_fallback(spark):
-    """ADVICE r4: on inputs too small for the 5% sample to see a hot key
-    (expected hits < 1), detection must fall back to an exact count so the
-    salting a micro-batch needs still engages."""
-    # 300 rows total — a 5% sample holds ~15 rows; without the fallback the
-    # hot key (33% of data, >> HOT_FRACTION=0.01) could be missed entirely
-    # on an unlucky seed, and an empty sample disables salting outright.
+    """ADVICE r4: a micro-batch's hot key must still be salted. Exact
+    counts find it at any input size, where a sample of a small input
+    could miss it."""
+    # 300 rows total; the hot key holds 33% of them (>> HOT_FRACTION=0.01)
     rows = [("hot:tiny", "mentioned_in", f"url{i}") for i in range(100)]
     rows += [(f"cold:{i}", "mentioned_in", f"url{i}") for i in range(200)]
     tri = spark.createDataFrame(rows, "subj string, pred string, obj string")
-    salted = salted_by_subject(
-        tri, n_partitions=8, n_salts=8, detect_on=tri, detect_col="subj"
-    )
+    hot = _exact_hot(tri)
+    assert hot == ["hot:tiny"]
+    salted = salted_by_subject(tri, n_partitions=8, n_salts=8, hot_subjects=hot)
     sizes = (
         salted.withColumn("pid", F.spark_partition_id())
         .groupBy("pid")
